@@ -50,8 +50,12 @@ from .sizing import (
 
 #: Repo-root catalog file. Committed like any other measured
 #: artifact: the bench's datagen tables are deterministic, so their
-#: statistics are reproducible facts, not host state.
-DEFAULT_PATH = Path(__file__).resolve().parents[2] / "STATS_CACHE.json"
+#: statistics are reproducible facts, not host state. A deployment
+#: points it elsewhere with ``SPARK_GRAFT_STATS_PATH``.
+DEFAULT_PATH = Path(
+    os.environ.get("SPARK_GRAFT_STATS_PATH")
+    or Path(__file__).resolve().parents[2] / "STATS_CACHE.json"
+)
 
 
 def _load(path: Path) -> dict:

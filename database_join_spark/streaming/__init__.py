@@ -105,8 +105,8 @@ def rocksdb_state_store_confs(tuned: bool = True) -> dict[str, str]:
 #: fixture generations (TESTDATA.md): TIMESTAMP(NANOS) — surfaced as
 #: INT64 nanos under nanosAsLong, rebuilt into a µs timestamp — and
 #: TIMESTAMP(MICROS), read as a timestamp directly. Streaming reads
-#: need an explicit schema, so probe the parquet footer once (batch
-#: reader, driver-side metadata only) and declare the matching one.
+#: need an explicit schema, so read ts's type from the batch catalog's
+#: memoized schema (catalog.schema) and declare the matching one.
 _EVENTS_SCHEMA_NANOS = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, "
     "event_type STRING, value DOUBLE, props STRING"
@@ -127,6 +127,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
     from pyspark.sql.utils import AnalysisException
 
+    from database_join_spark.catalog import schema
+
     configure_session(spark)  # nanosAsLong et al. (RUNTIME_CONFS)
     # The MICROS schema declares ts as TIMESTAMP (LTZ) over a file
     # whose annotation is NTZ, which reinterprets raw micros as
@@ -145,8 +147,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     try:
-        ts_type = spark.read.parquet(path).schema["ts"].dataType
-        nanos = isinstance(ts_type, LongType)
+        nanos = isinstance(schema(spark, path)["ts"].dataType, LongType)
     except AnalysisException:
         # Probe file not landed yet — the documented production
         # pattern tails a directory as files land, so construction

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import shutil
 import sys
 from pathlib import Path
 
@@ -17,6 +18,24 @@ SF_DIR_MID = "/root/testdata/sf0.01"  # what the driver's gate uses
 
 from database_join_spark.catalog import TABLES  # noqa: E402
 from database_join_spark.session import get_spark  # noqa: E402
+
+
+@pytest.fixture(scope="session", autouse=True)
+def stats_catalog_copy(tmp_path_factory):
+    """Point the statistics catalog at a copy of the committed
+    STATS_CACHE.json, so a test run leaves the tracked file unchanged.
+    The env var carries the copy into subprocesses (the bench smoke
+    test runs bench.py in one)."""
+    from database_join_spark.plans import stats
+
+    copy = tmp_path_factory.mktemp("stats") / "STATS_CACHE.json"
+    if stats.DEFAULT_PATH.exists():
+        shutil.copyfile(stats.DEFAULT_PATH, copy)
+    mp = pytest.MonkeyPatch()
+    mp.setattr(stats, "DEFAULT_PATH", copy)
+    mp.setenv("SPARK_GRAFT_STATS_PATH", str(copy))
+    yield copy
+    mp.undo()
 
 
 @pytest.fixture(scope="session")
