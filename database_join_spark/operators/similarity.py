@@ -686,8 +686,9 @@ def _driver_fit_rows(
     construction, so one cached catalog value (``parquet_list_dim``)
     stands for the whole column and the per-run ``head(1)``
     dim-discovery job is skipped: the row cap is computed from the
-    hint and emptiness falls out of the collect itself. A trusted
-    statistic like n_hint: both come from the same table catalog.
+    hint and emptiness falls out of the collect itself. Unlike
+    n_hint it is checked: the collected rows' real dim re-derives
+    the cap, and rows over it return :data:`_PROBE_OVER_BUDGET`.
 
     Returns the collected rows (possibly empty), or
     :data:`_PROBE_OVER_BUDGET` / :data:`_PROBE_SKIPPED`.
@@ -707,6 +708,12 @@ def _driver_fit_rows(
     rows = base.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         return _PROBE_OVER_BUDGET
+    if rows and len(rows[0].qv) != dim:
+        # A wrong dim_hint sized the cap: re-check the rows against
+        # the cap of the real dim, so a too-small hint cannot hand
+        # the driver fit more cells than the budget.
+        if len(rows) > DRIVER_FIT_MAX_CELLS // max(1, len(rows[0].qv)):
+            return _PROBE_OVER_BUDGET
     return rows
 
 
@@ -1580,6 +1587,17 @@ def kmeans_assign_topm(
     return df.select("id", "qv", F.explode(F.expr(blocks)).alias("block"))
 
 
+def _fallback_centroids(df: DataFrame, **kw) -> list[list[int]]:
+    """:func:`_fit_centroids` for ``semdedup_pairs``' sampled-fit
+    fallbacks: only the centroids are kept, so the persisted fit base
+    is released as soon as they are extracted, not at the next query's
+    drain. On the degenerate-sample branch that frees a whole-corpus
+    cache, and the blocking assign re-reads the source instead."""
+    fit_base, cents, _hist = _fit_centroids(df, **kw)
+    fit_base.unpersist()
+    return cents
+
+
 def semdedup_pairs(
     emb: DataFrame,
     k: int,
@@ -1686,7 +1704,7 @@ def semdedup_pairs(
             # Degenerate sample (the ADVICE r10 guard): full-corpus
             # fit, with the corpus rowcount hint forwarded so a big
             # corpus skips the probe collect (ADVICE r13).
-            _base, cents, _hist = _fit_centroids(
+            cents = _fallback_centroids(
                 emb,
                 id_col=id_col,
                 vec_col=vec_col,
@@ -1700,7 +1718,7 @@ def semdedup_pairs(
             # when k·dim fits the budget, so max_rows ≥ k): the
             # guard provably passes — distributed fit on the sample,
             # skipping the re-probe it would otherwise repeat.
-            _base, cents, _hist = _fit_centroids(
+            cents = _fallback_centroids(
                 fit_input,
                 id_col=id_col,
                 vec_col=vec_col,
@@ -1715,7 +1733,7 @@ def semdedup_pairs(
             fit_guarded = fit_input
             if fit_input.limit(k).count() < k:
                 fit_guarded = emb
-            _base, cents, _hist = _fit_centroids(
+            cents = _fallback_centroids(
                 fit_guarded,
                 id_col=id_col,
                 vec_col=vec_col,
@@ -1723,6 +1741,8 @@ def semdedup_pairs(
                 iterations=iterations,
             )
     else:
+        # The fit base stays cached here: it is the same plan as
+        # ``base`` below, so the blocking assign reads it.
         _base, cents, _hist = _fit_centroids(
             emb,
             id_col=id_col,

@@ -87,6 +87,13 @@ WIDE_EXCHANGE_CONFS: dict[str, str] = {
 }
 
 
+#: Directory holding the package, put on the workers' PYTHONPATH so
+#: the worker daemon (``pyworker``) imports from any working directory.
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
+
 #: DataFrames persisted by the PREVIOUS query, released when the next
 #: query begins (see :func:`track_persist`).
 _PERSIST_POOL: list = []
@@ -163,6 +170,15 @@ def get_spark(
     put on its measurements. ``profile="default"`` is accepted as an
     alias for ``None`` so ``get_spark(profile=sizing.profile)`` works
     for both values :func:`plans.sizing.decide` emits.
+
+    Python workers run under ``database_join_spark.pyworker``: on
+    Python < 3.13 the stock daemon's workers spend 77-83 ms of CPU
+    per task re-reading zip directories in ``invalidate_caches``;
+    that module re-reads an archive only when it changed. The daemon
+    module and the workers' PYTHONPATH are build-time SparkConf, so
+    :func:`configure_session` cannot set them: a session the driver
+    owns (``scripts/driver_sim.py``'s) keeps the stock daemon, which
+    is correct, only slower per Python task.
     """
     if profile == "default":
         # plans/sizing.py emits "default" | "wide-exchange"; callers
@@ -227,6 +243,8 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "database_join_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

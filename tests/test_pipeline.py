@@ -823,6 +823,81 @@ def test_driver_fit_probe_contract(spark):
     )
 
 
+def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
+    """A too-small ``dim_hint`` inflates the probe's row cap; the
+    collected rows' real dim must re-derive it, so the 500 dim-64
+    fixture rows that fit a dim-8 cap of 800 but not the real cap
+    of 100 report over-budget, and the fit and the pairs come out as
+    with the right hint."""
+    from database_join_spark.catalog import table
+    from database_join_spark.operators import similarity as S
+
+    emb = table(spark, SF_DIR, "embeddings")
+    base = emb.select(
+        F.col("vec_id").alias("id"),
+        F.expr(S._quant("embedding")).alias("qv"),
+    )
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 100)
+    assert S._driver_fit_rows(base, 2, dim_hint=8) == S._PROBE_OVER_BUDGET
+    assert S._driver_fit_rows(base, 2, dim_hint=64) == S._PROBE_OVER_BUDGET
+
+    def fit_and_pairs(dim_hint):
+        _, cents, _ = S._fit_centroids(
+            emb, k=10, iterations=2, dim_hint=dim_hint
+        )
+        pairs = sorted(
+            (r["id_a"], r["id_b"], r["cos_sim"])
+            for r in S.semdedup_pairs(
+                emb, k=10, iterations=3, m=4, threshold=0.4,
+                dim_hint=dim_hint,
+            ).collect()
+        )
+        return cents, pairs
+
+    right = fit_and_pairs(64)
+    assert right[1], "fixtures must plant semantic dups"
+    assert fit_and_pairs(8) == right
+
+
+def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
+    """semdedup_pairs keeps only the centroids of a sampled-fit
+    fallback: the persisted fit base ``_fit_centroids`` returns must
+    be uncached once they are extracted, with the pairs unchanged."""
+    from pyspark import StorageLevel
+
+    from database_join_spark.catalog import table
+    from database_join_spark.operators import similarity as S
+
+    emb = table(spark, SF_DIR, "embeddings")
+
+    def pairs(**kw):
+        return sorted(
+            (r["id_a"], r["id_b"], r["cos_sim"])
+            for r in S.semdedup_pairs(
+                emb, k=10, iterations=3, m=4, threshold=0.4, **kw
+            ).collect()
+        )
+
+    fit_bases = []
+    stock_fit = S._fit_centroids
+
+    def spy_fit(*args, **kwargs):
+        out = stock_fit(*args, **kwargs)
+        fit_bases.append(out[0])
+        return out
+
+    monkeypatch.setattr(S, "_fit_centroids", spy_fit)
+    # a 1-in-1e9 sample holds fewer than k rows: the degenerate-sample
+    # fallback fits the full corpus
+    degenerate = pairs(fit_sample_mod=10**9)
+    assert len(fit_bases) == 1
+    assert not fit_bases[0].is_cached
+    assert fit_bases[0].storageLevel == StorageLevel.NONE
+    monkeypatch.setattr(S, "_fit_centroids", stock_fit)
+    assert degenerate == pairs()
+    assert degenerate, "fixtures must plant semantic dups"
+
+
 # --------------------------------------------------------------------------
 # dedup_semantic — k-means-bucketed semantic dedup must recover the
 # exact all-pairs ground truth (its declared validation contract)
