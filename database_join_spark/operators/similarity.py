@@ -21,7 +21,9 @@ JVM expressions (zip_with/aggregate) everywhere EXCEPT the SemDeDup
 within-block scorer, which is an Arrow-batched tiled numpy GEMM
 (``_block_scorer`` — the one place the matrix-product shape beats
 any per-row SQL spelling by orders of magnitude; exactness argument
-in its docstring).
+in its docstring), and the numpy assigns that feed it (the
+large-k Arrow assigns, and the one-task assign + score of a corpus
+that fits one scorer chunk).
 """
 
 from __future__ import annotations
@@ -933,9 +935,8 @@ def _np_sqdists(q, cents, n2c):
     (b×dim int64) and centroids ``cents`` (k×dim int64):
     d²[i,j] = |q_i|² + |c_j|² − 2·q_i·c_j. The cross-dot runs as a
     float64 GEMM when every partial sum provably stays an integer
-    ≤ 2^53 (dim·amax² bound — the same guard as
-    :func:`_block_scorer`), else as an int64 matmul (no BLAS, still
-    exact to 2^63); the combine is int64 either way."""
+    ≤ 2^53 (dim·amax² bound), else as an int64 matmul (no BLAS,
+    still exact to 2^63); the combine is int64 either way."""
     import numpy as np
 
     dim = q.shape[1]
@@ -1647,10 +1648,13 @@ def semdedup_pairs(
     ``n_hint`` (round 13) is the caller's known corpus row count
     (e.g. the cached parquet-footer rowcount). When it proves the
     whole corpus fits one scorer chunk (≤
-    :data:`SEMDEDUP_TARGET_CHUNK` rows) the chunk census, its
-    broadcast join, and the blocks persist are skipped outright —
-    identical output, two fewer jobs. It is a hint, never a limit:
-    an absent or large hint runs the full chunking machinery.
+    :data:`SEMDEDUP_TARGET_CHUNK` rows) the assign and the scorer run
+    in ONE ``mapInArrow`` task over the coalesced corpus
+    (:func:`_semdedup_one_task`): no chunk census, blocks persist or
+    block exchange, and the action is one Spark job of one task. A
+    wrong small hint costs only parallelism (one bigger task), never
+    correctness. An absent or large hint runs the chunking
+    machinery, and there the hint also sizes the blocks persist.
 
     ``dim_hint`` (round 14) is the caller's known embedding
     dimensionality (the cached ``parquet_list_dim`` statistic):
@@ -1755,6 +1759,15 @@ def semdedup_pairs(
     base = emb.select(
         F.col(id_col).alias("id"), F.expr(_quant(vec_col)).alias("qv")
     )
+    if n_hint is not None and n_hint <= SEMDEDUP_TARGET_CHUNK:
+        # One chunk: no block can exceed TARGET_CHUNK rows when the
+        # whole corpus has at most that many, so the census, the
+        # blocks persist and the (block, ca, cb) exchange each have
+        # one possible outcome. One task assigns and scores it all.
+        scored = _semdedup_one_task(
+            base, cents, m, ratio, threshold, coarse_score
+        )
+        return _pairs_above(scored, threshold)
     # Persisted: the blocks frame is consumed twice (the size census
     # below + the chunk-pair join), and without the cache boundary
     # the ENTIRE assign — k·dim distance work per vector — runs
@@ -1767,125 +1780,154 @@ def semdedup_pairs(
     # disk spill, not recompute.
     from database_join_spark.session import track_persist
 
-    if n_hint is not None and n_hint <= SEMDEDUP_TARGET_CHUNK:
-        # Chunking is PROVABLY a no-op: no block can exceed
-        # TARGET_CHUNK rows when the whole corpus has at most that
-        # many, so every c would be 1 and every (ch, ca, cb) would be
-        # (0, 0, 0). Skipping the census also removes the persist —
-        # the blocks frame is consumed exactly once here (round 13:
-        # the census job + cache materialization were ~0.3 s of the
-        # 4.44 s sf0.1 bench row for a decision with one possible
-        # outcome). Output identical by construction.
-        chunked = kmeans_assign_topm(
-            base, cents, m=m, ratio=ratio
-        ).select(
+    assign_frame = kmeans_assign_topm(base, cents, m=m, ratio=ratio)
+    # Memory-adaptive persist (round 14, guide §5: cache only when
+    # recompute costs more than the memory pressure): the blocks
+    # frame is n·m rows of (block, id, qv) — at 8M vectors / dim 64 /
+    # m=4 that is ~17 GB, and persisting it on the default 8 g heap
+    # OOM'd the 8M end-to-end probe outright
+    # (SEMDEDUP_8M_TUNE_PROBE.json) while the recompute alternative
+    # is ONE bounded extra n·√k assign pass (45 s at 8M). When the
+    # caller's row-count hint proves the frame over the budget, skip
+    # the cache and let the census + chunk-pair join each derive the
+    # (deterministic) assign; hint absent or small: persist. The dim
+    # is the fitted centroids' own, so no dim hint is needed.
+    dim = len(cents[0]) if cents else 0
+    if (
+        n_hint is not None
+        and n_hint * m * (dim * 8 + 48) > SEMDEDUP_BLOCKS_PERSIST_MAX_BYTES
+    ):
+        blocks = assign_frame
+    else:
+        blocks = track_persist(assign_frame)
+    # Chunk-pair parallelism: one task per BLOCK serializes on a
+    # skewed cluster (measured: a straggler block pinned the 300k
+    # probe arm to one core for 15+ min while 31 sat idle). Blocks
+    # larger than TARGET_CHUNK rows are hash-split into c chunks and
+    # every chunk PAIR (ca ≤ cb) becomes its own task: the Σ|block|²
+    # pair work is unchanged but spreads over c(c+1)/2 tasks. Price:
+    # each row of an oversized block replicates c times into the
+    # block's chunk-pair groups (c = ⌈s/TARGET⌉ — the shuffle grows
+    # only for blocks that need the parallelism; c=1 blocks pay
+    # nothing). Right-sized blocks (k ∝ n) keep c=1 everywhere and
+    # this is a no-op. The scorer exchange keeps AQE's byte-based
+    # width: here the blocks carry real bytes (≥ MBs per block) and
+    # coalescing yields well-sized multi-block tasks, while pinning
+    # one task per block was measured as a tiny-task regression at
+    # the 8M rung (k=8080 single-block tasks: e2e 1353 s vs the
+    # AQE-width 542 s, SEMDEDUP_8M_TUNE_PROBE.json).
+    sizes = blocks.groupBy("block").agg(F.count(F.lit(1)).alias("s"))
+    chunks = sizes.select(
+        "block",
+        F.greatest(F.lit(1), F.ceil(F.col("s") / SEMDEDUP_TARGET_CHUNK))
+        .cast("int")
+        .alias("c"),
+    )
+    chunked = (
+        blocks.join(F.broadcast(chunks), "block")
+        .withColumn("ch", F.pmod(F.xxhash64("id"), F.col("c")).cast("int"))
+        .withColumn("other", F.explode(F.expr("sequence(0, c - 1)")))
+        .select(
             "block",
             "id",
             "qv",
-            F.lit(0).alias("ch"),
-            F.lit(0).alias("ca"),
-            F.lit(0).alias("cb"),
+            "ch",
+            F.least("ch", "other").alias("ca"),
+            F.greatest("ch", "other").alias("cb"),
         )
-    else:
-        assign_frame = kmeans_assign_topm(base, cents, m=m, ratio=ratio)
-        # Memory-adaptive persist (round 14, guide §5: cache only
-        # when recompute costs more than the memory pressure): the
-        # blocks frame is n·m rows of (block, id, qv) — at 8M
-        # vectors / dim 64 / m=4 that is ~17 GB, and persisting it
-        # on the default 8 g heap OOM'd the 8M end-to-end probe
-        # outright (SEMDEDUP_8M_TUNE_PROBE.json) while the recompute
-        # alternative is ONE bounded extra n·√k assign pass (45 s at
-        # 8M). When the caller's catalog hints prove the frame over
-        # the budget, skip the cache and let the census + chunk-pair
-        # join each derive the (deterministic) assign; hints absent
-        # or small: persist exactly as before.
-        est_bytes = (
-            n_hint * m * (dim_hint * 8 + 48)
-            if n_hint is not None and dim_hint is not None
-            else None
-        )
-        if (
-            est_bytes is not None
-            and est_bytes > SEMDEDUP_BLOCKS_PERSIST_MAX_BYTES
-        ):
-            blocks = assign_frame
-        else:
-            blocks = track_persist(assign_frame)
-        # Chunk-pair parallelism: one task per BLOCK serializes on a
-        # skewed cluster (measured: a straggler block pinned the 300k
-        # probe arm to one core for 15+ min while 31 sat idle). Blocks
-        # larger than TARGET_CHUNK rows are hash-split into c chunks
-        # and every chunk PAIR (ca ≤ cb) becomes its own task: the
-        # Σ|block|² pair work is unchanged but spreads over c(c+1)/2
-        # tasks. Price: each row of an oversized block replicates c
-        # times into the block's chunk-pair groups (c = ⌈s/TARGET⌉ —
-        # the shuffle grows only for blocks that need the parallelism;
-        # c=1 blocks pay nothing). Right-sized blocks (k ∝ n) keep c=1
-        # everywhere and this is a no-op. Persisted: the blocks frame
-        # is consumed twice (census + chunk-pair join) — without the
-        # cache boundary the ENTIRE assign runs twice; routed through
-        # track_persist so the next gated query's configure_session
-        # drains it (ADVICE r12).
-        sizes = blocks.groupBy("block").agg(F.count(F.lit(1)).alias("s"))
-        chunks = sizes.select(
-            "block",
-            F.greatest(
-                F.lit(1), F.ceil(F.col("s") / SEMDEDUP_TARGET_CHUNK)
-            )
-            .cast("int")
-            .alias("c"),
-        )
-        chunked = (
-            blocks.join(F.broadcast(chunks), "block")
-            .withColumn(
-                "ch", F.pmod(F.xxhash64("id"), F.col("c")).cast("int")
-            )
-            .withColumn("other", F.explode(F.expr("sequence(0, c - 1)")))
-            .select(
-                "block",
-                "id",
-                "qv",
-                "ch",
-                F.least("ch", "other").alias("ca"),
-                F.greatest("ch", "other").alias("cb"),
-            )
-        )
-    # Scorer-exchange width (round 14, guide §2.2/§2.5): the
-    # per-group GEMM's cost is Σ|block|² — quadratic in group size
-    # and invisible to AQE's byte-based coalescing. In the TINY
-    # regime (the n_hint ≤ TARGET_CHUNK fast path: whole corpus a
-    # few thousand rows) that coalescing collapses the exchange to
-    # ONE post-shuffle task and runs every block's GEMM serially in
-    # one Python worker — an explicit repartition(k) pins one task
-    # per block (measured at sf0.1: 0.88 → 0.70 s on the scorer
-    # subplan, identical output). In the census regime the blocks
-    # carry real bytes (≥ MBs per block) and AQE's coalescing
-    # already yields well-sized multi-block tasks; pinning k tasks
-    # there is a TINY-TASK regression, measured at the 8M rung
-    # (k=8080 single-block tasks: e2e 1353 s vs the r13 AQE-width
-    # 542 s, SEMDEDUP_8M_TUNE_PROBE.json) — so the pin applies only
-    # where the collapse was the measured problem. Either way the
-    # groupBy reuses the one data shuffle.
-    grouped = chunked
-    if n_hint is not None and n_hint <= SEMDEDUP_TARGET_CHUNK:
-        grouped = chunked.repartition(max(1, k), "block", "ca", "cb")
-    scored = grouped.groupBy("block", "ca", "cb").applyInPandas(
-        _block_scorer(threshold, coarse=coarse_score),
-        schema=(
-            "id_a long, id_b long, dot long, n2_a long, n2_b long"
-        ),
     )
+    scored = chunked.groupBy("block", "ca", "cb").applyInPandas(
+        _block_scorer(threshold, coarse=coarse_score), schema=_PAIR_SCHEMA
+    )
+    return _pairs_above(scored, threshold)
+
+
+def _pairs_above(scored: DataFrame, threshold: float) -> DataFrame:
+    """The Spark-side decision over scorer rows: exact fixed-point
+    :func:`cosine`, the threshold, and one row per pair across the
+    blocks both vectors probed."""
     return (
         scored.select(
             "id_a",
             "id_b",
-            cosine(
-                F.col("dot"), F.col("n2_a"), F.col("n2_b")
-            ).alias("cos_sim"),
+            cosine(F.col("dot"), F.col("n2_a"), F.col("n2_b")).alias(
+                "cos_sim"
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
+
+
+def _semdedup_one_task(
+    base: DataFrame,
+    cents: list[list[int]],
+    m: int,
+    ratio: float | None,
+    threshold: float,
+    coarse: bool,
+) -> DataFrame:
+    """:func:`semdedup_pairs` for a corpus that fits one scorer chunk,
+    as one ``mapInArrow`` task over ``base.coalesce(1)``: the exact
+    top-m assign of :func:`kmeans_assign_topm_np` (same
+    :func:`_np_sqdists` + :func:`_topm_exact` and ``ratio`` keep-mask,
+    so the same blocks as every assign spelling at k <
+    ``TWOLEVEL_ASSIGN_MIN_K``, and the exact ones the two-level
+    assign approximates above it), then every block's upper triangle
+    through the :func:`_block_scorer` core. The centroids ride in the
+    closure. Emits the scorer's (id_a, id_b, dot, n2_a, n2_b) rows;
+    the coalesced single partition also satisfies the ``distinct``
+    that follows, so the whole action is one job of one task."""
+    import numpy as np
+
+    frac = None if ratio is None else _snap_ratio(ratio)
+    C = np.asarray(cents, dtype=np.int64)
+    n2C = np.einsum("ij,ij->i", C, C)
+    tile_rows = max(1, _ASSIGN_TILE_CELLS // max(1, len(cents)))
+    pairs = _pair_scorer(threshold, coarse)
+
+    def run(batches):
+        import pyarrow as pa
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        ids = tbl.column("id").to_numpy()
+        qv = tbl.column("qv").combine_chunks()
+        lens = np.diff(np.asarray(qv.offsets))
+        if qv.null_count or (lens != lens[0]).any():
+            raise ValueError(
+                "semdedup_pairs needs non-null vectors of one dimension"
+            )
+        q = qv.flatten().to_numpy().reshape(len(ids), int(lens[0]))
+        # assign: (row, block) of every kept probe, row-major
+        rows, blocks = [], []
+        for lo in range(0, len(q), tile_rows):
+            order, sorted_d = _topm_exact(
+                _np_sqdists(q[lo : lo + tile_rows], C, n2C), m
+            )
+            if frac is None:
+                keep = np.ones(order.shape, dtype=bool)
+            else:
+                p, qd = frac
+                keep = sorted_d * qd <= sorted_d[:, :1] * p
+            rows.append(np.nonzero(keep)[0] + lo)
+            blocks.append(order[keep])
+        row = np.concatenate(rows)
+        block = np.concatenate(blocks)
+        by_block = np.argsort(block, kind="stable")
+        row, block = row[by_block], block[by_block]
+        cuts = np.flatnonzero(np.diff(block)) + 1
+        for members in np.split(row, cuts):
+            qm = q[members]
+            cols = pairs(ids[members], qm, ids[members], qm, True)
+            if cols is not None:
+                yield pa.RecordBatch.from_arrays(
+                    cols, names=list(_PAIR_COLS)
+                )
+
+    return base.coalesce(1).mapInArrow(run, schema=_PAIR_SCHEMA)
 
 
 #: Tile budget for the per-block GEMM: ≤ 2^24 f64 cells (128 MiB)
@@ -1914,6 +1956,11 @@ SEMDEDUP_BLOCKS_PERSIST_MAX_BYTES = int(
 )
 
 
+#: Output columns of the block scorers, and their Spark schema.
+_PAIR_COLS = ("id_a", "id_b", "dot", "n2_a", "n2_b")
+_PAIR_SCHEMA = ", ".join(f"{c} long" for c in _PAIR_COLS)
+
+
 def _block_scorer(threshold: float, coarse: bool = False):
     """Per-chunk-pair pairwise scorer for :func:`semdedup_pairs` — a
     tiled numpy GEMM over quantized vectors, run behind
@@ -1934,17 +1981,18 @@ def _block_scorer(threshold: float, coarse: bool = False):
     shuffle moves each vector m times (the blocking), not the pair
     mass — strictly less wire than the join spelling.
 
-    Exactness is NOT sacrificed: quantized coordinates are integers,
-    and a float64 GEMM over integer-valued inputs is bit-exact while
-    every intermediate stays ≤ 2^53 — dim·max(|q|)² < 2^53, true for
-    unit-scale embeddings (64·(1e7)² ≈ 6.4e15 < 9.0e15) and checked
-    per block; a block that exceeds it falls back to int64 GEMM
-    (exact to 2^63). The emitted (dot, n2_a, n2_b) are therefore the
-    SAME int64s the JVM fold produced, and the cosine + threshold
-    decision still happens Spark-side in :func:`cosine` — so the
-    rounding/tiebreak contract pinned by tests is unchanged. The
-    numpy pre-filter keeps 1e-9 slack under the threshold so final
-    filtering never loses a boundary pair to the rounded comparison.
+    Exactness is NOT sacrificed. The exact scorer runs two passes:
+    pass 1 is a float64 GEMM over the row-normalized vectors, kept
+    where its cosine clears ``threshold − 1e-9``; pass 2 recomputes
+    the survivors' dots in int64 (``einsum``, exact to 2^63 at any
+    coordinate scale) and only then applies the upper-triangle mask.
+    Pass 1's rounding error is ~dim·eps (≈1e-14 at dim 64) whatever
+    the coordinates' magnitude, far below the 1e-9 slack, so its
+    survivors are a superset of every pair the Spark-side
+    :func:`cosine` + threshold keeps. The emitted (dot, n2_a, n2_b)
+    are the SAME int64s the JVM fold produces, and the cosine +
+    threshold decision still happens Spark-side — so the
+    rounding/tiebreak contract pinned by tests is unchanged.
 
     ``coarse=True`` (round 11, VERDICT r10 #5) runs a two-tier
     score: tier 1 re-quantizes each vector to int8 (per-vector max
@@ -1968,39 +2016,7 @@ def _block_scorer(threshold: float, coarse: bool = False):
     """
     import numpy as np
 
-    slack = threshold - 1e-9
-
-    def _q8(q, n2):
-        """Per-vector int8 image (float32-typed for SGEMM) + the
-        exact angular error bound to the original. All dots here
-        are ≤ 64·1e7·127 ≈ 8e10 — exact in float64."""
-        amax = np.abs(q).max(axis=1, keepdims=True).astype(np.float64)
-        amax[amax == 0] = 1.0
-        q8 = np.rint(q * (127.0 / amax)).astype(np.float32)
-        n2_8 = np.einsum("ij,ij->i", q8, q8, dtype=np.float64)
-        n2_8[n2_8 == 0] = 1.0
-        dot_q8 = np.einsum(
-            "ij,ij->i", q.astype(np.float64), q8.astype(np.float64)
-        )
-        cos_v = np.clip(
-            dot_q8 / np.sqrt(n2.astype(np.float64) * n2_8), -1.0, 1.0
-        )
-        # +1e-7: swallows the float64 rounding of the θ computation
-        theta = np.arccos(cos_v) + 1e-7
-        return q8, 1.0 / np.sqrt(n2_8), theta
-
-    def _empty():
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "id_a": np.empty(0, np.int64),
-                "id_b": np.empty(0, np.int64),
-                "dot": np.empty(0, np.int64),
-                "n2_a": np.empty(0, np.int64),
-                "n2_b": np.empty(0, np.int64),
-            }
-        )
+    pairs = _pair_scorer(threshold, coarse)
 
     def _prep(pdf, mask):
         ids = pdf["id"].to_numpy()[mask]
@@ -2018,34 +2034,73 @@ def _block_scorer(threshold: float, coarse: bool = False):
 
         ca, cb = int(key[1]), int(key[2])
         ch = pdf["ch"].to_numpy()
+        ids_a, qa = _prep(pdf, ch == ca)
         if ca == cb:
-            ids_a, qa = _prep(pdf, ch == ca)
-            ids_b, qb = ids_a, qa
-            triangle = True
+            cols = pairs(ids_a, qa, ids_a, qa, True)
         else:
-            ids_a, qa = _prep(pdf, ch == ca)
             ids_b, qb = _prep(pdf, ch == cb)
-            triangle = False
+            cols = pairs(ids_a, qa, ids_b, qb, False)
+        if cols is None:
+            cols = [np.empty(0, np.int64)] * len(_PAIR_COLS)
+        return pd.DataFrame(dict(zip(_PAIR_COLS, cols)))
+
+    return score
+
+
+def _pair_scorer(threshold: float, coarse: bool = False):
+    """Array core of :func:`_block_scorer`: ``pairs(ids_a, qa, ids_b,
+    qb, triangle)`` scores the quantized rows ``qa`` (int64, with ids
+    ``ids_a``) against ``qb`` — the upper triangle of ``qa`` against
+    itself when ``triangle`` — and returns the ``(id_a, id_b, dot,
+    n2_a, n2_b)`` int64 columns of every pair that clears the
+    pre-filter, with id_a < id_b, or None when none does. The
+    chunk-pair scorer and the one-task path of :func:`semdedup_pairs`
+    both call it."""
+    import numpy as np
+
+    slack = threshold - 1e-9
+
+    def _q8(q, n2):
+        """Per-vector int8 image (float32-typed for SGEMM) + the
+        exact angular error bound to the original. All dots here
+        are ≤ 64·1e7·127 ≈ 8e10 — exact in float64."""
+        amax = np.abs(q).max(axis=1, keepdims=True).astype(np.float64)
+        amax[amax == 0] = 1.0
+        q8 = np.rint(q * (127.0 / amax)).astype(np.float32)
+        n2_8 = np.einsum("ij,ij->i", q8, q8, dtype=np.float64)
+        n2_8[n2_8 == 0] = 1.0
+        dot_q8 = np.einsum(
+            "ij,ij->i", q.astype(np.float64), q8.astype(np.float64)
+        )
+        den = np.sqrt(n2.astype(np.float64) * n2_8)
+        # a zero vector is its own int8 image (θ = 0); a NaN θ would
+        # make th_b.max() NaN and drop every pair of the chunk
+        cos_v = np.clip(
+            np.divide(dot_q8, den, out=np.ones_like(den), where=den > 0),
+            -1.0,
+            1.0,
+        )
+        # +1e-7: swallows the float64 rounding of the θ computation
+        theta = np.arccos(cos_v) + 1e-7
+        return q8, 1.0 / np.sqrt(n2_8), theta
+
+    def _unit(q, n2):
+        """Row-normalized float64 image; a zero vector stays zero, so
+        its cosines are 0 and it only survives a threshold ≤ 1e-9
+        (the Spark-side cosine of a zero norm is null and drops it)."""
+        n = np.sqrt(n2.astype(np.float64))
+        inv = np.divide(1.0, n, out=np.zeros_like(n), where=n > 0)
+        return q * inv[:, None]
+
+    def pairs(ids_a, qa, ids_b, qb, triangle):
         if len(ids_a) == 0 or len(ids_b) == 0 or (
             triangle and len(ids_a) < 2
         ):
-            return _empty()
-        dim = qa.shape[1]
-        amax = int(
-            max(np.abs(qa).max(), np.abs(qb).max())
-        )
-        # float64 GEMM is exact while every partial sum stays an
-        # integer ≤ 2^53; otherwise int64 GEMM (exact to 2^63, no
-        # BLAS but still vectorized)
-        f64_exact = dim * amax * amax < (1 << 53)
-        ma = qa.astype(np.float64) if f64_exact else qa
-        mb = qb.astype(np.float64) if f64_exact else qb
+            return None
         n2a = np.einsum("ij,ij->i", qa, qa)  # int64, exact
         n2b = (
             n2a if triangle else np.einsum("ij,ij->i", qb, qb)
         )
-        inv_a = 1.0 / np.sqrt(n2a.astype(np.float64))
-        inv_b = 1.0 / np.sqrt(n2b.astype(np.float64))
         nb = len(ids_b)
         if coarse:
             qa8, inv8a, th_a = _q8(qa, n2a)
@@ -2056,11 +2111,13 @@ def _block_scorer(threshold: float, coarse: bool = False):
             th_b_max = float(th_b.max()) if len(th_b) else 0.0
             inv8a32 = inv8a.astype(np.float32)
             inv8b32 = inv8b.astype(np.float32)
+        else:
+            ua = _unit(qa, n2a)
+            ub = ua if triangle else _unit(qb, n2b)
         # float32 tiles are half the f64 cell size → 2× tile rows
         rows = max(
             1, (2 * _GEMM_TILE_CELLS if coarse else _GEMM_TILE_CELLS) // nb
         )
-        cols = np.arange(nb)
         out = []
         for i0 in range(0, len(ids_a), rows):
             i1 = min(i0 + rows, len(ids_a))
@@ -2076,27 +2133,20 @@ def _block_scorer(threshold: float, coarse: bool = False):
                 ).astype(np.float32) - np.float32(1e-5)
                 hit = cos8 >= adj[:, None]
             else:
-                g = ma[i0:i1] @ mb.T  # (i1-i0) × nb
-                cos = (
-                    g.astype(np.float64)
-                    * inv_a[i0:i1, None]
-                    * inv_b[None, :]
-                )
-                hit = cos >= slack
+                # pass 1: float64 cosines, off by ~dim·eps ≪ the slack
+                hit = ua[i0:i1] @ ub.T >= slack  # (i1-i0) × nb
+            ii, jj = np.nonzero(hit)
+            ii += i0
             if triangle:
                 # upper triangle: column index > absolute row index
-                hit &= cols[None, :] > np.arange(i0, i1)[:, None]
-            ii, jj = np.nonzero(hit)
+                up = jj > ii
+                ii, jj = ii[up], jj[up]
             if len(ii) == 0:
                 continue
-            if coarse:
-                # tier 2: exact int64 dots for the survivors only —
-                # identical numbers to the exact path's GEMM cells
-                dots = np.einsum("ij,ij->i", qa[ii + i0], qb[jj])
-            else:
-                dots = np.asarray(g[ii, jj], dtype=np.int64)
-            a_id, b_id = ids_a[ii + i0], ids_b[jj]
-            a_n2, b_n2 = n2a[ii + i0], n2b[jj]
+            # pass 2: exact int64 dots for the survivors only
+            dots = np.einsum("ij,ij->i", qa[ii], qb[jj])
+            a_id, b_id = ids_a[ii], ids_b[jj]
+            a_n2, b_n2 = n2a[ii], n2b[jj]
             # normalize so id_a < id_b (cross-chunk pairs arrive in
             # arbitrary id order; triangle pairs are ordered already)
             swap = a_id > b_id
@@ -2110,16 +2160,7 @@ def _block_scorer(threshold: float, coarse: bool = False):
                 )
             )
         if not out:
-            return _empty()
-        cat = [np.concatenate(x) for x in zip(*out)]
-        return pd.DataFrame(
-            {
-                "id_a": cat[0],
-                "id_b": cat[1],
-                "dot": cat[2],
-                "n2_a": cat[3],
-                "n2_b": cat[4],
-            }
-        )
+            return None
+        return [np.concatenate(x) for x in zip(*out)]
 
-    return score
+    return pairs

@@ -3389,11 +3389,14 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order-fold spelling measured 1.4M candidate pairs/s vs
     the GEMM's 33–60M/s at the same exact-int64 semantics, see
     SEMDEDUP_PROBE.json + BASELINE.md §SemDeDup), Σ|block|²/2 pair
-    cost. At fixture scale (n=500, k=10) blocking costs MORE than
-    all-pairs — the honest small-n regime; the asymptotic win
-    needs k ∝ n (SemDeDup used 110k clusters for LAION), giving
-    ~m²·n²/2k candidate pairs — measured at 100k–1M vectors in
-    SEMDEDUP_PROBE.json. The fit cost stays one scan per
+    cost. A corpus that fits one scorer chunk (cached rowcount ≤
+    SEMDEDUP_TARGET_CHUNK: every fixture, and sf0.1) skips the
+    shuffle: one mapInArrow task assigns and scores it, so the
+    action is one job of one task. At fixture scale (n=500, k=10)
+    blocking costs MORE than all-pairs — the honest small-n regime;
+    the asymptotic win needs k ∝ n (SemDeDup used 110k clusters for
+    LAION), giving ~m²·n²/2k candidate pairs — measured at 100k–1M
+    vectors in SEMDEDUP_PROBE.json. The fit cost stays one scan per
     iteration regardless of k, and the same clustering amortizes
     across pipeline stages (topic_kmeans reuses it for domain
     balancing).

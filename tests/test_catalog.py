@@ -113,3 +113,11 @@ def test_second_build_starts_no_job(spark, name):
     jobs = jobs_started(spark, lambda: fn(spark, SF_DIR))
     # an allow-listed query that stopped starting jobs leaves the list
     assert (jobs > 0) == (name in BUILD_JOB_ALLOWED), jobs
+
+
+def test_dedup_semantic_action_is_one_job(spark):
+    """The fixture corpus fits one scorer chunk, so dedup_semantic's
+    action assigns and scores it in one task: one Spark job, with no
+    assign stage or block exchange before it."""
+    df = load_all()["dedup_semantic"].fn(spark, SF_DIR)
+    assert jobs_started(spark, df.collect) == 1

@@ -942,25 +942,22 @@ def test_semdedup_chunk_split_equals_unchunked(spark, monkeypatch):
 
     emb = table(spark, SF_DIR, "embeddings")
 
-    def pairs():
+    def pairs(**kw):
         return sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
             for r in S.semdedup_pairs(
-                emb, k=10, iterations=3, m=4, threshold=0.4
+                emb, k=10, iterations=3, m=4, threshold=0.4, **kw
             ).collect()
         )
 
     base = pairs()
-    # round 13: the n_hint no-chunk fast path (census + persist
-    # skipped when the corpus provably fits one chunk) must emit the
-    # identical pair set and cosines as the census-driven machinery
-    fast = sorted(
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in S.semdedup_pairs(
-            emb, k=10, iterations=3, m=4, threshold=0.4, n_hint=500
-        ).collect()
-    )
-    assert fast == base
+    # the n_hint one-task path (numpy assign + score in one mapInArrow
+    # task when the corpus provably fits one chunk) must emit the
+    # identical pair set and cosines as the census-driven machinery,
+    # under adaptive probing and the coarse scorer too
+    assert pairs(n_hint=500) == base
+    for kw in ({"ratio": 1.5}, {"coarse_score": True}):
+        assert pairs(n_hint=500, **kw) == pairs(**kw), kw
     monkeypatch.setattr(S, "SEMDEDUP_TARGET_CHUNK", 40)
     forced = pairs()
     assert forced == base
@@ -976,14 +973,24 @@ def test_semdedup_persist_skip_equals_persisted(spark, monkeypatch):
     that cache (SEMDEDUP_8M_TUNE_PROBE.json). Forcing the budget to
     1 byte (every corpus over it) must reproduce the persisted
     census path's pair set and cosines exactly; n_hint > the corpus
-    keeps the census machinery (not the no-chunk fast path) engaged
-    so the skip branch itself is what runs."""
+    keeps the census machinery (not the one-task path) engaged so
+    the skip branch itself is what runs; it needs no ``dim_hint``."""
+    from database_join_spark import session
     from database_join_spark.catalog import table
     from database_join_spark.operators import similarity as S
 
     emb = table(spark, SF_DIR, "embeddings")
+    persisted = []
+    stock_persist = session.track_persist
+
+    def spy_persist(df, *args, **kwargs):
+        persisted.append("block" in df.columns)
+        return stock_persist(df, *args, **kwargs)
+
+    monkeypatch.setattr(session, "track_persist", spy_persist)
 
     def pairs(**kw):
+        persisted.clear()
         return sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
             for r in S.semdedup_pairs(
@@ -991,13 +998,122 @@ def test_semdedup_persist_skip_equals_persisted(spark, monkeypatch):
             ).collect()
         )
 
-    # census path, persisted (hints absent -> budget not consulted)
+    # census path, persisted (hint absent -> budget not consulted)
     base = pairs(n_hint=None)
-    # census path, persist SKIPPED (hints present, budget forced to 1)
+    assert any(persisted), "the census path caches its blocks frame"
+    # census path, persist SKIPPED (hint present, budget forced to 1)
     monkeypatch.setattr(S, "SEMDEDUP_BLOCKS_PERSIST_MAX_BYTES", 1)
     skipped = pairs(n_hint=10**6, dim_hint=64)
     assert skipped == base
+    # the fitted centroids give the dim: the row-count hint alone
+    # proves the frame over budget
+    assert pairs(n_hint=10**6) == base
+    assert not any(persisted)
     assert base, "fixtures must plant semantic dups"
+
+
+def test_block_scorer_exact_against_int64_all_pairs():
+    """Spark-free pin of the block scorer against brute-force int64
+    all-pairs: on triangle keys (ca == cb) and cross keys (ca < cb),
+    with pairs planted within 1e-10 of the threshold, a zero vector,
+    a one-row chunk and coordinates past float64's exact integer range
+    (dim·max|q|² ≥ 2^53), every emitted pair is a pair of the key,
+    once, id-ordered, with exact int64 dot and norms, and every pair
+    whose cosine rounds (9 decimals) to at least the threshold is
+    emitted."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    from database_join_spark.operators.similarity import _block_scorer
+
+    thr, dim, scale = 0.9, 64, 10**8
+    assert dim * scale * scale >= 1 << 53
+    rng = np.random.default_rng(11)
+
+    def planted(cos):
+        """(a, b) with cosine within ~1e-16 of ``cos``: a = x·e₀ and
+        b = x·e₀ + y with |y|² = x²(1/cos² − 1) as a sum of squares,
+        then one random signed permutation of the coordinates."""
+        x = scale
+        r = round(x * x * (1 / (cos * cos) - 1))
+        ys = []
+        while r:
+            ys.append(math.isqrt(r))
+            r -= ys[-1] ** 2
+        a = np.zeros(dim, np.int64)
+        b = np.zeros(dim, np.int64)
+        a[0] = b[0] = x
+        b[1 : 1 + len(ys)] = ys
+        perm = rng.permutation(dim)
+        sign = rng.choice([-1, 1], dim)
+        return a[perm] * sign, b[perm] * sign
+
+    deltas = (-6e-10, -4e-10, -1e-10, 0.0, 1e-10, 6e-10)
+    vecs = [v for d in deltas for v in planted(thr + d)]
+    background = rng.integers(-scale, scale, (120, dim))
+    near = background[:20] + rng.integers(-scale // 8, scale // 8, (20, dim))
+    vecs += list(background) + list(near) + [np.zeros(dim, np.int64)]
+    q = np.stack(vecs).astype(np.int64)
+    n = len(q)
+    ids = rng.choice(1 << 40, n, replace=False).astype(np.int64)
+    zero_id = ids[-1]
+    # chunk 2 holds exactly one row; the rest split over chunks 0 and 1
+    ch = rng.integers(0, 2, n).astype(np.int32)
+    ch[rng.integers(0, n)] = 2
+    pdf = pd.DataFrame({"id": ids, "qv": list(q), "ch": ch})
+
+    dots = q @ q.T  # brute force, exact: |dot| ≤ dim·scale² < 2^63
+    n2 = np.diag(dots)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dots / (
+            np.sqrt(n2.astype(np.float64))[:, None]
+            * np.sqrt(n2.astype(np.float64))[None, :]
+        )
+    keep = np.round(cos, 9) >= thr
+    planted_idx = [
+        (2 * i, 2 * i + 1) for i, d in enumerate(deltas) if d > -5e-10
+    ]
+    for i, j in planted_idx:
+        assert keep[i, j], (i, j, cos[i, j])
+    pos = {int(v): i for i, v in enumerate(ids)}
+
+    for coarse in (False, True):
+        score = _block_scorer(thr, coarse=coarse)
+        for ca, cb in ((0, 0), (1, 1), (2, 2), (0, 1), (0, 2), (1, 2)):
+            a = np.flatnonzero(ch == ca)
+            b = np.flatnonzero(ch == cb)
+            key_pairs = {
+                (min(ids[i], ids[j]), max(ids[i], ids[j]))
+                for i in a
+                for j in b
+                if i != j
+            }
+            truth = {
+                (min(ids[i], ids[j]), max(ids[i], ids[j]))
+                for i in a
+                for j in b
+                if i != j and keep[i, j]
+            }
+            out = score((7, ca, cb), pdf)
+            assert list(out.columns) == [
+                "id_a", "id_b", "dot", "n2_a", "n2_b"
+            ]
+            got = list(zip(out["id_a"], out["id_b"]))
+            assert len(got) == len(set(got)), (coarse, ca, cb)
+            assert set(got) <= key_pairs, (coarse, ca, cb)
+            assert truth <= set(got), (coarse, ca, cb)
+            assert zero_id not in out["id_a"].values
+            assert zero_id not in out["id_b"].values
+            for r in out.itertuples():
+                i, j = pos[r.id_a], pos[r.id_b]
+                assert r.id_a < r.id_b
+                assert (r.dot, r.n2_a, r.n2_b) == (
+                    dots[i, j], n2[i], n2[j]
+                )
+            if (ca, cb) == (2, 2):
+                assert out.empty
 
 
 def test_no_inferred_expensive_filters(spark):
@@ -1071,12 +1187,11 @@ def test_semdedup_sampled_fit_contract(spark):
 
 
 def test_semdedup_gemm_int64_fallback_exact(spark):
-    """The block scorer's float64 GEMM is bit-exact only while
-    dim·max(|q|)² < 2^53; coordinates past unit scale must take the
-    int64 GEMM path and still emit the exact quantized pairs. 8×
-    scaled embeddings (|q| ≈ 8e7 → 64·6.4e15 ≫ 2^53) force the
-    fallback, and the emitted pair set must equal the exact numpy
-    int64 ground truth at the same threshold."""
+    """A float64 GEMM over raw quantized coordinates stops being
+    bit-exact once dim·max(|q|)² ≥ 2^53; the block scorer must still
+    emit the exact quantized pairs past that range. 8× scaled
+    embeddings (|q| ≈ 8e7 → 64·6.4e15 ≫ 2^53) must give the exact
+    numpy int64 ground truth at the same threshold."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -1124,7 +1239,7 @@ def test_semdedup_coarse_score_identical(spark):
     re-verify. Checked at two thresholds (a permissive one near the
     background-cosine mass exercises the near-threshold band where a
     sloppy bound would lose pairs) and on 8x-scaled coordinates
-    (the int64-GEMM fallback shape composed with coarse)."""
+    (past float64's exact integer range)."""
     from pyspark.sql import functions as F
 
     from database_join_spark.catalog import table
