@@ -21,8 +21,8 @@ JVM expressions (zip_with/aggregate) everywhere EXCEPT the SemDeDup
 within-block scorer, which is an Arrow-batched tiled numpy GEMM
 (``_block_scorer`` — the one place the matrix-product shape beats
 any per-row SQL spelling by orders of magnitude; exactness argument
-in its docstring), and the numpy assigns that feed it (the
-large-k Arrow assigns, and the one-task assign + score of a corpus
+in its docstring), and the k-means assign kernel (``_assign_rows``,
+behind one Arrow assign and the one-task assign + score of a corpus
 that fits one scorer chunk).
 """
 
@@ -525,68 +525,94 @@ def lsh_topk(
 # --------------------------------------------------------------------------
 # k-means clustering (exact fixed-point) — topic/style bucketing
 # --------------------------------------------------------------------------
-def _literal_dists_sql(centroids: list[list[int]]) -> str:
-    """The k-centroid exact-int64 squared-distance array as ONE SQL
-    expression string. The previous spelling built the same tree via
-    k·dim ``F.lit`` Column calls — each a py4j round trip, measured
-    ~0.3 s of pure driver time per assign construction at k=10/dim=64
-    (SEMDEDUP_SF01_WALL_PROBE.json build_plan phase); one ``F.expr``
-    parse of a few-KB string is milliseconds for the identical
-    analyzed expression (int64 literals, same fold, same result)."""
-    per_cent = ",".join(
-        "aggregate(zip_with(qv, array("
-        + ",".join(f"{int(c)}L" for c in cent)
-        + "), (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-        "(acc, v) -> acc + v)"
-        for cent in centroids
-    )
-    return f"array({per_cent})"
-
-
-def kmeans_assign(
-    base: DataFrame,
-    centroids: list[list[int]],
-    impl: str = "auto",
-) -> DataFrame:
+def kmeans_assign(base: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Assign every row of ``base`` (columns ``id``, ``qv`` — a
     quantized int64 vector from :func:`_quant`) to its nearest
-    centroid by EXACT integer squared distance.
-
-    Centroids ride into the plan as literal int64 arrays (k·dim
-    constants — plan-size-bounded, no join, no shuffle); the
-    distance fold ``Σ(x−y)²`` stays inside int64 for unit-scale
-    q7-quantized coordinates (diff ≤ 2·10⁷, square ≤ 4·10¹⁴, ×64
-    dims ≈ 2.6·10¹⁶ < 2⁶³). ``array_position(…, array_min(…))``
-    takes the FIRST minimum, so distance ties break to the lowest
-    cluster index deterministically. ``impl`` as in
-    :func:`kmeans_assign_topm`: past :data:`LITERAL_ASSIGN_MAX_K`
-    centroids ``"auto"`` switches to the bit-identical
-    broadcast/GEMM spelling (:func:`kmeans_assign_np`), and past
-    :data:`~database_join_spark.plans.sizing.TWOLEVEL_ASSIGN_MIN_K`
-    to the two-level quantizer (:func:`kmeans_assign_np_2l`, n·√k
-    work — identical wherever the coarse probe covers the true
-    nearest cell), which is what keeps the FIT loop sub-n·k under
-    :func:`~database_join_spark.plans.sizing.k_for`'s k ∝ n.
-    """
-    if impl not in ("auto", "literal", "np", "np2l"):
-        raise ValueError(
-            f"impl must be auto|literal|np|np2l, got {impl!r}"
-        )
-    if impl == "np2l" or (
-        impl == "auto" and len(centroids) >= _twolevel_min_k()
-    ):
-        return kmeans_assign_np_2l(base, centroids)
-    if impl == "np" or (
-        impl == "auto" and len(centroids) > LITERAL_ASSIGN_MAX_K
-    ):
-        return kmeans_assign_np(base, centroids)
-    dists = F.expr(_literal_dists_sql(centroids))
-    return base.withColumn("dists", dists).select(
+    centroid by EXACT integer squared distance: columns ``id``,
+    ``qv``, ``cluster`` (1-based) and ``sqdist``. This is
+    :func:`kmeans_assign_topm` at m=1; distance ties break to the
+    lowest cluster index."""
+    return _assign_frame(base, centroids, 1, None).select(
         "id",
         "qv",
-        F.expr("CAST(array_position(dists, array_min(dists)) AS INT)")
-        .alias("cluster"),
-        F.array_min("dists").alias("sqdist"),
+        F.col("block").alias("cluster"),
+        F.col("d2").alias("sqdist"),
+    )
+
+
+def kmeans_assign_topm(
+    base: DataFrame,
+    centroids: list[list[int]],
+    m: int,
+    ratio: float | None = None,
+) -> DataFrame:
+    """Multi-probe cluster assignment: one exploded ``(id, qv,
+    block)`` row per (vector, block) for the vector's ``m`` NEAREST
+    centroids — the blocking form of :func:`kmeans_assign`, map-only
+    (no shuffle). Candidates are ordered by (distance, index), so
+    distance ties break to the lowest cluster index — the order
+    ``numpy.argsort(kind='stable')`` yields, which is what lets the
+    multi-probe candidate SET be pinned bit-for-bit against an
+    independent fit.
+
+    ``ratio`` (VERDICT r08 #6) makes the probe width ADAPTIVE:
+    centroid j is probed only when ``d²_j ≤ ratio · d²_nearest``
+    (m becomes the cap). Fixed-m pays the full m-wide candidate
+    mass for EVERY vector to recover the few boundary-straddling
+    twins; under the ratio rule, vectors deep inside a cell (the
+    bulk) probe one cell, and only genuine boundary cases fan out —
+    the SEMDEDUP_PROBE measured m=4 paying 17.5× the m=1 candidate
+    mass at 1M to recover 173 boundary misses. The comparison is
+    exact int64 arithmetic: ratio is snapped to a small fraction
+    p/q (q ≤ 8) and evaluated as ``d²_j·q ≤ d²_min·p`` — bounded by
+    2.6e16·8 ≈ 2.1e17 < 2⁶³, so no float rounding at the decision
+    boundary. The nearest centroid always qualifies (d²·q ≤ d²·p
+    for p ≥ q), so every vector keeps at least its home block.
+
+    The assign kernel is :func:`_assign_rows`; from
+    :data:`~database_join_spark.plans.sizing.TWOLEVEL_ASSIGN_MIN_K`
+    centroids on it routes each vector through a √k coarse index
+    (:func:`centroid_router`, n·√k work instead of n·k).
+    """
+    return _assign_frame(base, centroids, m, ratio).drop("d2")
+
+
+def _assign_frame(
+    base: DataFrame,
+    centroids: list[list[int]],
+    m: int,
+    ratio: float | None,
+) -> DataFrame:
+    """The one Spark assign: a ``mapInArrow`` over ``base``'s ``(id,
+    qv)`` that runs :func:`_assign_rows` on every Arrow batch and
+    emits ``(id, qv, block, d2)``, one row per kept probe. The
+    centroid index (:func:`_assign_index`) ships once per executor
+    as a Spark broadcast, not in the task closure: at SemDeDup's
+    LAION-scale 110k clusters the matrix is ~56 MB."""
+    frac = None if ratio is None else _snap_ratio(ratio)
+    bc = base.sparkSession.sparkContext.broadcast(_assign_index(centroids))
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            qv = batch.column("qv")
+            row, block, d2 = _assign_rows(_decode_qv(qv), bc.value, m, frac)
+            take = pa.array(row)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("id").cast(pa.int64()).take(take),
+                    qv.take(take),
+                    pa.array(block, type=pa.int32()),
+                    pa.array(d2),
+                ],
+                names=["id", "qv", "block", "d2"],
+            )
+
+    return base.select("id", "qv").mapInArrow(
+        assign, schema="id long, qv array<long>, block int, d2 long"
     )
 
 
@@ -597,15 +623,14 @@ def kmeans_assign(
 #: and the round-13 sf0.1 wall probe (SEMDEDUP_SF01_WALL_PROBE.json)
 #: measured the distributed loop at 3.7 s of the dedup_semantic
 #: bench row's 4.44 s: per-iteration plan analysis + codegen of the
-#: k·dim literal centroid tree plus two tiny jobs, pure fixed
-#: overhead at sample scale. 2²² int64 cells = 32 MiB collected —
+#: then literal-SQL k·dim centroid tree plus two tiny jobs, pure
+#: fixed overhead at sample scale. 2²² int64 cells = 32 MiB collected —
 #: e.g. 65k rows at dim 64 (k ≈ 650 under the 100-rows/centroid
 #: rule) — far inside driver memory and maxResultSize; above the
 #: budget the distributed loop is unchanged. The numpy loop is
 #: BIT-IDENTICAL (pinned, tests/test_pipeline.py): same k-lowest-id
-#: seed, exact int64 distances via :func:`_np_sqdists`, argmin's
-#: first-minimum tie break == ``array_position(array_min)``, and the
-#: same floor-div centroid update the distributed path computes.
+#: seed, the same assign kernel (:func:`_assign_rows` at m=1), and
+#: the same floor-div centroid update the distributed path computes.
 DRIVER_FIT_MAX_CELLS = 1 << 22
 
 
@@ -627,16 +652,9 @@ def _kmeans_lloyd_np(
     cents = q[:k].copy()  # k lowest-id seeds, id order
     history: list[int] = []
     for _ in range(iterations):
-        n2c = np.einsum("ij,ij->i", cents, cents)
-        # tile rows so the (chunk × k) distance matrix stays inside
-        # the same cell budget as the Arrow assign (_ASSIGN_TILE_CELLS)
-        step = max(1, _ASSIGN_TILE_CELLS // max(1, k))
-        assign = np.empty(q.shape[0], dtype=np.int64)
-        d2min = np.empty(q.shape[0], dtype=np.int64)
-        for lo in range(0, q.shape[0], step):
-            d2 = _np_sqdists(q[lo : lo + step], cents, n2c)
-            assign[lo : lo + step] = np.argmin(d2, axis=1)
-            d2min[lo : lo + step] = np.min(d2, axis=1)
+        # m=1 keeps exactly one (row, block) per row, in row order
+        _row, block, d2min = _assign_rows(q, _assign_index(cents), 1, None)
+        assign = block - 1
         if track_inertia:
             history.append(sum(int(v) for v in d2min))
         new = cents.copy()
@@ -726,7 +744,6 @@ def kmeans_fit(
     k: int = 10,
     iterations: int = 5,
     track_inertia: bool = False,
-    assign_impl: str = "auto",
     fit_mode: str = "auto",
     n_hint: int | None = None,
     dim_hint: int | None = None,
@@ -739,9 +756,8 @@ def kmeans_fit(
     point near a Voronoi boundary can flip clusters run-to-run).
 
     Per iteration: one map-stage assignment (:func:`kmeans_assign`,
-    no shuffle — literal centroids at fixture k, broadcast/GEMM past
-    :data:`LITERAL_ASSIGN_MAX_K`, and the two-level n_s·√k quantizer
-    past ``TWOLEVEL_ASSIGN_MIN_K``, which under k_for's k ∝ n is
+    no shuffle; from ``TWOLEVEL_ASSIGN_MIN_K`` on its kernel routes
+    through the n_s·√k two-level index, which under k_for's k ∝ n is
     what keeps the fit's per-iteration work sub-n·k), then one
     vocabulary-bounded aggregation — posexplode to (cluster, pos,
     val) and sum/count — whose exchange carries at most k·dim
@@ -751,28 +767,23 @@ def kmeans_fit(
     centroid coordinate = floor mean ``Σq DIV n`` (exact int64 to
     ~10¹¹ members per cluster at q7 scale); a cluster that loses
     all members keeps its previous centroid. Init = the k
-    lowest-id vectors (deterministic, no RNG).
+    lowest-id vectors (deterministic, no RNG). A sample that fits
+    :data:`DRIVER_FIT_MAX_CELLS` runs the same loop on the driver
+    with the same assign kernel, so both modes land on the same
+    centroids at every k.
 
     Returns (final assignment DataFrame, final centroids, inertia
     history — empty unless ``track_inertia``, which adds one extra
     job per iteration and exists for the monotone-objective
-    property test; the production path leaves it off).
+    property test; the production path leaves it off). An empty
+    input returns an empty assignment and no centroids, except
+    under ``fit_mode='driver'``, which raises.
 
     ``n_hint`` (round 14, ADVICE r13): the caller's known row count
     for ``df`` — when it proves the input over the driver-fit row
     cap the probe's bounded collect is skipped outright, so large
     fits pay one head() job instead of head + a ≤32 MiB collect.
     A hint, never a limit: absent or small hints change nothing.
-
-    Driver/distributed bit-parity is scoped to the EXACT-assign
-    regime (k below ``TWOLEVEL_ASSIGN_MIN_K`` under
-    ``assign_impl='auto'``, or an explicit exact impl): past it the
-    distributed loop's per-iteration assign runs the two-level
-    quantizer, whose bounded deviation (measured 2e-6 at 1M/k=1000,
-    SEMDEDUP_TWOLEVEL_PROBE.json) can move a boundary vector between
-    clusters, while the driver loop's numpy argmin is always exact —
-    so fit_mode='driver' vs 'distributed' can diverge there (ADVICE
-    r13). Fixture-scale k never enters that regime.
     """
     base, cents, history = _fit_centroids(
         df,
@@ -781,12 +792,11 @@ def kmeans_fit(
         k=k,
         iterations=iterations,
         track_inertia=track_inertia,
-        assign_impl=assign_impl,
         fit_mode=fit_mode,
         n_hint=n_hint,
         dim_hint=dim_hint,
     )
-    return kmeans_assign(base, cents, impl=assign_impl), cents, history
+    return kmeans_assign(base, cents), cents, history
 
 
 def _fit_centroids(
@@ -796,7 +806,6 @@ def _fit_centroids(
     k: int = 10,
     iterations: int = 5,
     track_inertia: bool = False,
-    assign_impl: str = "auto",
     fit_mode: str = "auto",
     n_hint: int | None = None,
     dim_hint: int | None = None,
@@ -804,10 +813,8 @@ def _fit_centroids(
     """:func:`kmeans_fit` minus the returned assignment — the
     centroids-only core, split out (round 14) for callers that
     discard the assignment (``semdedup_pairs`` blocks on its OWN
-    full-corpus frame): constructing the k·dim literal assign tree
-    costs real Catalyst analysis time that a centroids-only caller
-    never executes. Returns (quantized persisted base, centroids,
-    inertia history)."""
+    full-corpus frame). Returns (quantized persisted base,
+    centroids, inertia history) on every path."""
     from database_join_spark.session import track_persist
 
     # Persisted: the loop reads ``base`` iterations+1 times (one
@@ -858,13 +865,15 @@ def _fit_centroids(
             )
     seed_rows = base.orderBy("id").limit(k).collect()
     cents = [list(r.qv) for r in sorted(seed_rows, key=lambda r: r.id)]
+    if not cents:  # an empty input: no seed, nothing to fit
+        return base, [], []
     # Fewer rows than k → fewer seeds than the update loop iterates;
     # clamp so the fit degenerates gracefully (every row its own
     # cluster) instead of raising IndexError on cents[j].
     k = min(k, len(cents))
     history: list[int] = []
     for _ in range(iterations):
-        assigned = kmeans_assign(base, cents, impl=assign_impl)
+        assigned = kmeans_assign(base, cents)
         if track_inertia:
             history.append(
                 int(
@@ -896,7 +905,7 @@ def _fit_centroids(
             else cents[j]
             for j in range(k)
         ]
-    return kmeans_assign(base, cents, impl=assign_impl), cents, history
+    return base, cents, history
 
 
 def _snap_ratio(ratio: float) -> tuple[int, int]:
@@ -917,17 +926,6 @@ def _snap_ratio(ratio: float) -> tuple[int, int]:
             f"one that is (e.g. 1.25, 1.5, 9/8 = 1.125)"
         )
     return p, q
-
-
-#: Largest k the literal-centroid assign spelling stays the default
-#: for. The literal path rides k·dim int64 constants into the plan —
-#: plan-visible, zero Python, ideal at fixture k — but the expression
-#: tree grows O(k·dim) and the per-row fold costs the same O(k·dim)
-#: WITHOUT BLAS, so past ~64 centroids the Arrow/GEMM assign
-#: (:func:`kmeans_assign_topm_np`) is both the faster and the only
-#: plan-size-viable spelling (k_for(1M) ≈ hundreds; SemDeDup's
-#: LAION recipe is 110k clusters — a literal plan cannot carry that).
-LITERAL_ASSIGN_MAX_K = 64
 
 
 def _np_sqdists(q, cents, n2c):
@@ -951,26 +949,13 @@ def _np_sqdists(q, cents, n2c):
     return n2q[:, None] + n2c[None, :] - 2 * dot
 
 
-#: Cell budget for one tiled distance matrix in the Arrow assign:
-#: ≤ 2^24 int64 cells (128 MiB) per (row-chunk × k) block — the same
-#: discipline as :data:`_GEMM_TILE_CELLS`; without it a 10k-row Arrow
-#: batch against k=10000 centroids materializes an 800 MB matrix PER
-#: WORKER and the assign drowns in allocation churn (measured on the
-#: round-12 k-ladder).
+#: Cell budget for one tiled distance matrix in :func:`_assign_rows`:
+#: ≤ 2^24 int64 cells (128 MiB) per (row-chunk × centroids) block —
+#: the same discipline as :data:`_GEMM_TILE_CELLS`; without it a
+#: 10k-row Arrow batch against k=10000 centroids materializes an
+#: 800 MB matrix PER WORKER and the assign drowns in allocation churn
+#: (measured on the round-12 k-ladder).
 _ASSIGN_TILE_CELLS = 1 << 24
-
-#: Cap on ROWS EMITTED per assign tile (round 14): the Arrow-batch
-#: sweep at the 8M rung (SEMDEDUP_8M_TUNE_PROBE.json) measured the
-#: mapInPandas assign at 60 s with the default 10k-row input batches,
-#: 45 s at 2.5k, and 176 s at 40k — identical emitted rows — i.e.
-#: per-yield frame size, not distance arithmetic, drives the wall
-#: through worker allocation churn (each yielded row carries a
-#: dim-length object array). Bounding the tile by emitted rows
-#: (tile_rows · m) reproduces the measured optimum without touching
-#: the session-global Arrow batch conf that every OTHER pandas op
-#: shares. 10k emitted rows ≈ the measured-best 2.5k input rows at
-#: m=4.
-_ASSIGN_EMIT_ROWS = 10_000
 
 
 def _topm_exact(d2, m):
@@ -981,9 +966,9 @@ def _topm_exact(d2, m):
     k=3162 on the round-12 ladder), a 4-element lexsort orders them,
     and the rare rows where the selection boundary TIES (argpartition
     makes no stability promise among equal values) fall back to the
-    stable sort so the emitted set is bit-identical to the literal
-    plan's ``array_sort`` in every case. Returns ``(order,
-    sorted_d)`` with shapes (rows, m).
+    stable sort so the emitted set is exactly the stable order's in
+    every case. Returns ``(order, sorted_d)`` with shapes
+    (rows, min(m, k)).
     """
     import numpy as np
 
@@ -1006,90 +991,6 @@ def _topm_exact(d2, m):
         order[i] = row
         sorted_d[i] = d2[i, row]
     return order, sorted_d
-
-
-def kmeans_assign_topm_np(
-    base: DataFrame,
-    centroids: list[list[int]],
-    m: int,
-    ratio: float | None = None,
-) -> DataFrame:
-    """Arrow/GEMM spelling of :func:`kmeans_assign_topm` — identical
-    output bit-for-bit (pinned by tests/test_pipeline.py), built for
-    the k the literal plan cannot carry (k_for(n) grows with the
-    corpus; the literal expression tree is O(k·dim) PER ROW of plan
-    and fold cost).
-
-    The k×dim centroid matrix ships once per executor as a Spark
-    broadcast (NOT in the task closure — at SemDeDup's LAION-scale
-    110k clusters the matrix is ~56 MB), and each Arrow batch scores
-    against it with one exact GEMM (:func:`_np_sqdists`). Top-m
-    selection is ``argsort(kind='stable')`` — ties break to the
-    lowest cluster index, the same (distance, index) struct order as
-    the literal ``array_sort`` spelling. The adaptive-``ratio``
-    filter is the identical int64 comparison (``d²·q ≤ d²_min·p``,
-    :func:`_snap_ratio`); because the m candidate distances come out
-    sorted ascending, the keep-mask is a per-row prefix and the
-    nearest centroid always survives.
-
-    Same map-only shape as the literal path: no shuffle, one
-    exploded (id, qv, block) row per surviving probe.
-    """
-    import numpy as np
-    from pyspark.sql import SparkSession
-
-    pq = None if ratio is None else _snap_ratio(ratio)
-    cents = np.asarray(centroids, dtype=np.int64)
-    n2c = np.einsum("ij,ij->i", cents, cents)
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast((cents, n2c))
-
-    k = len(centroids)
-    tile_rows = max(
-        1,
-        min(
-            _ASSIGN_TILE_CELLS // max(1, k),
-            _ASSIGN_EMIT_ROWS // max(1, m),
-        ),
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        C, n2C = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qv_obj = pdf["qv"].to_numpy()
-            ids_all = pdf["id"].to_numpy()
-            for lo in range(0, len(pdf), tile_rows):
-                sl = slice(lo, min(lo + tile_rows, len(pdf)))
-                q = np.stack(qv_obj[sl]).astype(np.int64, copy=False)
-                d2 = _np_sqdists(q, C, n2C)
-                order, sorted_d = _topm_exact(d2, m)
-                if pq is None:
-                    row_idx = np.repeat(
-                        np.arange(len(q)), order.shape[1]
-                    )
-                    blocks = order.ravel() + 1
-                else:
-                    p, qd = pq
-                    keep = sorted_d * qd <= sorted_d[:, :1] * p
-                    row_idx = np.repeat(
-                        np.arange(len(q)), keep.sum(axis=1)
-                    )
-                    blocks = order[keep] + 1
-                yield pd.DataFrame(
-                    {
-                        "id": ids_all[sl][row_idx],
-                        "qv": qv_obj[sl][row_idx],
-                        "block": blocks.astype(np.int32),
-                    }
-                )
-
-    return base.select("id", "qv").mapInPandas(
-        assign, schema="id long, qv array<long>, block int"
-    )
 
 
 #: Coarse-level probe cap / ratio for the two-level assign: a vector
@@ -1157,435 +1058,138 @@ def centroid_router(
     return coarse[live], remap[cell].astype(np.int32)
 
 
-def kmeans_assign_topm_2l(
-    base: DataFrame,
-    centroids: list[list[int]],
-    m: int,
-    ratio: float | None = None,
-    coarse_m: int = COARSE_PROBE_M,
-    coarse_ratio: float | None = COARSE_PROBE_RATIO,
-) -> DataFrame:
-    """Two-level (coarse → fine-within-cell) spelling of
-    :func:`kmeans_assign_topm_np` for the k_for(n) regime where even
-    the GEMM assign's n·k distance work is the leading super-linear
-    term (k ∝ n ⇒ n·k ∝ n²; VERDICT r12 #2). Per vector: one GEMM
-    against the kc ≈ √k coarse centers from :func:`centroid_router`,
-    a ratio-capped coarse probe picks ≤ ``coarse_m`` cells, and only
-    those cells' fine centroids are scored — n·(kc + coarse_m·k/kc)
-    ≈ n·√k work instead of n·k.
+def _assign_index(centroids):
+    """The centroid index :func:`_assign_rows` scans: ``(coarse,
+    n2_coarse, fine, n2_fine, block_of, starts)``. ``fine`` holds the
+    k centroids in cell-contiguous order, ``block_of`` their 1-based
+    block ids and ``starts`` the kc+1 cell bounds into ``fine``.
 
-    Output contract: the fine centroids and every distance are the
-    SAME exact int64 values as the flat path (the router never
-    touches them), per-row candidates merge in the identical stable
-    (d², index) order, and the same m-cap + ratio-prefix rule
-    applies — so wherever the coarse probe covers the true top-m
-    cells the emitted rows are bit-identical to
-    :func:`kmeans_assign_topm_np` (pinned exact at fixture scale by
-    tests/test_pipeline.py; at 1M/k=1000 the measured deviation is
-    8 rows of 4.04M = 2·10⁻⁶, SEMDEDUP_TWOLEVEL_PROBE.json — a
-    true 4th-nearest centroid in an unprobed cell, the documented
-    bounded regime). A vector always probes its
-    nearest coarse cell, and the router guarantees every cell is
-    non-empty, so every vector keeps at least one block.
-
-    Same map-only shape as the flat spellings: centroid matrices
-    ship once per executor as one Spark broadcast, no shuffle, one
-    exploded (id, qv, block) row per surviving probe.
-    """
+    Below :data:`~database_join_spark.plans.sizing.TWOLEVEL_ASSIGN_MIN_K`
+    centroids the index is ONE cell holding all k in id order and
+    ``coarse`` is None (no router fit; at small k the router is pure
+    overhead). From there on the cells are :func:`centroid_router`'s
+    ⌈√k⌉ groups, so a vector scores ≤ ``COARSE_PROBE_M`` cells instead
+    of all k centroids (n·√k work instead of n·k: under k_for's k ∝ n
+    the flat n·k GEMM is the last super-linear SemDeDup term)."""
     import numpy as np
-    from pyspark.sql import SparkSession
 
-    from database_join_spark.plans.sizing import coarse_k_for
-
-    pq = None if ratio is None else _snap_ratio(ratio)
-    cpq = None if coarse_ratio is None else _snap_ratio(coarse_ratio)
-    cents = np.asarray(centroids, dtype=np.int64)
-    k = len(cents)
-    coarse, cell_of = centroid_router(cents, coarse_k_for(k))
-    kc = len(coarse)
-    mc = max(1, min(coarse_m, kc))
-    # Permute fine centroids into cell-contiguous order so each
-    # probed cell is one matrix slice; global block ids (1-based,
-    # identical to the flat path's column index + 1) ride alongside.
-    perm = np.lexsort((np.arange(k), cell_of))
-    grouped = cents[perm]
-    ids_g = (perm + 1).astype(np.int64)
-    n2g = np.einsum("ij,ij->i", grouped, grouped)
-    cell_start = np.searchsorted(
-        cell_of[perm], np.arange(kc + 1)
-    ).astype(np.int64)
-    n2coarse = np.einsum("ij,ij->i", coarse, coarse)
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
-        (coarse, n2coarse, grouped, ids_g, n2g, cell_start)
+    from database_join_spark.plans.sizing import (
+        TWOLEVEL_ASSIGN_MIN_K,
+        coarse_k_for,
     )
-    # Tile budget: the candidate matrix is ~coarse_m·(k/kc) columns
-    # per row (plus the kc coarse columns) — same 2^24-cell
-    # discipline as the flat assign.
-    mean_cell = max(1, -(-k // kc))
-    tile_rows = max(
-        1,
-        min(
-            _ASSIGN_TILE_CELLS // max(kc, mc * mean_cell),
-            _ASSIGN_EMIT_ROWS // max(1, m),
-        ),
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        C, n2C, G, IDS, n2G, STARTS = bc.value
-        kc_l = len(C)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qv_obj = pdf["qv"].to_numpy()
-            ids_all = pdf["id"].to_numpy()
-            for lo in range(0, len(pdf), tile_rows):
-                sl = slice(lo, min(lo + tile_rows, len(pdf)))
-                q = np.stack(qv_obj[sl]).astype(np.int64, copy=False)
-                nt = len(q)
-                # -- coarse probe: stable top-mc + ratio prefix
-                d2c = _np_sqdists(q, C, n2C)
-                order_c, sorted_c = _topm_exact(d2c, mc)
-                if cpq is None:
-                    keep_c = np.ones(order_c.shape, dtype=bool)
-                else:
-                    p_c, q_c = cpq
-                    keep_c = (
-                        sorted_c * q_c <= sorted_c[:, :1] * p_c
-                    )
-                probe_rows = np.repeat(
-                    np.arange(nt), keep_c.sum(axis=1)
-                )
-                probe_cells = order_c[keep_c]
-                # -- fine scoring, one GEMM per probed cell
-                o = np.argsort(probe_cells, kind="stable")
-                pr = probe_rows[o]
-                pc_sorted = probe_cells[o]
-                bounds = np.searchsorted(
-                    pc_sorted, np.arange(kc_l + 1)
-                )
-                cr_parts, ci_parts, cd_parts = [], [], []
-                for c in np.unique(pc_sorted):
-                    rows_c = pr[bounds[c] : bounds[c + 1]]
-                    s, e = STARTS[c], STARTS[c + 1]
-                    d2f = _np_sqdists(q[rows_c], G[s:e], n2G[s:e])
-                    # Per-cell top-m BEFORE the global merge: the
-                    # per-row top-m over the candidate union equals
-                    # the top-m over each cell's own top-m (a global
-                    # winner is a winner in its cell), and within a
-                    # cell the fine ids ascend with the local column
-                    # index (the router's lexsort), so _topm_exact's
-                    # stable (value, local index) order IS the
-                    # (value, global id) order the merge needs —
-                    # candidates drop from probes·k/kc to probes·m
-                    # per row (~11× less lexsort mass at k=4000).
-                    mm = min(m, e - s)
-                    loc, locd = _topm_exact(d2f, mm)
-                    cr_parts.append(np.repeat(rows_c, mm))
-                    ci_parts.append(IDS[s:e][loc].ravel())
-                    cd_parts.append(locd.ravel())
-                cr = np.concatenate(cr_parts)
-                ci = np.concatenate(ci_parts)
-                cd = np.concatenate(cd_parts)
-                # -- per-row stable (d², id) merge + m-cap + ratio
-                o2 = np.lexsort((ci, cd, cr))
-                cr, ci, cd = cr[o2], ci[o2], cd[o2]
-                counts = np.bincount(cr, minlength=nt)
-                starts = np.concatenate(
-                    ([0], np.cumsum(counts[:-1]))
-                )
-                pos = np.arange(len(cr)) - np.repeat(starts, counts)
-                keep = pos < m
-                if pq is not None:
-                    p, qd = pq
-                    dmin = np.repeat(cd[starts], counts)
-                    keep &= cd * qd <= dmin * p
-                yield pd.DataFrame(
-                    {
-                        "id": ids_all[sl][cr[keep]],
-                        "qv": qv_obj[sl][cr[keep]],
-                        "block": ci[keep].astype(np.int32),
-                    }
-                )
-
-    return base.select("id", "qv").mapInPandas(
-        assign, schema="id long, qv array<long>, block int"
-    )
-
-
-def kmeans_assign_np(
-    base: DataFrame, centroids: list[list[int]]
-) -> DataFrame:
-    """Arrow/GEMM spelling of :func:`kmeans_assign` (nearest-centroid
-    + exact sqdist), bit-identical output — the fit-loop twin of
-    :func:`kmeans_assign_topm_np` for k past
-    :data:`LITERAL_ASSIGN_MAX_K`. ``argmin`` on the exact int64
-    distance row takes the FIRST minimum, matching the literal
-    path's ``array_position(dists, array_min(dists))`` tiebreak."""
-    import numpy as np
-    from pyspark.sql import SparkSession
-
-    cents = np.asarray(centroids, dtype=np.int64)
-    n2c = np.einsum("ij,ij->i", cents, cents)
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast((cents, n2c))
 
     k = len(centroids)
-    # nearest-only: one emitted row per input row, so the emit cap
-    # divides by 1 (see _ASSIGN_EMIT_ROWS)
-    tile_rows = max(
-        1,
-        min(_ASSIGN_TILE_CELLS // max(1, k), _ASSIGN_EMIT_ROWS),
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        C, n2C = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qv_obj = pdf["qv"].to_numpy()
-            ids_all = pdf["id"].to_numpy()
-            for lo in range(0, len(pdf), tile_rows):
-                sl = slice(lo, min(lo + tile_rows, len(pdf)))
-                q = np.stack(qv_obj[sl]).astype(np.int64, copy=False)
-                d2 = _np_sqdists(q, C, n2C)
-                nearest = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "id": ids_all[sl],
-                        "qv": qv_obj[sl],
-                        "cluster": (nearest + 1).astype(np.int32),
-                        "sqdist": d2[np.arange(len(q)), nearest],
-                    }
-                )
-
-    return base.select("id", "qv").mapInPandas(
-        assign, schema="id long, qv array<long>, cluster int, sqdist long"
-    )
-
-
-def kmeans_assign_np_2l(
-    base: DataFrame,
-    centroids: list[list[int]],
-    coarse_m: int = COARSE_PROBE_M,
-    coarse_ratio: float | None = COARSE_PROBE_RATIO,
-) -> DataFrame:
-    """Two-level (coarse → fine-within-cell) spelling of
-    :func:`kmeans_assign_np` — NEAREST-ONLY assignment for the FIT
-    loop, the round-13 follow-through on the two-level pair assign:
-    SEMDEDUP_TWOLEVEL_PROBE.json measured the sampled fit (153–177 s
-    at 4M, n_s·k GEMM per Lloyd iteration under k ∝ n) as the new
-    dominant SemDeDup term once the pair assign went two-level. Per
-    vector: one GEMM against the kc ≈ √k coarse centers from
-    :func:`centroid_router`, the same ratio-capped coarse probe as
-    :func:`kmeans_assign_topm_2l`, then per-probed-cell argmin and a
-    (d², cluster-id) min-reduce — n_s·(kc + coarse_m·k/kc) ≈ n_s·√k
-    distance work per iteration instead of n_s·k.
-
-    Output contract mirrors the flat pair (:func:`kmeans_assign` /
-    :func:`kmeans_assign_np`): exact int64 sqdist, ties break to the
-    lowest cluster index (within a cell the fine ids ascend with the
-    local column, so ``argmin``'s first minimum IS the lowest id; the
-    cross-cell merge compares (d², id) explicitly) — bit-identical to
-    the flat assign wherever the coarse probe covers the true nearest
-    cell (pinned exact at fixture scale by tests/test_pipeline.py;
-    the 1M pair-assign deviation bound is 2·10⁻⁶). Every vector
-    probes its nearest coarse cell and the router returns no empty
-    cells, so every vector is assigned. Inside Lloyd's the rare
-    covered-cell miss only nudges one centroid's floor mean — the fit
-    stays bit-DETERMINISTIC (pure function of the input), it is just
-    not bit-identical to the flat fit's trajectory; SemDeDup's recall
-    contract is measured downstream of the fit either way.
-    """
-    import numpy as np
-    from pyspark.sql import SparkSession
-
-    from database_join_spark.plans.sizing import coarse_k_for
-
-    cpq = None if coarse_ratio is None else _snap_ratio(coarse_ratio)
-    cents = np.asarray(centroids, dtype=np.int64)
-    k = len(cents)
-    coarse, cell_of = centroid_router(cents, coarse_k_for(k))
-    kc = len(coarse)
-    mc = max(1, min(coarse_m, kc))
-    perm = np.lexsort((np.arange(k), cell_of))
-    grouped = cents[perm]
-    ids_g = (perm + 1).astype(np.int64)
-    n2g = np.einsum("ij,ij->i", grouped, grouped)
-    cell_start = np.searchsorted(
-        cell_of[perm], np.arange(kc + 1)
-    ).astype(np.int64)
-    n2coarse = np.einsum("ij,ij->i", coarse, coarse)
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
-        (coarse, n2coarse, grouped, ids_g, n2g, cell_start)
-    )
-    mean_cell = max(1, -(-k // kc))
-    tile_rows = max(
-        1,
-        min(
-            _ASSIGN_TILE_CELLS // max(kc, mc * mean_cell),
-            _ASSIGN_EMIT_ROWS,
-        ),
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        C, n2C, G, IDS, n2G, STARTS = bc.value
-        kc_l = len(C)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qv_obj = pdf["qv"].to_numpy()
-            ids_all = pdf["id"].to_numpy()
-            for lo in range(0, len(pdf), tile_rows):
-                sl = slice(lo, min(lo + tile_rows, len(pdf)))
-                q = np.stack(qv_obj[sl]).astype(np.int64, copy=False)
-                nt = len(q)
-                # -- coarse probe: stable top-mc + ratio prefix
-                d2c = _np_sqdists(q, C, n2C)
-                order_c, sorted_c = _topm_exact(d2c, mc)
-                if cpq is None:
-                    keep_c = np.ones(order_c.shape, dtype=bool)
-                else:
-                    p_c, q_c = cpq
-                    keep_c = sorted_c * q_c <= sorted_c[:, :1] * p_c
-                probe_rows = np.repeat(
-                    np.arange(nt), keep_c.sum(axis=1)
-                )
-                probe_cells = order_c[keep_c]
-                o = np.argsort(probe_cells, kind="stable")
-                pr = probe_rows[o]
-                pc_sorted = probe_cells[o]
-                bounds = np.searchsorted(
-                    pc_sorted, np.arange(kc_l + 1)
-                )
-                # -- per-cell argmin, cross-cell (d², id) min-reduce.
-                # Within one cell every row index appears at most
-                # once, so the masked update is race-free.
-                best_d = np.full(nt, np.iinfo(np.int64).max)
-                best_id = np.full(nt, np.iinfo(np.int64).max)
-                for c in np.unique(pc_sorted):
-                    rows_c = pr[bounds[c] : bounds[c + 1]]
-                    s, e = STARTS[c], STARTS[c + 1]
-                    d2f = _np_sqdists(q[rows_c], G[s:e], n2G[s:e])
-                    loc = np.argmin(d2f, axis=1)
-                    dmin = d2f[np.arange(len(rows_c)), loc]
-                    gid = IDS[s:e][loc]
-                    cur_d = best_d[rows_c]
-                    cur_i = best_id[rows_c]
-                    better = (dmin < cur_d) | (
-                        (dmin == cur_d) & (gid < cur_i)
-                    )
-                    upd = rows_c[better]
-                    best_d[upd] = dmin[better]
-                    best_id[upd] = gid[better]
-                yield pd.DataFrame(
-                    {
-                        "id": ids_all[sl],
-                        "qv": qv_obj[sl],
-                        "cluster": best_id.astype(np.int32),
-                        "sqdist": best_d,
-                    }
-                )
-
-    return base.select("id", "qv").mapInPandas(
-        assign, schema="id long, qv array<long>, cluster int, sqdist long"
-    )
-
-
-def _twolevel_min_k() -> int:
-    """Late import of the sizing threshold (keeps operators → plans
-    a one-way, call-time edge)."""
-    from database_join_spark.plans.sizing import TWOLEVEL_ASSIGN_MIN_K
-
-    return TWOLEVEL_ASSIGN_MIN_K
-
-
-def kmeans_assign_topm(
-    base: DataFrame,
-    centroids: list[list[int]],
-    m: int,
-    ratio: float | None = None,
-    impl: str = "auto",
-) -> DataFrame:
-    """Multi-probe cluster assignment: one exploded row per (vector,
-    block) for the vector's ``m`` NEAREST centroids — the blocking
-    form of :func:`kmeans_assign` (same literal-centroid map stage,
-    no shuffle). ``arrays_zip`` + ``array_sort`` order (distance,
-    index) structs, so distance ties break to the lowest cluster
-    index — the same deterministic rule as ``array_position`` on the
-    first minimum, and the same order ``numpy.argsort(kind='stable')``
-    yields, which is what lets the multi-probe candidate SET be
-    pinned bit-for-bit against an independent fit.
-
-    ``ratio`` (VERDICT r08 #6) makes the probe width ADAPTIVE:
-    centroid j is probed only when ``d²_j ≤ ratio · d²_nearest``
-    (m becomes the cap). Fixed-m pays the full m-wide candidate
-    mass for EVERY vector to recover the few boundary-straddling
-    twins; under the ratio rule, vectors deep inside a cell (the
-    bulk) probe one cell, and only genuine boundary cases fan out —
-    the SEMDEDUP_PROBE measured m=4 paying 17.5× the m=1 candidate
-    mass at 1M to recover 173 boundary misses. The comparison is
-    exact int64 arithmetic: ratio is snapped to a small fraction
-    p/q (q ≤ 8) and evaluated as ``d²_j·q ≤ d²_min·p`` — bounded by
-    2.6e16·8 ≈ 2.1e17 < 2⁶³, so no float rounding at the decision
-    boundary. The nearest centroid always qualifies (d²·q ≤ d²·p
-    for p ≥ q), so every vector keeps at least its home block.
-
-    ``impl``: ``"literal"`` forces the literal-centroid JVM plan,
-    ``"np"`` the broadcast/GEMM Arrow spelling
-    (:func:`kmeans_assign_topm_np` — bit-identical output),
-    ``"np2l"`` the two-level quantizer
-    (:func:`kmeans_assign_topm_2l` — n·√k work, identical output
-    wherever the coarse probe covers the true top-m cells);
-    ``"auto"`` picks np past :data:`LITERAL_ASSIGN_MAX_K` centroids
-    (where the literal expression tree stops being viable and BLAS
-    wins the O(k·dim)-per-row fold), and np2l past
-    :data:`~database_join_spark.plans.sizing.TWOLEVEL_ASSIGN_MIN_K`
-    (where under k_for's k ∝ n the flat n·k GEMM becomes the last
-    super-linear SemDeDup term).
-    """
-    k = len(centroids)
-    if impl not in ("auto", "literal", "np", "np2l"):
-        raise ValueError(
-            f"impl must be auto|literal|np|np2l, got {impl!r}"
-        )
-    if impl == "np2l" or (
-        impl == "auto" and k >= _twolevel_min_k()
-    ):
-        return kmeans_assign_topm_2l(base, centroids, m, ratio)
-    if impl == "np" or (impl == "auto" and k > LITERAL_ASSIGN_MAX_K):
-        return kmeans_assign_topm_np(base, centroids, m, ratio)
-    dists = F.expr(_literal_dists_sql(centroids))
-    top_m = (
-        f"slice(array_sort(arrays_zip(dists, sequence(1, {k}))), 1, {m})"
-    )
-    if ratio is None:
-        blocks = f"transform({top_m}, s -> CAST(s['1'] AS INT))"
+    cents = np.asarray(centroids, dtype=np.int64).reshape(k, -1 if k else 0)
+    if k < TWOLEVEL_ASSIGN_MIN_K:
+        coarse = n2_coarse = None
+        perm = np.arange(k)
+        starts = np.array([0, k])
     else:
-        p, q = _snap_ratio(ratio)
-        blocks = (
-            f"transform(filter(top_m, s -> s['dists'] * {q}L <= "
-            f"top_m[0]['dists'] * {p}L), s -> CAST(s['1'] AS INT))"
+        coarse, cell_of = centroid_router(cents, coarse_k_for(k))
+        n2_coarse = np.einsum("ij,ij->i", coarse, coarse)
+        # within a cell the fine ids ascend with the local column, so
+        # a per-cell stable top-m is already in (d², block) order
+        perm = np.lexsort((np.arange(k), cell_of))
+        starts = np.searchsorted(cell_of[perm], np.arange(len(coarse) + 1))
+    fine = cents[perm]
+    return (
+        coarse,
+        n2_coarse,
+        fine,
+        np.einsum("ij,ij->i", fine, fine),
+        perm + 1,
+        starts,
+    )
+
+
+def _decode_qv(qv):
+    """The (rows, dim) int64 matrix of an Arrow ``list<int64>`` column
+    of one-dimension vectors, read straight from its list offsets."""
+    import numpy as np
+
+    lens = np.diff(np.asarray(qv.offsets))
+    if qv.null_count or (lens != lens[0]).any():
+        raise ValueError(
+            "the k-means assign needs non-null vectors of one dimension"
         )
-    df = base.withColumn("dists", dists)
-    if ratio is not None:
-        df = df.withColumn("top_m", F.expr(top_m))
-    # ONE-STEP generate (round 10): exploding a named "blocks"
-    # column lets InferFiltersFromGenerate insert a size>0 filter
-    # whose condition inlines the ENTIRE k-centroid distance
-    # computation (dists/top_m collapse into it) — the whole assign
-    # runs twice per vector; measured 2.4× (9.5 → 4.0 s at 300k
-    # vectors / k=30, identical output). Exploding the expression
-    # directly infers no filter (see dedup.shingles_from_tokens
-    # docstring for the measured 19× worst case of this trap).
-    return df.select("id", "qv", F.explode(F.expr(blocks)).alias("block"))
+    return qv.flatten().to_numpy().reshape(len(qv), int(lens[0]))
+
+
+def _assign_rows(q, index, m, frac):
+    """The k-means assign kernel every assign site runs: the top-``m``
+    centroids of each row of ``q`` (int64, rows × dim) by EXACT int64
+    squared distance (:func:`_np_sqdists`), in stable (d², block)
+    order, kept while ``d²·q' ≤ d²_min·p`` for ``frac = (p, q')``
+    (:func:`_snap_ratio`; None keeps all m). Returns ``(row, block,
+    d2)`` int64 arrays, one entry per kept probe, row-major; m=1 is
+    the nearest centroid (ties to the lowest id), and k < m keeps k.
+
+    ``index`` is :func:`_assign_index`'s. A one-cell index scores all
+    k centroids and needs no merge. A routed index first probes the
+    vector's nearest coarse cells (``COARSE_PROBE_M`` / exact
+    ``COARSE_PROBE_RATIO`` prefix, always including the nearest), takes
+    each probed cell's own top-m (a global winner is a winner in its
+    cell) and merges the candidates in (d², block) order: identical to
+    the one-cell answer wherever the probe covers the true top-m cells
+    (SEMDEDUP_TWOLEVEL_PROBE.json bounds the misses at 2·10⁻⁶ of rows
+    at 1M/k=1000). Every vector keeps at least one block, since the
+    router returns no empty cells."""
+    import numpy as np
+
+    coarse, n2_coarse, fine, n2_fine, block_of, starts = index
+    k = len(fine)
+    if coarse is None:
+        width = k
+    else:
+        mc = min(COARSE_PROBE_M, len(coarse))
+        cp, cq = _snap_ratio(COARSE_PROBE_RATIO)
+        width = max(len(coarse), mc * -(-k // len(coarse)))
+    tile = max(1, _ASSIGN_TILE_CELLS // max(1, width))
+    rows, cols, dists = [], [], []
+    for lo in range(0, len(q) if k else 0, tile):
+        t = q[lo : lo + tile]
+        if coarse is None:
+            order, d = _topm_exact(_np_sqdists(t, fine, n2_fine), m)
+            r = np.repeat(np.arange(len(t)), order.shape[1])
+            c, d = order.ravel(), d.ravel()
+        else:
+            order_c, d_c = _topm_exact(_np_sqdists(t, coarse, n2_coarse), mc)
+            keep_c = d_c * cq <= d_c[:, :1] * cp
+            probe_rows = np.repeat(np.arange(len(t)), keep_c.sum(axis=1))
+            probe_cells = order_c[keep_c]
+            by_cell = np.argsort(probe_cells, kind="stable")
+            probe_rows, probe_cells = probe_rows[by_cell], probe_cells[by_cell]
+            bounds = np.searchsorted(probe_cells, np.arange(len(coarse) + 1))
+            parts = []
+            for cell in np.unique(probe_cells):
+                rc = probe_rows[bounds[cell] : bounds[cell + 1]]
+                s, e = starts[cell], starts[cell + 1]
+                loc, ld = _topm_exact(
+                    _np_sqdists(t[rc], fine[s:e], n2_fine[s:e]), m
+                )
+                parts.append(
+                    (np.repeat(rc, loc.shape[1]), loc.ravel() + s, ld.ravel())
+                )
+            r, c, d = (np.concatenate(x) for x in zip(*parts))
+            merged = np.lexsort((block_of[c], d, r))
+            r, c, d = r[merged], c[merged], d[merged]
+        # r ascends and each row's candidates are in (d², block) order
+        first = np.flatnonzero(np.diff(r, prepend=-1))
+        counts = np.diff(np.append(first, len(r)))
+        keep = np.arange(len(r)) - np.repeat(first, counts) < m
+        if frac is not None:
+            p, qd = frac
+            keep &= d * qd <= np.repeat(d[first], counts) * p
+        rows.append(r[keep] + lo)
+        cols.append(c[keep])
+        dists.append(d[keep])
+    if not rows:
+        return (np.empty(0, np.int64),) * 3
+    return (
+        np.concatenate(rows),
+        block_of[np.concatenate(cols)],
+        np.concatenate(dists),
+    )
 
 
 def _fallback_centroids(df: DataFrame, **kw) -> list[list[int]]:
@@ -1622,12 +1226,14 @@ def semdedup_pairs(
     (scripts/semdedup_probe.py) both call this, so what's probed is
     what ships.
 
-    Returns (id_a, id_b, cos_sim) with id_a < id_b, each pair once.
-    Precision is exact by construction (every emitted pair carries
-    its true quantized cosine); recall misses exactly the true pairs
-    sharing none of their m probed clusters — the measured m-curve
-    lives on ``_SEMDEDUP_PROBES`` (queries/pipeline.py) and in
-    SEMDEDUP_PROBE.json. ``ratio`` switches the blocking to
+    Returns (id_a, id_b, cos_sim) with id_a < id_b, each pair once
+    (none for an empty ``emb``). Precision is exact by construction
+    (every emitted pair carries its true quantized cosine); recall
+    misses exactly the true pairs sharing none of their m probed
+    clusters — the measured m-curve lives on ``_SEMDEDUP_PROBES``
+    (queries/pipeline.py) and in SEMDEDUP_PROBE.json. Both paths
+    below block with the one assign kernel (:func:`_assign_rows`).
+    ``ratio`` switches the blocking to
     distance-ratio ADAPTIVE probing (see
     :func:`kmeans_assign_topm`): m becomes the cap, and only
     vectors near a Voronoi boundary fan out — the probe's adaptive
@@ -1682,11 +1288,9 @@ def semdedup_pairs(
     # limit(k).count() < k), so the common path pays one collect
     # instead of a separate count job + dim head + collect — and,
     # because only the centroids are needed here (the blocking
-    # assign below runs on the FULL corpus), the k·dim literal
-    # assign tree kmeans_fit would return is never constructed
-    # (measured ~0.1 s of Catalyst analysis per run at k=10/dim=64,
-    # SEMDEDUP_R14_PHASE_PROBE.json). Identical decisions, identical
-    # centroids, three fewer per-run driver round trips.
+    # assign below runs on the FULL corpus), the assignment
+    # kmeans_fit would return is never built. Identical decisions,
+    # identical centroids, three fewer per-run driver round trips.
     if fit_sample_mod is not None and fit_sample_mod > 1:
         fit_input = emb.filter(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(fit_sample_mod))
@@ -1868,22 +1472,18 @@ def _semdedup_one_task(
     coarse: bool,
 ) -> DataFrame:
     """:func:`semdedup_pairs` for a corpus that fits one scorer chunk,
-    as one ``mapInArrow`` task over ``base.coalesce(1)``: the exact
-    top-m assign of :func:`kmeans_assign_topm_np` (same
-    :func:`_np_sqdists` + :func:`_topm_exact` and ``ratio`` keep-mask,
-    so the same blocks as every assign spelling at k <
-    ``TWOLEVEL_ASSIGN_MIN_K``, and the exact ones the two-level
-    assign approximates above it), then every block's upper triangle
-    through the :func:`_block_scorer` core. The centroids ride in the
-    closure. Emits the scorer's (id_a, id_b, dot, n2_a, n2_b) rows;
-    the coalesced single partition also satisfies the ``distinct``
-    that follows, so the whole action is one job of one task."""
+    as one ``mapInArrow`` task over ``base.coalesce(1)``: the top-m
+    assign kernel (:func:`_assign_rows`, the same blocks as
+    :func:`kmeans_assign_topm`), then every block's upper triangle
+    through the :func:`_block_scorer` core. The centroid index rides
+    in the closure. Emits the scorer's (id_a, id_b, dot, n2_a, n2_b)
+    rows; the coalesced single partition also satisfies the
+    ``distinct`` that follows, so the whole action is one job of one
+    task."""
     import numpy as np
 
     frac = None if ratio is None else _snap_ratio(ratio)
-    C = np.asarray(cents, dtype=np.int64)
-    n2C = np.einsum("ij,ij->i", C, C)
-    tile_rows = max(1, _ASSIGN_TILE_CELLS // max(1, len(cents)))
+    index = _assign_index(cents)
     pairs = _pair_scorer(threshold, coarse)
 
     def run(batches):
@@ -1894,28 +1494,8 @@ def _semdedup_one_task(
             return
         tbl = pa.Table.from_batches(batches)
         ids = tbl.column("id").to_numpy()
-        qv = tbl.column("qv").combine_chunks()
-        lens = np.diff(np.asarray(qv.offsets))
-        if qv.null_count or (lens != lens[0]).any():
-            raise ValueError(
-                "semdedup_pairs needs non-null vectors of one dimension"
-            )
-        q = qv.flatten().to_numpy().reshape(len(ids), int(lens[0]))
-        # assign: (row, block) of every kept probe, row-major
-        rows, blocks = [], []
-        for lo in range(0, len(q), tile_rows):
-            order, sorted_d = _topm_exact(
-                _np_sqdists(q[lo : lo + tile_rows], C, n2C), m
-            )
-            if frac is None:
-                keep = np.ones(order.shape, dtype=bool)
-            else:
-                p, qd = frac
-                keep = sorted_d * qd <= sorted_d[:, :1] * p
-            rows.append(np.nonzero(keep)[0] + lo)
-            blocks.append(order[keep])
-        row = np.concatenate(rows)
-        block = np.concatenate(blocks)
+        q = _decode_qv(tbl.column("qv").combine_chunks())
+        row, block, _d2 = _assign_rows(q, index, m, frac)
         by_block = np.argsort(block, kind="stable")
         row, block = row[by_block], block[by_block]
         cuts = np.flatnonzero(np.diff(block)) + 1

@@ -719,31 +719,32 @@ def fit_sample_mod_for(
     return max(1, n_vectors // max(1, rows_per_centroid * k))
 
 
-#: Centroid count past which ``kmeans_assign_topm(impl="auto")``
-#: routes the full-corpus assign through the two-level (coarse √k →
-#: fine-within-cell) quantizer instead of the flat GEMM. The flat
-#: assign does n·k distance work — under :func:`k_for`'s k ∝ n that
-#: is the last super-linear term in SemDeDup (VERDICT r12 #2); the
-#: two-level path does n·(√k + coarse_m·√k) plus a per-cell-top-m
-#: merge. Measured by SEMDEDUP_TWOLEVEL_PROBE.json at 1M vectors:
-#: the two-level assign wall sits ~flat at 5.7–5.9 s across
-#: k=1000/2048/3162 while the flat GEMM pays 33/19/20 s (5.8×/3.2×/
-#: 3.4×, identical emitted-row counts every rung), and the n-ladder
-#: keeps the advantage to 4M (5.1 → 62 s vs flat 30 → 283 s — 4.5×
-#: at 4M/k=4040, rows identical; the shipped operator end-to-end at
-#: 4M: 349 s, recall 1.0, exactly the 40k planted pairs, vs the r12
-#: flat-assign 1M record of 112.5 s — 3.1× wall for 4× corpus). The
-#: threshold sits at the k_for ladder's 1M rung — the first point
-#: measured winning — so corpora from 1M vectors up take the
-#: two-level path and fixture-scale runs keep the flat plan's
-#: single-matrix simplicity (at fixture k the router adds pure
-#: overhead). The FIT loop's nearest-only assign dispatches on the
-#: same threshold (operators/similarity.kmeans_assign_np_2l —
-#: 100·k^1.5 per-iteration work instead of 100·k² under the sampled
-#: fit): SEMDEDUP_FIT2L_PROBE.json measures 2.36×/2.59× at 2M/4M on
-#: top of the iteration-frame persist, with the 1M parity part
-#: pinning the downstream cost of the fit's trajectory deviation at
-#: ZERO emitted-pair difference (recall 1.0 both arms).
+#: Centroid count from which the k-means assign kernel
+#: (operators/similarity._assign_rows, behind every assign site)
+#: routes each vector through the two-level (coarse √k →
+#: fine-within-cell) index instead of one cell of all k centroids.
+#: The flat assign does n·k distance work — under :func:`k_for`'s
+#: k ∝ n that is the last super-linear term in SemDeDup (VERDICT r12
+#: #2); the two-level path does n·(√k + coarse_m·√k) plus a
+#: per-cell-top-m merge. Measured by SEMDEDUP_TWOLEVEL_PROBE.json at
+#: 1M vectors: the two-level assign wall sits ~flat at 5.7–5.9 s
+#: across k=1000/2048/3162 while the flat GEMM pays 33/19/20 s
+#: (5.8×/3.2×/3.4×, identical emitted-row counts every rung), and the
+#: n-ladder keeps the advantage to 4M (5.1 → 62 s vs flat 30 → 283 s
+#: — 4.5× at 4M/k=4040, rows identical; the shipped operator
+#: end-to-end at 4M: 349 s, recall 1.0, exactly the 40k planted
+#: pairs, vs the r12 flat-assign 1M record of 112.5 s — 3.1× wall for
+#: 4× corpus). The threshold sits at the k_for ladder's 1M rung — the
+#: first point measured winning — so corpora from 1M vectors up take
+#: the two-level path and fixture-scale runs keep the one-cell
+#: index's single-matrix simplicity (at fixture k the router adds
+#: pure overhead). The fit loop's nearest-only assign is the same
+#: kernel at m=1, so it crosses at the same k (100·k^1.5
+#: per-iteration work instead of 100·k² under the sampled fit):
+#: SEMDEDUP_FIT2L_PROBE.json measures 2.36×/2.59× at 2M/4M on top of
+#: the iteration-frame persist, with the 1M parity part pinning the
+#: downstream cost of the fit's trajectory deviation at ZERO
+#: emitted-pair difference (recall 1.0 both arms).
 TWOLEVEL_ASSIGN_MIN_K = 1000
 
 
@@ -765,8 +766,8 @@ def coarse_k_for(k: int) -> int:
     one level up: sample the router's own Lloyd input
     (``fit_sample_mod_for`` applied to the k fine centroids) and
     distribute the one-pass k-row cell assignment through
-    :func:`~database_join_spark.operators.similarity.
-    kmeans_assign_np` against the kc coarse centers."""
+    :func:`~database_join_spark.operators.similarity.kmeans_assign`
+    against the kc coarse centers."""
     return max(1, math.ceil(math.sqrt(k)))
 
 

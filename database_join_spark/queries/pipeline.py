@@ -3264,8 +3264,8 @@ def topic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, plus pinned k-row shape and monotone objective
     (tests/test_pipeline.py).
 
-    Scale posture: per iteration one literal-centroid map stage
-    (no join, no shuffle — operators/similarity.kmeans_fit) plus
+    Scale posture: per iteration one Arrow assign map stage (no
+    join, no shuffle — operators/similarity.kmeans_fit) plus
     one k·dim-bounded aggregation; the driver holds only the k×64
     centroid matrix. Output is k rows — cluster id, member count,
     exact inertia, and members' min vec_id as a stable
@@ -3382,7 +3382,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver records rows-only.
 
     Scale posture: one k-means fit (per-iteration map stage +
-    k·dim-bounded update), one shuffle of (block, id, qv) to
+    k·dim-bounded update), one assign map stage (the exact kernel
+    operators/similarity._assign_rows: all k centroids in one cell
+    at fixture k, the √k router index from TWOLEVEL_ASSIGN_MIN_K
+    centroids on), one shuffle of (block, id, qv) to
     co-locate block members — m× the single-probe volume — then
     within-block scoring as a tiled numpy GEMM behind applyInPandas
     (operators/similarity._block_scorer; round 8 — the join +
@@ -3570,40 +3573,13 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule); the registry-wide plan scan covers this id like any
     other.
     """
-    # Round 14 (VERDICT r13 #6): persist_surv=False. The round-13
-    # boundary materialization was an honest bench-scale wash (2.32
-    # vs 2.30 s) shipped on an at-scale argument; the verdict ordered
-    # the wash resolved at 1M docs and the clean alternating A/B
-    # (CORPUS_SURV_PERSIST_1M_PROBE.json, sole workload on the box)
-    # measured the persist 18-22% SLOWER there — recompute 96/101 s
-    # vs persist 114/126 s, answers identical — the cache-fill cost
-    # and lost branch overlap exceed the recomputed subtree. The
-    # single-DAG spelling is the shipped one; the switch and both
-    # probes stay so the decision is re-measurable.
-    return _corpus_pipeline_frame(spark, sf_dir, persist_surv=False)
-
-
-def _corpus_pipeline_frame(
-    spark: SparkSession, sf_dir: str, persist_surv: bool
-) -> DataFrame:
-    """corpus_pipeline's body, with the stage-boundary
-    materialization switchable so the A/B probe
-    (scripts/corpus_surv_persist_probe.py) measures exactly the
-    shipped spelling against the recompute-per-branch one.
-
-    ``persist_surv=True`` is the shipped default (round 13): the
-    single-DAG spelling re-derives ``surv`` — full documents scan +
-    tokenize + fingerprint + window dedup, two exchanges — once per
-    consuming branch (excision, decontam, final join: nodes 1-11,
-    12-23, 39-49 of the before-plan, 30 Exchanges total). Persisting
-    the dedup survivors is the plan-level form of the at-scale
-    discipline the docstring already names (TOKEN_STAGING_PROBE:
-    the token-array column at rest is 0.46x the text bytes;
-    PIPELINE_E2E_PROBE's shared-tokens arm) — compute the boundary
-    once, feed all three branches. Routed through track_persist so
-    the next gated query's configure_session drains it."""
-    from database_join_spark.session import track_persist
-
+    # Round 14 (VERDICT r13 #6): no stage-boundary persist. The
+    # round-13 materialization of the dedup survivors was a
+    # bench-scale wash (2.32 vs 2.30 s), and the alternating 1M-doc
+    # A/B (CORPUS_SURV_PERSIST_1M_PROBE.json) measured it 18-22%
+    # SLOWER — recompute 96/101 s vs persist 114/126 s, answers
+    # identical: the cache-fill cost and lost branch overlap exceed
+    # the recomputed subtree. The single-DAG spelling ships.
     _size_exchanges(spark, sf_dir)
     docs = _docs(spark, sf_dir)
     toks = docs.select(
@@ -3620,8 +3596,6 @@ def _corpus_pipeline_frame(
     surv = D.dedup_exact(corpus, ["fp"], "doc_id").select(
         "doc_id", "lang", "toks", "n_tokens"
     )
-    if persist_surv:
-        surv = track_persist(surv)
     exc = substring_excise_from_tokens(
         surv.select("doc_id", "toks")
     ).select(

@@ -19,8 +19,8 @@ at-scale spelling past that point is the same trick one level up:
 fit the coarse centers on a SAMPLE of the fine centroids (the
 fit_sample_mod_for rule applied to the router's own input) and/or
 distribute the one-pass final assignment of fine centroids to
-cells (a k-row mapInPandas against the kc coarse centers — the
-machinery of kmeans_assign_np, reused verbatim).
+cells (a k-row Arrow assign against the kc coarse centers — the
+machinery of kmeans_assign, reused verbatim).
 
 Usage: python scripts/router_wall_probe.py [--ks 10000,30000,100000,300000]
 Writes ROUTER_WALL_PROBE.json.
@@ -126,7 +126,7 @@ def main() -> None:
             "named at-scale spelling is to sample the router's own "
             "fit input (fit_sample_mod_for applied at the router "
             "level) and distribute the final k-row cell assignment "
-            "through kmeans_assign_np against the kc coarse centers."
+            "through kmeans_assign against the kc coarse centers."
         ),
     }
     Path(_REPO, "ROUTER_WALL_PROBE.json").write_text(

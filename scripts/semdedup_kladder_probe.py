@@ -25,11 +25,10 @@ per rung k ∈ {n/10k, 316, 1000, 3162, 10000}:
     k-linear cost that eventually pays back the sweep's savings),
     block rows, Σ|block|²/2 candidate pairs, mean/p99 block size.
 
-The large-k rungs exercise :func:`kmeans_assign_topm_np` — the
-broadcast/GEMM assign added this round because the literal-centroid
-plan is O(k·dim) expression nodes and cannot carry k in the
-thousands (bit-parity with the literal path is pinned in
-tests/test_pipeline.py).
+Every rung runs the one assign kernel behind
+:func:`kmeans_assign_topm` (``similarity._assign_rows``): one cell of
+all k centroids below ``plans.sizing.TWOLEVEL_ASSIGN_MIN_K``, the √k
+router index from there on.
 
 Usage: python scripts/semdedup_kladder_probe.py [--n 1000000]
        [--quick] [--ks 100,316,1000,3162]
@@ -51,6 +50,7 @@ if _REPO not in sys.path:
 from pyspark.sql import functions as F  # noqa: E402
 
 from database_join_spark.operators import similarity as S  # noqa: E402
+from database_join_spark.plans.sizing import TWOLEVEL_ASSIGN_MIN_K  # noqa: E402
 from database_join_spark.session import get_spark  # noqa: E402
 from scripts.semdedup_probe import (  # noqa: E402
     DUP_EVERY,
@@ -145,14 +145,9 @@ def main() -> None:
         )
         rung = {
             "k": k,
+            # the assign kernel's only selection: its index shape
             "assign_impl": (
-                # mirror kmeans_assign_topm's auto dispatch (round 13
-                # added the two-level tier)
-                "np2l"
-                if k >= S._twolevel_min_k()
-                else "np"
-                if k > S.LITERAL_ASSIGN_MAX_K
-                else "literal"
+                "np2l" if k >= TWOLEVEL_ASSIGN_MIN_K else "np"
             ),
             "wall_sec": wall,
             "recall_vs_planted": recall,

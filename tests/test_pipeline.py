@@ -643,61 +643,6 @@ def test_kmeans_assign_topm_matches_numpy_stable_argsort(spark):
         kmeans_assign_topm(base, cents, m=m, ratio=1.1)
 
 
-def test_kmeans_assign_np_bit_parity_with_literal(spark):
-    """The broadcast/GEMM Arrow assign (round 12 — the spelling that
-    carries k_for(n)'s thousands of centroids where the literal
-    O(k·dim) expression tree cannot) must be BIT-IDENTICAL to the
-    literal-centroid plan: same top-m sets, same adaptive-ratio
-    filter decisions, same nearest/sqdist, same fit centroids. Any
-    divergence means the k-ladder measured a different operator than
-    the one that ships."""
-    from database_join_spark.catalog import table
-    from database_join_spark.operators.similarity import (
-        _quant,
-        kmeans_assign,
-        kmeans_assign_topm,
-        kmeans_fit,
-    )
-    from pyspark.sql import functions as F
-
-    emb = table(spark, SF_DIR, "embeddings")
-    _, cents, _ = kmeans_fit(emb, k=12, iterations=2)
-    base = emb.select(
-        F.col("vec_id").alias("id"),
-        F.expr(_quant("embedding")).alias("qv"),
-    )
-    for ratio in (None, 1.5):
-        lit = {
-            (r["id"], r["block"])
-            for r in kmeans_assign_topm(
-                base, cents, m=4, ratio=ratio, impl="literal"
-            ).collect()
-        }
-        arrw = {
-            (r["id"], r["block"])
-            for r in kmeans_assign_topm(
-                base, cents, m=4, ratio=ratio, impl="np"
-            ).collect()
-        }
-        assert lit == arrw
-    lit_n = {
-        r["id"]: (r["cluster"], r["sqdist"])
-        for r in kmeans_assign(base, cents, impl="literal").collect()
-    }
-    np_n = {
-        r["id"]: (r["cluster"], r["sqdist"])
-        for r in kmeans_assign(base, cents, impl="np").collect()
-    }
-    assert lit_n == np_n
-    # the whole FIT under the np assign lands on the same centroids
-    _, cents_np, _ = kmeans_fit(
-        emb, k=12, iterations=2, assign_impl="np"
-    )
-    assert cents_np == cents
-    with pytest.raises(ValueError, match="impl must be"):
-        kmeans_assign_topm(base, cents, m=4, impl="gpu")
-
-
 def test_kmeans_fit_clamps_k_to_row_count(spark):
     """k larger than the input row count must degrade gracefully
     (every row its own cluster) instead of IndexError in the
@@ -862,7 +807,10 @@ def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
 def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
     """semdedup_pairs keeps only the centroids of a sampled-fit
     fallback: the persisted fit base ``_fit_centroids`` returns must
-    be uncached once they are extracted, with the pairs unchanged."""
+    be uncached once they are extracted, with the pairs unchanged.
+    The over-budget fallback fits on the distributed loop, whose
+    returned frame must be that persisted base too (not an
+    assignment over it), so no cached RDD outlives the call."""
     from pyspark import StorageLevel
 
     from database_join_spark.catalog import table
@@ -893,9 +841,45 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
     assert len(fit_bases) == 1
     assert not fit_bases[0].is_cached
     assert fit_bases[0].storageLevel == StorageLevel.NONE
+    # over budget: a 100-row cap under the ~250-row 1-in-2 sample
+    # sends the fit to the distributed loop; n_hint keeps the blocks
+    # in the one-task path, which caches nothing of its own
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 100)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    over = pairs(fit_sample_mod=2, n_hint=500)
+    assert persistent().size() == before
+    assert len(fit_bases) == 2
+    assert fit_bases[1].columns == ["id", "qv"]
+    assert not fit_bases[1].is_cached
+    assert over, "fixtures must plant semantic dups"
     monkeypatch.setattr(S, "_fit_centroids", stock_fit)
     assert degenerate == pairs()
     assert degenerate, "fixtures must plant semantic dups"
+
+
+def test_empty_embeddings_give_no_pairs_and_no_centroids(spark):
+    """An empty embeddings frame is a valid input: semdedup_pairs
+    returns zero pairs with or without a row-count hint (one-task
+    and census paths), kmeans_fit an empty assignment and no
+    centroids — only fit_mode='driver' refuses it."""
+    from database_join_spark.operators import similarity as S
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    for n_hint in (None, 0, 10**6):
+        got = S.semdedup_pairs(
+            emb, k=10, iterations=3, m=4, threshold=0.4, n_hint=n_hint
+        ).collect()
+        assert got == [], n_hint
+    for mode in ("auto", "distributed"):
+        assigned, cents, hist = S.kmeans_fit(
+            emb, k=4, iterations=2, fit_mode=mode
+        )
+        assert cents == [] and hist == []
+        assert assigned.collect() == []
+        assert assigned.columns == ["id", "qv", "cluster", "sqdist"]
+    with pytest.raises(ValueError, match="empty input"):
+        S.kmeans_fit(emb, k=4, iterations=1, fit_mode="driver")
 
 
 # --------------------------------------------------------------------------
@@ -1269,8 +1253,8 @@ def test_semdedup_coarse_score_identical(spark):
 
 
 def test_topm_exact_matches_stable_argsort_under_ties():
-    """_topm_exact (round 12: the argpartition fast path behind
-    kmeans_assign_topm_np) must equal argsort(kind='stable')[:, :m]
+    """_topm_exact (round 12: the argpartition fast path inside the
+    assign kernel) must equal argsort(kind='stable')[:, :m]
     on EVERY input — including planted exact distance ties at and
     across the selection boundary, where argpartition alone makes no
     stability promise."""
@@ -1295,15 +1279,90 @@ def test_topm_exact_matches_stable_argsort_under_ties():
     assert (order == np.argsort(d2, axis=1, kind="stable")).all()
 
 
+def test_assign_rows_matches_stable_argsort_and_ratio_rule(monkeypatch):
+    """Spark-free pin of the assign kernel, ``_assign_rows``, on a
+    one-cell index and on a routed (multi-cell) index against brute
+    force: the stable argsort of the exact int64 distances over the
+    centroids the row may see (all of them for one cell; the cells
+    its coarse probe keeps for the router), capped at m, then the
+    integer ratio rule d²·q ≤ d²_min·p. Planted ties (a small value
+    alphabet and duplicated centroids), m in {1, 4}, ratio in
+    {None, 1.5}, k < m and k = 0."""
+    import numpy as np
+
+    from database_join_spark.operators import similarity as S
+    from database_join_spark.plans import sizing
+
+    def brute(q, cents, m, ratio, allowed):
+        rows, blocks, dists = [], [], []
+        for i, v in enumerate(q):
+            d = ((v[None, :] - cents) ** 2).sum(axis=1)
+            order = [
+                j for j in np.argsort(d, kind="stable") if allowed[i, j]
+            ][:m]
+            for j in order:
+                if ratio is None or d[j] * 2 <= d[order[0]] * 3:
+                    rows.append(i)
+                    blocks.append(j + 1)
+                    dists.append(d[j])
+        return rows, blocks, dists
+
+    def cells_probed(q, index):
+        """Brute-force coarse probe: per row, the cells among its
+        COARSE_PROBE_M nearest (stable) within ratio 2 of the nearest,
+        expanded to the fine centroids (by block id) they hold."""
+        coarse, _n2c, _f, _n2f, block_of, starts = index
+        cell_of_block = np.empty(len(block_of), np.int64)
+        for c in range(len(coarse)):
+            cell_of_block[block_of[starts[c] : starts[c + 1]] - 1] = c
+        allowed = np.zeros((len(q), len(block_of)), bool)
+        for i, v in enumerate(q):
+            d = ((v[None, :] - coarse) ** 2).sum(axis=1)
+            near = np.argsort(d, kind="stable")[: S.COARSE_PROBE_M]
+            kept = [c for c in near if d[c] * 1 <= d[near[0]] * 2]
+            allowed[i] = np.isin(cell_of_block, kept)
+        return allowed
+
+    rng = np.random.default_rng(11)
+    q = rng.integers(0, 6, size=(60, 5)).astype(np.int64)
+    cents = rng.integers(0, 6, size=(23, 5)).astype(np.int64)
+    cents[7] = cents[3]  # an exact distance tie at every row
+    cases = []
+    one_cell = S._assign_index(cents.tolist())
+    assert one_cell[0] is None  # fixture k: no router fit
+    cases.append((cents, one_cell, np.ones((len(q), len(cents)), bool)))
+    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 4)
+    routed = S._assign_index(cents.tolist())
+    assert len(routed[0]) > 1
+    cases.append((cents, routed, cells_probed(q, routed)))
+    small = cents[:3]  # k < m
+    cases.append(
+        (small, S._assign_index(small.tolist()), np.ones((len(q), 3), bool))
+    )
+    for cs, index, allowed in cases:
+        for m in (1, 4):
+            for ratio in (None, 1.5):
+                frac = None if ratio is None else S._snap_ratio(ratio)
+                got = S._assign_rows(q, index, m, frac)
+                want = brute(q, cs, m, ratio, allowed)
+                assert [list(x) for x in got] == [list(x) for x in want], (
+                    len(cs), index[0] is None, m, ratio,
+                )
+    # k = 0: no blocks, any m, either index threshold
+    for m in (1, 4):
+        row, block, d2 = S._assign_rows(q, S._assign_index([]), m, None)
+        assert len(row) == len(block) == len(d2) == 0
+
+
 def test_twolevel_assign_matches_flat_and_dispatches(spark, monkeypatch):
     """Round-13 two-level quantizer (VERDICT r12 #2): on the shipped
     SemDeDup spellings (ratio-capped m=4 and nearest-only m=1) the
     coarse→fine assign must emit the BIT-IDENTICAL (id, block) set as
-    the flat GEMM — the router never touches the fine centroids, so
-    any probe covering the true top-m cells reproduces the flat
+    the one-cell index — the router never touches the fine centroids,
+    so any probe covering the true top-m cells reproduces the flat
     output exactly. Also pins the router invariants (every returned
-    cell non-empty, indexes dense) and that impl="auto" routes
-    through the two-level path once k crosses the sizing threshold."""
+    cell non-empty, indexes dense) and that the router is fitted
+    exactly when k reaches the sizing threshold."""
     import numpy as np
 
     from database_join_spark.catalog import table
@@ -1317,57 +1376,49 @@ def test_twolevel_assign_matches_flat_and_dispatches(spark, monkeypatch):
         F.col("vec_id").alias("id"),
         F.expr(S._quant("embedding")).alias("qv"),
     )
-    for m, ratio in ((4, 1.5), (1, None)):
-        flat = {
-            (r["id"], r["block"])
-            for r in S.kmeans_assign_topm(
-                base, cents, m=m, ratio=ratio, impl="np"
-            ).collect()
-        }
-        two = {
-            (r["id"], r["block"])
-            for r in S.kmeans_assign_topm(
-                base, cents, m=m, ratio=ratio, impl="np2l"
-            ).collect()
-        }
-        assert flat == two, (m, ratio)
-    # router invariants: dense 0-based cells, every cell non-empty,
-    # coarse rows = number of live cells
-    coarse, cell_of = S.centroid_router(
-        cents, sizing.coarse_k_for(len(cents))
-    )
-    assert cell_of.min() == 0
-    assert cell_of.max() == len(coarse) - 1
-    assert set(np.unique(cell_of)) == set(range(len(coarse)))
-    # auto-dispatch: k >= threshold routes through the 2l spelling
     calls = []
-    real = S.kmeans_assign_topm_2l
+    real = S.centroid_router
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(S, "kmeans_assign_topm_2l", spy)
-    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 24)
-    S.kmeans_assign_topm(base, cents, m=4, ratio=1.5, impl="auto")
-    assert calls, "auto did not dispatch to the two-level assign"
-    # and BELOW the threshold auto stays flat
-    calls.clear()
-    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 25)
-    S.kmeans_assign_topm(base, cents, m=4, ratio=1.5, impl="auto")
-    assert not calls
+    monkeypatch.setattr(S, "centroid_router", spy)
+
+    def blocks(m, ratio):
+        return {
+            (r["id"], r["block"])
+            for r in S.kmeans_assign_topm(
+                base, cents, m=m, ratio=ratio
+            ).collect()
+        }
+
+    for m, ratio in ((4, 1.5), (1, None)):
+        monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 25)
+        flat = blocks(m, ratio)
+        assert not calls, "k below the threshold fitted a router"
+        monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 24)
+        two = blocks(m, ratio)
+        assert calls, "k at the threshold did not route"
+        calls.clear()
+        assert flat == two, (m, ratio)
+    # router invariants: dense 0-based cells, every cell non-empty,
+    # coarse rows = number of live cells
+    coarse, cell_of = real(cents, sizing.coarse_k_for(len(cents)))
+    assert cell_of.min() == 0
+    assert cell_of.max() == len(coarse) - 1
+    assert set(np.unique(cell_of)) == set(range(len(coarse)))
 
 
 def test_twolevel_fit_assign_matches_flat_and_dispatches(
     spark, monkeypatch
 ):
-    """Round-13 fit-loop follow-through: the nearest-only two-level
-    assign (kmeans_assign_np_2l) must emit the identical (cluster,
-    sqdist) per id as the flat GEMM on the fixture (the coarse probe
-    covers the nearest cell — same condition the pair-assign test
-    pins), Lloyd's under the two-level assign lands on the same
-    centroids as the flat fit, and kmeans_assign's auto dispatch
-    crosses to the two-level path at the sizing threshold."""
+    """Round-13 fit-loop follow-through: the nearest-only assign on
+    the two-level index must emit the identical (cluster, sqdist) per
+    id as the one-cell index on the fixture (the coarse probe covers
+    the nearest cell — same condition the pair-assign test pins), and
+    Lloyd's on the two-level index lands on the same centroids as the
+    one-cell fit, with the driver and distributed loops agreeing."""
     from database_join_spark.catalog import table
     from database_join_spark.operators import similarity as S
     from database_join_spark.plans import sizing
@@ -1379,38 +1430,19 @@ def test_twolevel_fit_assign_matches_flat_and_dispatches(
         F.col("vec_id").alias("id"),
         F.expr(S._quant("embedding")).alias("qv"),
     )
-    flat = {
-        r["id"]: (r["cluster"], r["sqdist"])
-        for r in S.kmeans_assign(base, cents, impl="np").collect()
-    }
-    two = {
-        r["id"]: (r["cluster"], r["sqdist"])
-        for r in S.kmeans_assign(base, cents, impl="np2l").collect()
-    }
-    assert flat == two
-    # the whole FIT under the two-level assign lands on the same
-    # centroids as the flat-GEMM fit on the fixture
-    _, cents_np, _ = S.kmeans_fit(
-        emb, k=12, iterations=2, assign_impl="np"
-    )
-    _, cents_2l, _ = S.kmeans_fit(
-        emb, k=12, iterations=2, assign_impl="np2l"
-    )
-    assert cents_2l == cents_np
-    # auto-dispatch: k >= threshold routes the fit-loop assign
-    # through the two-level spelling, below it stays flat
-    calls = []
-    real = S.kmeans_assign_np_2l
 
-    def spy(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
+    def nearest():
+        return {
+            r["id"]: (r["cluster"], r["sqdist"])
+            for r in S.kmeans_assign(base, cents).collect()
+        }
 
-    monkeypatch.setattr(S, "kmeans_assign_np_2l", spy)
-    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 24)
-    S.kmeans_assign(base, cents, impl="auto")
-    assert calls, "auto did not dispatch the nearest-only 2l assign"
-    calls.clear()
-    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 25)
-    S.kmeans_assign(base, cents, impl="auto")
-    assert not calls
+    flat = nearest()
+    _, cents_flat, _ = S.kmeans_fit(emb, k=12, iterations=2)
+    monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 12)
+    assert nearest() == flat
+    for mode in ("driver", "distributed"):
+        _, cents_2l, _ = S.kmeans_fit(
+            emb, k=12, iterations=2, fit_mode=mode
+        )
+        assert cents_2l == cents_flat, mode
