@@ -10,12 +10,19 @@ cartesian products. This is the reviewable artifact behind the
 regressions show up as a diff in PLANS.md.
 
 Usage: python scripts/plan_audit.py > PLANS.md
+
+Building the queries records statistics; they go to a temporary copy
+of the statistics catalog, so the run leaves STATS_CACHE.json as it
+was.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -59,7 +66,25 @@ def audit(name, spec, spark) -> dict:
     }
 
 
+def _use_stats_copy(tmp_dir: str) -> None:
+    """Point the statistics catalog (and, through the env var, any
+    subprocess) at a copy of the committed one under ``tmp_dir``."""
+    from database_join_spark.plans import stats
+
+    copy = Path(tmp_dir) / "STATS_CACHE.json"
+    if stats.DEFAULT_PATH.exists():
+        shutil.copyfile(stats.DEFAULT_PATH, copy)
+    stats.DEFAULT_PATH = copy
+    os.environ["SPARK_GRAFT_STATS_PATH"] = str(copy)
+
+
 def main() -> None:
+    with tempfile.TemporaryDirectory(prefix="plan-audit-") as tmp:
+        _use_stats_copy(tmp)
+        _audit_all()
+
+
+def _audit_all() -> None:
     registry = load_all()
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
