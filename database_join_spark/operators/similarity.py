@@ -28,6 +28,7 @@ that fits one scorer chunk).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame
@@ -626,11 +627,13 @@ def _assign_frame(
 #: then literal-SQL k·dim centroid tree plus two tiny jobs, pure
 #: fixed overhead at sample scale. 2²² int64 cells = 32 MiB collected —
 #: e.g. 65k rows at dim 64 (k ≈ 650 under the 100-rows/centroid
-#: rule) — far inside driver memory and maxResultSize; above the
-#: budget the distributed loop is unchanged. The numpy loop is
-#: BIT-IDENTICAL (pinned, tests/test_pipeline.py): same k-lowest-id
-#: seed, the same assign kernel (:func:`_assign_rows` at m=1), and
-#: the same floor-div centroid update the distributed path computes.
+#: rule) — far inside driver memory and maxResultSize. An input over
+#: the budget (or a k·dim centroid matrix over it) runs the
+#: distributed loop; nothing else selects between the two. The numpy
+#: loop is BIT-IDENTICAL (pinned, tests/test_pipeline.py): same
+#: k-lowest-id seed, the same assign kernel (:func:`_assign_rows` at
+#: m=1), and the same floor-div centroid update the distributed path
+#: computes.
 DRIVER_FIT_MAX_CELLS = 1 << 22
 
 
@@ -642,7 +645,7 @@ def _kmeans_lloyd_np(
 ) -> tuple[list[list[int]], list[int]]:
     """Driver-side exact-int64 Lloyd loop over collected (id, qv)
     rows — the bit-identical small-sample spelling of the
-    distributed loop in :func:`kmeans_fit` (see
+    distributed loop in :func:`_fit_centroids` (see
     :data:`DRIVER_FIT_MAX_CELLS`). Returns (centroids, history)."""
     import numpy as np
 
@@ -671,23 +674,12 @@ def _kmeans_lloyd_np(
     return [[int(c) for c in row] for row in cents], history
 
 
-#: :func:`_driver_fit_rows` sentinels — distinguish "the input was
-#: collected and exceeds the row cap" (size PROVEN > max_rows ≥ k
-#: whenever k·dim fits the budget) from "no collect was attempted"
-#: (k·dim alone over budget, or the caller's n_hint proves the input
-#: over the cap) so callers with a minimum-rows decision to make
-#: (semdedup_pairs' degenerate-sample guard) know whether the probe
-#: already answered it.
-_PROBE_OVER_BUDGET = "over_budget"
-_PROBE_SKIPPED = "skipped"
-
-
 def _driver_fit_rows(
     base: DataFrame,
     k: int,
     n_hint: int | None = None,
     dim_hint: int | None = None,
-) -> list | str:
+) -> list | None:
     """Bounded driver-fit probe (see :data:`DRIVER_FIT_MAX_CELLS`):
     collect the fit input iff it provably fits the driver cell
     budget. One ``head()`` job for the dimension plus at most one
@@ -708,10 +700,12 @@ def _driver_fit_rows(
     dim-discovery job is skipped: the row cap is computed from the
     hint and emptiness falls out of the collect itself. Unlike
     n_hint it is checked: the collected rows' real dim re-derives
-    the cap, and rows over it return :data:`_PROBE_OVER_BUDGET`.
+    the cap, and rows over it are not collected for the driver.
 
-    Returns the collected rows (possibly empty), or
-    :data:`_PROBE_OVER_BUDGET` / :data:`_PROBE_SKIPPED`.
+    Returns the collected rows (possibly empty), or None when the
+    input was not collected (over the cap, or never attempted).
+    Called only by :func:`_fit_centroids`, which runs the
+    distributed loop on None.
     """
     if dim_hint is not None:
         dim = max(1, dim_hint)
@@ -720,20 +714,16 @@ def _driver_fit_rows(
         if not head:
             return []
         dim = max(1, len(head[0].qv))
-    if k * dim > DRIVER_FIT_MAX_CELLS:
-        return _PROBE_SKIPPED
     max_rows = DRIVER_FIT_MAX_CELLS // dim
-    if n_hint is not None and n_hint > max_rows:
-        return _PROBE_SKIPPED
+    if k * dim > DRIVER_FIT_MAX_CELLS or (
+        n_hint is not None and n_hint > max_rows
+    ):
+        return None
     rows = base.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        return _PROBE_OVER_BUDGET
-    if rows and len(rows[0].qv) != dim:
-        # A wrong dim_hint sized the cap: re-check the rows against
-        # the cap of the real dim, so a too-small hint cannot hand
-        # the driver fit more cells than the budget.
-        if len(rows) > DRIVER_FIT_MAX_CELLS // max(1, len(rows[0].qv)):
-            return _PROBE_OVER_BUDGET
+    # Also the cap of the rows' real dim, so a too-small dim_hint
+    # cannot hand the driver fit more cells than the budget.
+    if rows and len(rows) > DRIVER_FIT_MAX_CELLS // max(dim, len(rows[0].qv)):
+        return None
     return rows
 
 
@@ -744,7 +734,6 @@ def kmeans_fit(
     k: int = 10,
     iterations: int = 5,
     track_inertia: bool = False,
-    fit_mode: str = "auto",
     n_hint: int | None = None,
     dim_hint: int | None = None,
 ) -> tuple[DataFrame, list[list[int]], list[int]]:
@@ -767,23 +756,25 @@ def kmeans_fit(
     centroid coordinate = floor mean ``Σq DIV n`` (exact int64 to
     ~10¹¹ members per cluster at q7 scale); a cluster that loses
     all members keeps its previous centroid. Init = the k
-    lowest-id vectors (deterministic, no RNG). A sample that fits
+    lowest-id vectors (deterministic, no RNG). An input that fits
     :data:`DRIVER_FIT_MAX_CELLS` runs the same loop on the driver
-    with the same assign kernel, so both modes land on the same
-    centroids at every k.
+    with the same assign kernel, so both land on the same centroids
+    at every k. An input of fewer than k rows is its own fit: every
+    row is a centroid (Lloyd's fixed point, inertia 0).
 
     Returns (final assignment DataFrame, final centroids, inertia
     history — empty unless ``track_inertia``, which adds one extra
     job per iteration and exists for the monotone-objective
     property test; the production path leaves it off). An empty
-    input returns an empty assignment and no centroids, except
-    under ``fit_mode='driver'``, which raises.
+    input returns an empty assignment and no centroids.
 
     ``n_hint`` (round 14, ADVICE r13): the caller's known row count
     for ``df`` — when it proves the input over the driver-fit row
     cap the probe's bounded collect is skipped outright, so large
     fits pay one head() job instead of head + a ≤32 MiB collect.
     A hint, never a limit: absent or small hints change nothing.
+    ``dim_hint``: the known vector dimensionality, which skips that
+    head() job (see :func:`_driver_fit_rows`).
     """
     base, cents, history = _fit_centroids(
         df,
@@ -792,7 +783,6 @@ def kmeans_fit(
         k=k,
         iterations=iterations,
         track_inertia=track_inertia,
-        fit_mode=fit_mode,
         n_hint=n_hint,
         dim_hint=dim_hint,
     )
@@ -806,71 +796,48 @@ def _fit_centroids(
     k: int = 10,
     iterations: int = 5,
     track_inertia: bool = False,
-    fit_mode: str = "auto",
     n_hint: int | None = None,
     dim_hint: int | None = None,
 ) -> tuple[DataFrame, list[list[int]], list[int]]:
     """:func:`kmeans_fit` minus the returned assignment — the
     centroids-only core, split out (round 14) for callers that
     discard the assignment (``semdedup_pairs`` blocks on its OWN
-    full-corpus frame). Returns (quantized persisted base,
-    centroids, inertia history) on every path."""
+    full-corpus frame). Returns (quantized base, centroids, inertia
+    history); fewer than k centroids means the input holds fewer
+    than k rows.
+
+    The fit runs on the driver when :func:`_driver_fit_rows` collects
+    the input, else as the distributed loop. Only the distributed
+    loop persists the base (through ``track_persist``, so the next
+    gated query's configure_session drains it): it reads the base
+    iterations + 1 times (the seed collect, then one assign + one
+    stats aggregation per iteration), and each read otherwise re-runs
+    the scan + sample filter + quantization. The driver fit reads the
+    base once, through the probe's collect, so caching it would only
+    cost the memory-store writes. A caller that keeps only the
+    centroids unpersists the returned base."""
     from database_join_spark.session import track_persist
 
-    # Persisted: the loop reads ``base`` iterations+1 times (one
-    # assign + one stats aggregation per iteration, plus the returned
-    # assignment) and each read otherwise re-runs the scan + sample
-    # filter + quantization from parquet — at the sampled-fit scale
-    # (fit_sample_mod keeps ~100·k rows) the cached frame is
-    # ~dim·8 B/row while the un-cached replay is a full-corpus scan
-    # per iteration. Routed through track_persist so the next gated
-    # query's configure_session drains it.
-    if fit_mode not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"fit_mode must be auto|driver|distributed, got {fit_mode!r}"
-        )
-    base = track_persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.expr(_quant(vec_col)).alias("qv"),
-        )
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.expr(_quant(vec_col)).alias("qv"),
     )
-    if fit_mode != "distributed":
-        # Bounded driver fit (round 13, see DRIVER_FIT_MAX_CELLS /
-        # _driver_fit_rows): if the input exceeds the cell budget the
-        # collect is abandoned (or, with n_hint / k·dim over budget,
-        # never attempted) and the distributed loop below runs
-        # unchanged (its cost at that scale dwarfs the probe's).
-        rows = _driver_fit_rows(
-            base, k, n_hint=n_hint, dim_hint=dim_hint
-        )
-        if isinstance(rows, list) and rows:
-            cents, history = _kmeans_lloyd_np(
-                rows, k, iterations, track_inertia
-            )
-            return base, cents, history
-        if fit_mode == "driver":
-            if isinstance(rows, list):
-                # Empty input under the strict mode used to fall
-                # through silently to the distributed seed/loop
-                # (ADVICE r13) — fail like the over-budget case does.
-                raise ValueError(
-                    "fit_mode='driver' on an empty input: nothing "
-                    "to fit"
-                )
-            raise ValueError(
-                f"fit_mode='driver' but input exceeds the driver "
-                f"cell budget ({rows}; "
-                f"DRIVER_FIT_MAX_CELLS={DRIVER_FIT_MAX_CELLS})"
-            )
+    rows = _driver_fit_rows(base, k, n_hint=n_hint, dim_hint=dim_hint)
+    if rows is not None:
+        if not rows:  # an empty input: no seed, nothing to fit
+            return base, [], []
+        cents, history = _kmeans_lloyd_np(rows, k, iterations, track_inertia)
+        return base, cents, history
+    base = track_persist(base)
     seed_rows = base.orderBy("id").limit(k).collect()
     cents = [list(r.qv) for r in sorted(seed_rows, key=lambda r: r.id)]
-    if not cents:  # an empty input: no seed, nothing to fit
-        return base, [], []
-    # Fewer rows than k → fewer seeds than the update loop iterates;
-    # clamp so the fit degenerates gracefully (every row its own
-    # cluster) instead of raising IndexError on cents[j].
-    k = min(k, len(cents))
+    if len(cents) < k:
+        # Fewer rows than k: every row is its own seed and its own
+        # nearest centroid at distance 0 — Lloyd's fixed point, so
+        # the loop would only repeat it (and an empty input has
+        # nothing to fit).
+        inertia = [0] * iterations if track_inertia and cents else []
+        return base, cents, inertia
     history: list[int] = []
     for _ in range(iterations):
         assigned = kmeans_assign(base, cents)
@@ -1192,17 +1159,6 @@ def _assign_rows(q, index, m, frac):
     )
 
 
-def _fallback_centroids(df: DataFrame, **kw) -> list[list[int]]:
-    """:func:`_fit_centroids` for ``semdedup_pairs``' sampled-fit
-    fallbacks: only the centroids are kept, so the persisted fit base
-    is released as soon as they are extracted, not at the next query's
-    drain. On the degenerate-sample branch that frees a whole-corpus
-    cache, and the blocking assign re-reads the source instead."""
-    fit_base, cents, _hist = _fit_centroids(df, **kw)
-    fit_base.unpersist()
-    return cents
-
-
 def semdedup_pairs(
     emb: DataFrame,
     k: int,
@@ -1213,7 +1169,6 @@ def semdedup_pairs(
     vec_col: str = "embedding",
     ratio: float | None = None,
     fit_sample_mod: int | None = None,
-    coarse_score: bool = False,
     n_hint: int | None = None,
     dim_hint: int | None = None,
 ) -> DataFrame:
@@ -1247,9 +1202,14 @@ def semdedup_pairs(
     lever; SEMDEDUP_PROBE.json's round-10 ``sampled_fit`` arm
     measures the fit-time/recall trade at 1M/k=100. Centroids are
     still bit-deterministic (the sample is a pure id function; the
-    k lowest-id sampled vectors seed). If the sample holds fewer
-    than k rows (corpus smaller than ~mod·k), the fit silently-wrong
-    failure mode is closed by falling back to the full-corpus fit.
+    k lowest-id sampled vectors seed). A sample with fewer than k
+    rows (corpus smaller than ~mod·k) would clamp k toward the sample
+    size and block against a degenerate centroid set — silently
+    wrong pairs instead of an error — so it falls back to the
+    full-corpus fit. Either way the fit is one :func:`_fit_centroids`
+    call per input, and its base is released as soon as the
+    centroids are out: only the centroids are needed here, since the
+    blocking assign runs on the full corpus.
 
     ``n_hint`` (round 13) is the caller's known corpus row count
     (e.g. the cached parquet-footer rowcount). When it proves the
@@ -1260,7 +1220,9 @@ def semdedup_pairs(
     block exchange, and the action is one Spark job of one task. A
     wrong small hint costs only parallelism (one bigger task), never
     correctness. An absent or large hint runs the chunking
-    machinery, and there the hint also sizes the blocks persist.
+    machinery, and there the hint also sizes the blocks persist. The
+    fit sees it only on the full corpus, where it lets a big corpus
+    skip the probe collect.
 
     ``dim_hint`` (round 14) is the caller's known embedding
     dimensionality (the cached ``parquet_list_dim`` statistic):
@@ -1268,98 +1230,29 @@ def semdedup_pairs(
     the per-run ``head(1)`` dim-discovery job — the sampled-fit
     common path then pays exactly ONE Spark job (the bounded
     collect) before the blocking assign. Absent hint: unchanged.
-
-    ``coarse_score=True`` switches the within-block scorer to the
-    two-tier int8/SGEMM pass (see :func:`_block_scorer`): the
-    pairwise sweep runs at float32 GEMM speed over int8 images with
-    an exact per-vector angular-error bound, and only coarse
-    survivors pay the exact int64 arithmetic — identical output by
-    construction (regression-pinned), aimed at the 1M wall the
-    sampled-fit probe measured as ~95% scorer.
     """
-    # A corpus smaller than ~mod·k can leave the hash sample with
-    # fewer than k rows; fitting on it would clamp k toward the
-    # sample size and the assign would block against a degenerate
-    # centroid set — silently wrong pairs instead of an error
-    # (ADVICE r10): a sample with < k rows falls back to the
-    # full-corpus fit. Round 14 folds that guard INTO the fit's own
-    # driver probe: the bounded collect the driver-side Lloyd fit
-    # needs anyway IS the guard's evidence (len(rows) < k ⟺ the old
-    # limit(k).count() < k), so the common path pays one collect
-    # instead of a separate count job + dim head + collect — and,
-    # because only the centroids are needed here (the blocking
-    # assign below runs on the FULL corpus), the assignment
-    # kmeans_fit would return is never built. Identical decisions,
-    # identical centroids, three fewer per-run driver round trips.
+    fit = functools.partial(
+        _fit_centroids,
+        id_col=id_col,
+        vec_col=vec_col,
+        k=k,
+        iterations=iterations,
+        dim_hint=dim_hint,
+    )
     if fit_sample_mod is not None and fit_sample_mod > 1:
-        fit_input = emb.filter(
+        sample = emb.filter(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(fit_sample_mod))
             == 0
         )
-        # No track_persist: unlike the fit loop, the sample frame is
-        # consumed exactly once (head + bounded collect) — caching
-        # its blocks bought nothing and cost the memory-store writes.
-        sbase = fit_input.select(
-            F.col(id_col).alias("id"),
-            F.expr(_quant(vec_col)).alias("qv"),
-        )
-        rows = _driver_fit_rows(sbase, k, dim_hint=dim_hint)
-        if isinstance(rows, list) and len(rows) >= k:
-            cents, _hist = _kmeans_lloyd_np(
-                rows, k, iterations, track_inertia=False
-            )
-        elif isinstance(rows, list):
-            # Degenerate sample (the ADVICE r10 guard): full-corpus
-            # fit, with the corpus rowcount hint forwarded so a big
-            # corpus skips the probe collect (ADVICE r13).
-            cents = _fallback_centroids(
-                emb,
-                id_col=id_col,
-                vec_col=vec_col,
-                k=k,
-                iterations=iterations,
-                n_hint=n_hint,
-                dim_hint=dim_hint,
-            )
-        elif rows == _PROBE_OVER_BUDGET:
-            # > max_rows ≥ k sampled rows (the probe only collects
-            # when k·dim fits the budget, so max_rows ≥ k): the
-            # guard provably passes — distributed fit on the sample,
-            # skipping the re-probe it would otherwise repeat.
-            cents = _fallback_centroids(
-                fit_input,
-                id_col=id_col,
-                vec_col=vec_col,
-                k=k,
-                iterations=iterations,
-                fit_mode="distributed",
-            )
-        else:
-            # Probe skipped without collecting (k·dim alone over the
-            # driver budget): sample size unknown — the explicit
-            # guard count is still required, exactly as before.
-            fit_guarded = fit_input
-            if fit_input.limit(k).count() < k:
-                fit_guarded = emb
-            cents = _fallback_centroids(
-                fit_guarded,
-                id_col=id_col,
-                vec_col=vec_col,
-                k=k,
-                iterations=iterations,
-            )
+        fit_base, cents, _hist = fit(sample)
+        fit_base.unpersist()
+        if len(cents) < k:  # the sample holds fewer than k rows
+            fit_base, cents, _hist = fit(emb, n_hint=n_hint)
+            fit_base.unpersist()
     else:
-        # The fit base stays cached here: it is the same plan as
-        # ``base`` below, so the blocking assign reads it.
-        _base, cents, _hist = _fit_centroids(
-            emb,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k,
-            iterations=iterations,
-            n_hint=n_hint,
-            dim_hint=dim_hint,
-        )
+        # The fit base stays: a distributed fit's cached base is the
+        # same plan as ``base`` below, so the blocking assign reads it.
+        _base, cents, _hist = fit(emb, n_hint=n_hint)
     base = emb.select(
         F.col(id_col).alias("id"), F.expr(_quant(vec_col)).alias("qv")
     )
@@ -1368,9 +1261,7 @@ def semdedup_pairs(
         # whole corpus has at most that many, so the census, the
         # blocks persist and the (block, ca, cb) exchange each have
         # one possible outcome. One task assigns and scores it all.
-        scored = _semdedup_one_task(
-            base, cents, m, ratio, threshold, coarse_score
-        )
+        scored = _semdedup_one_task(base, cents, m, ratio, threshold)
         return _pairs_above(scored, threshold)
     # Persisted: the blocks frame is consumed twice (the size census
     # below + the chunk-pair join), and without the cache boundary
@@ -1441,7 +1332,7 @@ def semdedup_pairs(
         )
     )
     scored = chunked.groupBy("block", "ca", "cb").applyInPandas(
-        _block_scorer(threshold, coarse=coarse_score), schema=_PAIR_SCHEMA
+        _block_scorer(threshold), schema=_PAIR_SCHEMA
     )
     return _pairs_above(scored, threshold)
 
@@ -1469,7 +1360,6 @@ def _semdedup_one_task(
     m: int,
     ratio: float | None,
     threshold: float,
-    coarse: bool,
 ) -> DataFrame:
     """:func:`semdedup_pairs` for a corpus that fits one scorer chunk,
     as one ``mapInArrow`` task over ``base.coalesce(1)``: the top-m
@@ -1484,7 +1374,7 @@ def _semdedup_one_task(
 
     frac = None if ratio is None else _snap_ratio(ratio)
     index = _assign_index(cents)
-    pairs = _pair_scorer(threshold, coarse)
+    pairs = _pair_scorer(threshold)
 
     def run(batches):
         import pyarrow as pa
@@ -1536,12 +1426,12 @@ SEMDEDUP_BLOCKS_PERSIST_MAX_BYTES = int(
 )
 
 
-#: Output columns of the block scorers, and their Spark schema.
+#: Output columns of the block scorer, and their Spark schema.
 _PAIR_COLS = ("id_a", "id_b", "dot", "n2_a", "n2_b")
 _PAIR_SCHEMA = ", ".join(f"{c} long" for c in _PAIR_COLS)
 
 
-def _block_scorer(threshold: float, coarse: bool = False):
+def _block_scorer(threshold: float):
     """Per-chunk-pair pairwise scorer for :func:`semdedup_pairs` — a
     tiled numpy GEMM over quantized vectors, run behind
     ``applyInPandas`` (Arrow-batched; one task per (block, ca, cb)
@@ -1561,7 +1451,7 @@ def _block_scorer(threshold: float, coarse: bool = False):
     shuffle moves each vector m times (the blocking), not the pair
     mass — strictly less wire than the join spelling.
 
-    Exactness is NOT sacrificed. The exact scorer runs two passes:
+    Exactness is NOT sacrificed. The scorer runs two passes:
     pass 1 is a float64 GEMM over the row-normalized vectors, kept
     where its cosine clears ``threshold − 1e-9``; pass 2 recomputes
     the survivors' dots in int64 (``einsum``, exact to 2^63 at any
@@ -1573,30 +1463,10 @@ def _block_scorer(threshold: float, coarse: bool = False):
     are the SAME int64s the JVM fold produces, and the cosine +
     threshold decision still happens Spark-side — so the
     rounding/tiebreak contract pinned by tests is unchanged.
-
-    ``coarse=True`` (round 11, VERDICT r10 #5) runs a two-tier
-    score: tier 1 re-quantizes each vector to int8 (per-vector max
-    scaling — cosine is invariant to per-vector positive scale) and
-    does the pairwise pass as a float32 SGEMM, which is BIT-EXACT
-    over int8-valued inputs (products ≤ 127² and 64-term sums ≤
-    1.04e6, inside float32's 2^24 integer range) at twice DGEMM's
-    flop rate and half its tile memory traffic; tier 2 gathers ONLY
-    the tier-1 survivors and emits their exact int64 fixed-point
-    (dot, n2) — the same numbers the exact path produces, so the
-    Spark-side cosine/threshold contract is unchanged. Recall is
-    1.0 BY CONSTRUCTION, not measurement: each vector's true
-    angular error to its int8 image is computed exactly
-    (θ_v = arccos⟨q, q8⟩/|q||q8|), and a pair survives tier 1 iff
-    its int8 cosine clears cos(arccos(threshold) + θ_a + θ_b) —
-    the tightest angle the true pair could have moved by. (The
-    verdict's literal int8×int8→int32 GEMM is NOT the numpy
-    spelling: numpy integer matmul bypasses BLAS entirely and is
-    ~50× slower than SGEMM; float32 over int8 values is the same
-    exactness story at BLAS speed.)
     """
     import numpy as np
 
-    pairs = _pair_scorer(threshold, coarse)
+    pairs = _pair_scorer(threshold)
 
     def _prep(pdf, mask):
         ids = pdf["id"].to_numpy()[mask]
@@ -1627,7 +1497,7 @@ def _block_scorer(threshold: float, coarse: bool = False):
     return score
 
 
-def _pair_scorer(threshold: float, coarse: bool = False):
+def _pair_scorer(threshold: float):
     """Array core of :func:`_block_scorer`: ``pairs(ids_a, qa, ids_b,
     qb, triangle)`` scores the quantized rows ``qa`` (int64, with ids
     ``ids_a``) against ``qb`` — the upper triangle of ``qa`` against
@@ -1639,30 +1509,6 @@ def _pair_scorer(threshold: float, coarse: bool = False):
     import numpy as np
 
     slack = threshold - 1e-9
-
-    def _q8(q, n2):
-        """Per-vector int8 image (float32-typed for SGEMM) + the
-        exact angular error bound to the original. All dots here
-        are ≤ 64·1e7·127 ≈ 8e10 — exact in float64."""
-        amax = np.abs(q).max(axis=1, keepdims=True).astype(np.float64)
-        amax[amax == 0] = 1.0
-        q8 = np.rint(q * (127.0 / amax)).astype(np.float32)
-        n2_8 = np.einsum("ij,ij->i", q8, q8, dtype=np.float64)
-        n2_8[n2_8 == 0] = 1.0
-        dot_q8 = np.einsum(
-            "ij,ij->i", q.astype(np.float64), q8.astype(np.float64)
-        )
-        den = np.sqrt(n2.astype(np.float64) * n2_8)
-        # a zero vector is its own int8 image (θ = 0); a NaN θ would
-        # make th_b.max() NaN and drop every pair of the chunk
-        cos_v = np.clip(
-            np.divide(dot_q8, den, out=np.ones_like(den), where=den > 0),
-            -1.0,
-            1.0,
-        )
-        # +1e-7: swallows the float64 rounding of the θ computation
-        theta = np.arccos(cos_v) + 1e-7
-        return q8, 1.0 / np.sqrt(n2_8), theta
 
     def _unit(q, n2):
         """Row-normalized float64 image; a zero vector stays zero, so
@@ -1681,40 +1527,14 @@ def _pair_scorer(threshold: float, coarse: bool = False):
         n2b = (
             n2a if triangle else np.einsum("ij,ij->i", qb, qb)
         )
-        nb = len(ids_b)
-        if coarse:
-            qa8, inv8a, th_a = _q8(qa, n2a)
-            qb8, inv8b, th_b = (
-                (qa8, inv8a, th_a) if triangle else _q8(qb, n2b)
-            )
-            thr_ang = np.arccos(np.clip(slack, -1.0, 1.0))
-            th_b_max = float(th_b.max()) if len(th_b) else 0.0
-            inv8a32 = inv8a.astype(np.float32)
-            inv8b32 = inv8b.astype(np.float32)
-        else:
-            ua = _unit(qa, n2a)
-            ub = ua if triangle else _unit(qb, n2b)
-        # float32 tiles are half the f64 cell size → 2× tile rows
-        rows = max(
-            1, (2 * _GEMM_TILE_CELLS if coarse else _GEMM_TILE_CELLS) // nb
-        )
+        ua = _unit(qa, n2a)
+        ub = ua if triangle else _unit(qb, n2b)
+        rows = max(1, _GEMM_TILE_CELLS // len(ids_b))
         out = []
         for i0 in range(0, len(ids_a), rows):
             i1 = min(i0 + rows, len(ids_a))
-            if coarse:
-                g8 = qa8[i0:i1] @ qb8.T  # SGEMM, exact ints < 2^24
-                cos8 = g8 * inv8a32[i0:i1, None] * inv8b32[None, :]
-                # per-row conservative threshold: the true pair's
-                # angle moved by at most θ_a + θ_b from the int8
-                # angle; −1e-5 covers the two float32 normalization
-                # multiplies (relative error ~2e-7 on cos ≤ 1)
-                adj = np.cos(
-                    np.minimum(np.pi, thr_ang + th_a[i0:i1] + th_b_max)
-                ).astype(np.float32) - np.float32(1e-5)
-                hit = cos8 >= adj[:, None]
-            else:
-                # pass 1: float64 cosines, off by ~dim·eps ≪ the slack
-                hit = ua[i0:i1] @ ub.T >= slack  # (i1-i0) × nb
+            # pass 1: float64 cosines, off by ~dim·eps ≪ the slack
+            hit = ua[i0:i1] @ ub.T >= slack  # (i1-i0) × len(ids_b)
             ii, jj = np.nonzero(hit)
             ii += i0
             if triangle:

@@ -139,7 +139,7 @@ def main() -> None:
 
     # score — the Arrow pair sweep (exact tier, the shipped default)
     scored = chunked.groupBy("block", "ca", "cb").applyInPandas(
-        S._block_scorer(THRESHOLD, coarse=False),
+        S._block_scorer(THRESHOLD),
         schema="id_a long, id_b long, dot long, n2_a long, n2_b long",
     ).persist()
     phase("score", scored.count)

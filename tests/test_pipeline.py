@@ -643,22 +643,40 @@ def test_kmeans_assign_topm_matches_numpy_stable_argsort(spark):
         kmeans_assign_topm(base, cents, m=m, ratio=1.1)
 
 
-def test_kmeans_fit_clamps_k_to_row_count(spark):
+def test_kmeans_fit_clamps_k_to_row_count(spark, monkeypatch):
     """k larger than the input row count must degrade gracefully
     (every row its own cluster) instead of IndexError in the
-    centroid-update loop."""
+    centroid-update loop. The distributed loop lands on the driver
+    fit's centroids and inertia history without iterating: fewer
+    seeds than k are Lloyd's fixed point, so the fit costs the
+    probe's dim ``head`` and the seed collect, no per-iteration
+    jobs."""
     from database_join_spark.catalog import table
-    from database_join_spark.operators.similarity import kmeans_fit
+    from database_join_spark.operators import similarity as S
+    from tests.test_catalog import jobs_started
 
     emb = table(spark, SF_DIR, "embeddings").filter("vec_id < 3")
-    assigned, cents, _ = kmeans_fit(emb, k=10, iterations=2)
+    assigned, cents, hist = S.kmeans_fit(
+        emb, k=10, iterations=2, track_inertia=True
+    )
     assert len(cents) == 3
+    assert hist == [0, 0]
     rows = assigned.collect()
     assert len(rows) == 3
     assert all(r["sqdist"] == 0 for r in rows)  # each row sits on its seed
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 0)  # distributed loop
+    out = []
+    jobs = jobs_started(
+        spark,
+        lambda: out.append(
+            S.kmeans_fit(emb, k=10, iterations=2, track_inertia=True)
+        ),
+    )
+    assert jobs == 2
+    assert out[0][1:] == (cents, hist)
 
 
-def test_kmeans_fit_driver_bit_parity_with_distributed(spark):
+def test_kmeans_fit_driver_bit_parity_with_distributed(spark, monkeypatch):
     """The bounded driver-side Lloyd loop (round 13,
     DRIVER_FIT_MAX_CELLS — the fit-overhead fix measured in
     SEMDEDUP_SF01_WALL_PROBE.json) must land on BIT-IDENTICAL
@@ -667,23 +685,19 @@ def test_kmeans_fit_driver_bit_parity_with_distributed(spark):
     tie break == array_position(array_min), same floor-div update,
     empty clusters keeping their previous centroid."""
     from database_join_spark.catalog import table
-    from database_join_spark.operators.similarity import kmeans_fit
+    from database_join_spark.operators import similarity as S
 
     emb = table(spark, SF_DIR, "embeddings")
-    for k, iters in [(10, 3), (24, 2)]:
-        _, cd, hd = kmeans_fit(
-            emb, k=k, iterations=iters, track_inertia=True,
-            fit_mode="driver",
-        )
-        _, cs, hs = kmeans_fit(
-            emb, k=k, iterations=iters, track_inertia=True,
-            fit_mode="distributed",
-        )
-        assert cd == cs
-        assert hd == hs
-    # an unknown mode must raise, not silently pick a path
-    with pytest.raises(ValueError, match="fit_mode must be"):
-        kmeans_fit(emb, k=4, iterations=1, fit_mode="gpu")
+
+    def fits():  # (centroids, inertia history) per (k, iterations)
+        return [
+            S.kmeans_fit(emb, k=k, iterations=it, track_inertia=True)[1:]
+            for k, it in [(10, 3), (24, 2)]
+        ]
+
+    driver = fits()
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 0)  # distributed loop
+    assert fits() == driver
 
 
 def test_driver_fit_probe_contract(spark):
@@ -694,10 +708,8 @@ def test_driver_fit_probe_contract(spark):
       ~0.7 GB at k=110k/dim=768 — only to fall back anyway);
     - an ``n_hint`` proving the input over the row cap skips the
       collect outright (large fits pay one head() job);
-    - a small input collects, an over-cap input reports over-budget,
-      an empty input reports an empty list;
-    - fit_mode='driver' on an empty input raises (it used to fall
-      through silently to the distributed seed/loop);
+    - a small input collects, an over-cap input is not collected
+      (None), an empty input gives an empty list;
     - an honest n_hint leaves kmeans_fit's centroids bit-identical.
     """
     from pyspark.sql import functions as F
@@ -712,11 +724,11 @@ def test_driver_fit_probe_contract(spark):
     )
     # dim=64 → k·dim over budget at k > 2^22/64
     k_big = S.DRIVER_FIT_MAX_CELLS // 64 + 1
-    assert S._driver_fit_rows(base, k_big) == S._PROBE_SKIPPED
+    assert S._driver_fit_rows(base, k_big) is None
     # n_hint over the row cap: skipped without a collect
     assert (
         S._driver_fit_rows(base, 10, n_hint=S.DRIVER_FIT_MAX_CELLS)
-        == S._PROBE_SKIPPED
+        is None
     )
     # small input: collected (the fixture is 500 rows at dim 64)
     rows = S._driver_fit_rows(base, 10)
@@ -724,24 +736,19 @@ def test_driver_fit_probe_contract(spark):
     # honest hint == no hint
     rows_h = S._driver_fit_rows(base, 10, n_hint=500)
     assert isinstance(rows_h, list) and len(rows_h) == 500
-    # over-cap input: over-budget sentinel (shrink the budget so the
+    # over-cap input: not collected (shrink the budget so the
     # fixture itself overflows the row cap)
     import database_join_spark.operators.similarity as sim
 
     old = sim.DRIVER_FIT_MAX_CELLS
     try:
         sim.DRIVER_FIT_MAX_CELLS = 64 * 100  # cap = 100 rows
-        assert S._driver_fit_rows(base, 2) == S._PROBE_OVER_BUDGET
+        assert S._driver_fit_rows(base, 2) is None
     finally:
         sim.DRIVER_FIT_MAX_CELLS = old
-    # empty input: empty list from the probe; strict driver mode raises
+    # empty input: empty list from the probe
     empty = base.filter("id < 0")
     assert S._driver_fit_rows(empty, 10) == []
-    with pytest.raises(ValueError, match="empty input"):
-        S.kmeans_fit(
-            emb.filter("vec_id < 0"), k=4, iterations=1,
-            fit_mode="driver",
-        )
     # n_hint plumbing through kmeans_fit: same centroids either way
     _, c0, h0 = S.kmeans_fit(emb, k=10, iterations=2, track_inertia=True)
     _, c1, h1 = S.kmeans_fit(
@@ -762,18 +769,15 @@ def test_driver_fit_probe_contract(spark):
     )
     assert c0 == c2 and h0 == h2
     # k·dim_hint over budget: skipped with zero jobs
-    assert (
-        S._driver_fit_rows(base, k_big, dim_hint=dim)
-        == S._PROBE_SKIPPED
-    )
+    assert S._driver_fit_rows(base, k_big, dim_hint=dim) is None
 
 
 def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
     """A too-small ``dim_hint`` inflates the probe's row cap; the
     collected rows' real dim must re-derive it, so the 500 dim-64
     fixture rows that fit a dim-8 cap of 800 but not the real cap
-    of 100 report over-budget, and the fit and the pairs come out as
-    with the right hint."""
+    of 100 are not handed to the driver fit, and the fit and the
+    pairs come out as with the right hint."""
     from database_join_spark.catalog import table
     from database_join_spark.operators import similarity as S
 
@@ -783,8 +787,8 @@ def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
         F.expr(S._quant("embedding")).alias("qv"),
     )
     monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 100)
-    assert S._driver_fit_rows(base, 2, dim_hint=8) == S._PROBE_OVER_BUDGET
-    assert S._driver_fit_rows(base, 2, dim_hint=64) == S._PROBE_OVER_BUDGET
+    assert S._driver_fit_rows(base, 2, dim_hint=8) is None
+    assert S._driver_fit_rows(base, 2, dim_hint=64) is None
 
     def fit_and_pairs(dim_hint):
         _, cents, _ = S._fit_centroids(
@@ -805,27 +809,39 @@ def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
 
 
 def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
-    """semdedup_pairs keeps only the centroids of a sampled-fit
-    fallback: the persisted fit base ``_fit_centroids`` returns must
-    be uncached once they are extracted, with the pairs unchanged.
-    The over-budget fallback fits on the distributed loop, whose
-    returned frame must be that persisted base too (not an
-    assignment over it), so no cached RDD outlives the call."""
+    """semdedup_pairs keeps only the centroids of a sampled fit: every
+    fit base ``_fit_centroids`` returns must be uncached once they are
+    extracted, no cached RDD may outlive the call, and the pairs must
+    be the full fit's wherever the sample holds fewer than k rows.
+    Three sampled-fit outcomes: a driver-collected degenerate sample
+    (two fit bases: sample, then corpus), a sample over the driver
+    row cap (the distributed loop), and a probe skipped because k·dim
+    alone is over the budget (the distributed loop's seed collect
+    finds the degenerate sample; then the corpus fit)."""
     from pyspark import StorageLevel
 
     from database_join_spark.catalog import table
     from database_join_spark.operators import similarity as S
+    from database_join_spark.session import configure_session
 
+    # release frames earlier tests cached: unpersisting a fit base
+    # also uncaches an equal plan someone else cached
+    configure_session(spark)
     emb = table(spark, SF_DIR, "embeddings")
 
     def pairs(**kw):
+        # n_hint keeps the blocks in the one-task path, which caches
+        # nothing of its own
         return sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
             for r in S.semdedup_pairs(
-                emb, k=10, iterations=3, m=4, threshold=0.4, **kw
+                emb, k=10, iterations=3, m=4, threshold=0.4, n_hint=500,
+                **kw,
             ).collect()
         )
 
+    full = pairs()
+    assert full, "fixtures must plant semantic dups"
     fit_bases = []
     stock_fit = S._fit_centroids
 
@@ -835,34 +851,42 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(S, "_fit_centroids", spy_fit)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    def released_pairs(n_bases, **kw):
+        """Pairs of one call, which must fit ``n_bases`` times and
+        leave every fit base uncached."""
+        fit_bases.clear()
+        before = persistent().size()
+        got = pairs(**kw)
+        assert persistent().size() == before, kw
+        assert len(fit_bases) == n_bases, kw
+        for fb in fit_bases:
+            assert fb.columns == ["id", "qv"]
+            assert not fb.is_cached
+            assert fb.storageLevel == StorageLevel.NONE
+        return got
+
     # a 1-in-1e9 sample holds fewer than k rows: the degenerate-sample
     # fallback fits the full corpus
-    degenerate = pairs(fit_sample_mod=10**9)
-    assert len(fit_bases) == 1
-    assert not fit_bases[0].is_cached
-    assert fit_bases[0].storageLevel == StorageLevel.NONE
+    assert released_pairs(2, fit_sample_mod=10**9) == full
     # over budget: a 100-row cap under the ~250-row 1-in-2 sample
-    # sends the fit to the distributed loop; n_hint keeps the blocks
-    # in the one-task path, which caches nothing of its own
+    # sends the sample fit to the distributed loop
     monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 100)
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = persistent().size()
-    over = pairs(fit_sample_mod=2, n_hint=500)
-    assert persistent().size() == before
-    assert len(fit_bases) == 2
-    assert fit_bases[1].columns == ["id", "qv"]
-    assert not fit_bases[1].is_cached
-    assert over, "fixtures must plant semantic dups"
-    monkeypatch.setattr(S, "_fit_centroids", stock_fit)
-    assert degenerate == pairs()
-    assert degenerate, "fixtures must plant semantic dups"
+    assert released_pairs(1, fit_sample_mod=2)
+    # probe skipped: k·dim = 640 cells over a 320-cell budget; both
+    # the degenerate sample and the corpus fit run distributed
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 5)
+    assert released_pairs(2, fit_sample_mod=10**9) == full
 
 
-def test_empty_embeddings_give_no_pairs_and_no_centroids(spark):
+def test_empty_embeddings_give_no_pairs_and_no_centroids(
+    spark, monkeypatch
+):
     """An empty embeddings frame is a valid input: semdedup_pairs
     returns zero pairs with or without a row-count hint (one-task
     and census paths), kmeans_fit an empty assignment and no
-    centroids — only fit_mode='driver' refuses it."""
+    centroids, on the driver fit and on the distributed loop."""
     from database_join_spark.operators import similarity as S
 
     emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
@@ -871,15 +895,16 @@ def test_empty_embeddings_give_no_pairs_and_no_centroids(spark):
             emb, k=10, iterations=3, m=4, threshold=0.4, n_hint=n_hint
         ).collect()
         assert got == [], n_hint
-    for mode in ("auto", "distributed"):
-        assigned, cents, hist = S.kmeans_fit(
-            emb, k=4, iterations=2, fit_mode=mode
-        )
-        assert cents == [] and hist == []
-        assert assigned.collect() == []
-        assert assigned.columns == ["id", "qv", "cluster", "sqdist"]
-    with pytest.raises(ValueError, match="empty input"):
-        S.kmeans_fit(emb, k=4, iterations=1, fit_mode="driver")
+    for budget in (S.DRIVER_FIT_MAX_CELLS, 0):  # driver, distributed
+        monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", budget)
+        for dim_hint in (None, 64):
+            assigned, cents, hist = S.kmeans_fit(
+                emb, k=4, iterations=2, track_inertia=True,
+                dim_hint=dim_hint,
+            )
+            assert cents == [] and hist == [], (budget, dim_hint)
+            assert assigned.collect() == []
+            assert assigned.columns == ["id", "qv", "cluster", "sqdist"]
 
 
 # --------------------------------------------------------------------------
@@ -938,10 +963,9 @@ def test_semdedup_chunk_split_equals_unchunked(spark, monkeypatch):
     # the n_hint one-task path (numpy assign + score in one mapInArrow
     # task when the corpus provably fits one chunk) must emit the
     # identical pair set and cosines as the census-driven machinery,
-    # under adaptive probing and the coarse scorer too
+    # under adaptive probing too
     assert pairs(n_hint=500) == base
-    for kw in ({"ratio": 1.5}, {"coarse_score": True}):
-        assert pairs(n_hint=500, **kw) == pairs(**kw), kw
+    assert pairs(n_hint=500, ratio=1.5) == pairs(ratio=1.5)
     monkeypatch.setattr(S, "SEMDEDUP_TARGET_CHUNK", 40)
     forced = pairs()
     assert forced == base
@@ -1063,41 +1087,40 @@ def test_block_scorer_exact_against_int64_all_pairs():
         assert keep[i, j], (i, j, cos[i, j])
     pos = {int(v): i for i, v in enumerate(ids)}
 
-    for coarse in (False, True):
-        score = _block_scorer(thr, coarse=coarse)
-        for ca, cb in ((0, 0), (1, 1), (2, 2), (0, 1), (0, 2), (1, 2)):
-            a = np.flatnonzero(ch == ca)
-            b = np.flatnonzero(ch == cb)
-            key_pairs = {
-                (min(ids[i], ids[j]), max(ids[i], ids[j]))
-                for i in a
-                for j in b
-                if i != j
-            }
-            truth = {
-                (min(ids[i], ids[j]), max(ids[i], ids[j]))
-                for i in a
-                for j in b
-                if i != j and keep[i, j]
-            }
-            out = score((7, ca, cb), pdf)
-            assert list(out.columns) == [
-                "id_a", "id_b", "dot", "n2_a", "n2_b"
-            ]
-            got = list(zip(out["id_a"], out["id_b"]))
-            assert len(got) == len(set(got)), (coarse, ca, cb)
-            assert set(got) <= key_pairs, (coarse, ca, cb)
-            assert truth <= set(got), (coarse, ca, cb)
-            assert zero_id not in out["id_a"].values
-            assert zero_id not in out["id_b"].values
-            for r in out.itertuples():
-                i, j = pos[r.id_a], pos[r.id_b]
-                assert r.id_a < r.id_b
-                assert (r.dot, r.n2_a, r.n2_b) == (
-                    dots[i, j], n2[i], n2[j]
-                )
-            if (ca, cb) == (2, 2):
-                assert out.empty
+    score = _block_scorer(thr)
+    for ca, cb in ((0, 0), (1, 1), (2, 2), (0, 1), (0, 2), (1, 2)):
+        a = np.flatnonzero(ch == ca)
+        b = np.flatnonzero(ch == cb)
+        key_pairs = {
+            (min(ids[i], ids[j]), max(ids[i], ids[j]))
+            for i in a
+            for j in b
+            if i != j
+        }
+        truth = {
+            (min(ids[i], ids[j]), max(ids[i], ids[j]))
+            for i in a
+            for j in b
+            if i != j and keep[i, j]
+        }
+        out = score((7, ca, cb), pdf)
+        assert list(out.columns) == [
+            "id_a", "id_b", "dot", "n2_a", "n2_b"
+        ]
+        got = list(zip(out["id_a"], out["id_b"]))
+        assert len(got) == len(set(got)), (ca, cb)
+        assert set(got) <= key_pairs, (ca, cb)
+        assert truth <= set(got), (ca, cb)
+        assert zero_id not in out["id_a"].values
+        assert zero_id not in out["id_b"].values
+        for r in out.itertuples():
+            i, j = pos[r.id_a], pos[r.id_b]
+            assert r.id_a < r.id_b
+            assert (r.dot, r.n2_a, r.n2_b) == (
+                dots[i, j], n2[i], n2[j]
+            )
+        if (ca, cb) == (2, 2):
+            assert out.empty
 
 
 def test_no_inferred_expensive_filters(spark):
@@ -1212,44 +1235,6 @@ def test_semdedup_gemm_int64_fallback_exact(spark):
     }
     assert got <= truth
     assert len(got & truth) / len(truth) == 1.0
-
-
-def test_semdedup_coarse_score_identical(spark):
-    """The two-tier int8/SGEMM scorer (round 11, VERDICT r10 #5)
-    must emit the IDENTICAL pair set and cosines as the exact
-    scorer: recall 1.0 is guaranteed by the per-vector angular-error
-    bound (a pair survives tier 1 iff its int8 cosine clears
-    cos(arccos(thr)+θa+θb)), precision by the exact int64 tier-2
-    re-verify. Checked at two thresholds (a permissive one near the
-    background-cosine mass exercises the near-threshold band where a
-    sloppy bound would lose pairs) and on 8x-scaled coordinates
-    (past float64's exact integer range)."""
-    from pyspark.sql import functions as F
-
-    from database_join_spark.catalog import table
-    from database_join_spark.operators.similarity import semdedup_pairs
-
-    emb = table(spark, SF_DIR, "embeddings")
-
-    def pairs(e, thr, **kw):
-        return sorted(
-            (r["id_a"], r["id_b"], r["cos_sim"])
-            for r in semdedup_pairs(
-                e, k=10, iterations=3, m=4, threshold=thr, **kw
-            ).collect()
-        )
-
-    for thr in (0.4, 0.15):
-        exact = pairs(emb, thr)
-        assert exact, "fixture must plant pairs at this threshold"
-        assert pairs(emb, thr, coarse_score=True) == exact
-    scaled = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(x * 8.0 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    assert pairs(scaled, 0.4, coarse_score=True) == pairs(scaled, 0.4)
 
 
 def test_topm_exact_matches_stable_argsort_under_ties():
@@ -1441,8 +1426,7 @@ def test_twolevel_fit_assign_matches_flat_and_dispatches(
     _, cents_flat, _ = S.kmeans_fit(emb, k=12, iterations=2)
     monkeypatch.setattr(sizing, "TWOLEVEL_ASSIGN_MIN_K", 12)
     assert nearest() == flat
-    for mode in ("driver", "distributed"):
-        _, cents_2l, _ = S.kmeans_fit(
-            emb, k=12, iterations=2, fit_mode=mode
-        )
-        assert cents_2l == cents_flat, mode
+    for budget in (S.DRIVER_FIT_MAX_CELLS, 0):  # driver, distributed
+        monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", budget)
+        _, cents_2l, _ = S.kmeans_fit(emb, k=12, iterations=2)
+        assert cents_2l == cents_flat, budget

@@ -1,12 +1,15 @@
 """Every name a ``scripts/*.py`` probe takes from the package (or from
-a sibling script) must exist, so deleting or renaming a package name
-cannot leave a probe that fails at import or call time. Spark-free:
-the AST is read, and only package modules are imported."""
+a sibling script) must exist, and every keyword it passes to a package
+function must be a parameter of that function, so deleting or renaming
+a package name or parameter cannot leave a probe that fails at import
+or call time. Spark-free: the AST is read, and only package modules
+are imported."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import types
 from pathlib import Path
 
@@ -52,10 +55,13 @@ def _resolve(module: str, name: str):
         return _MISSING
 
 
-def _unresolved(path: Path) -> list[str]:
-    tree = ast.parse(path.read_text())
+def _package_bindings(tree: ast.AST):
+    """(missing, aliases, objects): the imported names that do not
+    resolve, the local names bound to package modules, and the local
+    names bound to other package objects."""
     missing: list[str] = []
     aliases: dict[str, types.ModuleType] = {}  # local name -> module
+    objects: dict[str, object] = {}  # local name -> package object
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.module:
             top, _, rest = node.module.partition(".")
@@ -66,6 +72,8 @@ def _unresolved(path: Path) -> list[str]:
                         missing.append(f"{node.module}.{a.name}")
                     elif isinstance(obj, types.ModuleType):
                         aliases[a.asname or a.name] = obj
+                    else:
+                        objects[a.asname or a.name] = obj
                 elif top == "scripts":
                     sibling = SCRIPTS / (rest.replace(".", "/") + ".py")
                     if not sibling.exists():
@@ -83,6 +91,12 @@ def _unresolved(path: Path) -> list[str]:
                     continue
                 if a.asname:
                     aliases[a.asname] = mod
+    return missing, aliases, objects
+
+
+def _unresolved(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text())
+    missing, aliases, _objects = _package_bindings(tree)
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -100,5 +114,52 @@ def test_scripts_resolve_package_names():
     assert scripts
     unresolved = {
         p.name: names for p in scripts if (names := _unresolved(p))
+    }
+    assert not unresolved, unresolved
+
+
+def _unresolved_keywords(path: Path) -> list[str]:
+    """``callee(keyword=)`` for every keyword a call passes to a
+    package function (a package-module alias attribute, or a name
+    imported from the package) that its signature does not take.
+    Callees with ``**kwargs`` or no signature are skipped."""
+    tree = ast.parse(path.read_text())
+    _missing, aliases, objects = _package_bindings(tree)
+    bad: list[str] = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in objects:
+            callee = objects[f.id]
+        elif (
+            isinstance(f, ast.Attribute)
+            and isinstance(f.value, ast.Name)
+            and f.value.id in aliases
+            and hasattr(aliases[f.value.id], f.attr)
+        ):
+            callee = getattr(aliases[f.value.id], f.attr)
+        else:
+            continue
+        try:
+            params = inspect.signature(callee).parameters
+        except (TypeError, ValueError):
+            continue
+        if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            continue
+        name = getattr(callee, "__qualname__", repr(callee))
+        bad.extend(
+            f"{name}({kw.arg}=)"
+            for kw in node.keywords
+            if kw.arg is not None and kw.arg not in params
+        )
+    return sorted(set(bad))
+
+
+def test_scripts_pass_only_package_parameters():
+    unresolved = {
+        p.name: kws
+        for p in sorted(SCRIPTS.glob("*.py"))
+        if (kws := _unresolved_keywords(p))
     }
     assert not unresolved, unresolved
