@@ -775,11 +775,16 @@ def kmeans_fit(
     A hint, never a limit: absent or small hints change nothing.
     ``dim_hint``: the known vector dimensionality, which skips that
     head() job (see :func:`_driver_fit_rows`).
+
+    The quantized input is persisted (through ``track_persist``, so
+    the next gated query's configure_session drains it): the fit
+    reads it, and the returned assignment reads it again.
     """
-    base, cents, history = _fit_centroids(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
+    from database_join_spark.session import track_persist
+
+    base = track_persist(_quant_base(df, id_col, vec_col))
+    cents, history = _fit_centroids(
+        base,
         k=k,
         iterations=iterations,
         track_inertia=track_inertia,
@@ -789,46 +794,51 @@ def kmeans_fit(
     return kmeans_assign(base, cents), cents, history
 
 
+def _quant_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``df`` as the ``(id, qv)`` frame every k-means step reads: the
+    id and the quantized vector (:func:`_quant`)."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.expr(_quant(vec_col)).alias("qv"),
+    )
+
+
 def _fit_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    base: DataFrame,
     k: int = 10,
     iterations: int = 5,
     track_inertia: bool = False,
     n_hint: int | None = None,
     dim_hint: int | None = None,
-) -> tuple[DataFrame, list[list[int]], list[int]]:
-    """:func:`kmeans_fit` minus the returned assignment — the
-    centroids-only core, split out (round 14) for callers that
-    discard the assignment (``semdedup_pairs`` blocks on its OWN
-    full-corpus frame). Returns (quantized base, centroids, inertia
-    history); fewer than k centroids means the input holds fewer
-    than k rows.
+) -> tuple[list[list[int]], list[int]]:
+    """The fit of :func:`kmeans_fit` over a quantized ``(id, qv)``
+    frame (:func:`_quant_base`), for callers that need only the
+    centroids (``semdedup_pairs`` blocks on its own full-corpus
+    frame). Returns (centroids, inertia history); fewer than k
+    centroids means the input holds fewer than k rows.
 
     The fit runs on the driver when :func:`_driver_fit_rows` collects
-    the input, else as the distributed loop. Only the distributed
-    loop persists the base (through ``track_persist``, so the next
-    gated query's configure_session drains it): it reads the base
-    iterations + 1 times (the seed collect, then one assign + one
-    stats aggregation per iteration), and each read otherwise re-runs
-    the scan + sample filter + quantization. The driver fit reads the
-    base once, through the probe's collect, so caching it would only
-    cost the memory-store writes. A caller that keeps only the
-    centroids unpersists the returned base."""
+    the input, else as the distributed loop. The driver fit reads
+    ``base`` once, through the probe's collect. The distributed loop
+    reads it iterations + 1 times (the seed collect, then one assign
+    + one stats aggregation per iteration), and each read otherwise
+    re-runs the scan + sample filter + quantization, so it persists
+    ``base`` (through ``track_persist``) unless an equal plan is
+    cached already. ``base.is_cached`` then tells the caller whether
+    this fit persisted it: a caller that keeps only the centroids
+    releases exactly that persist, since unpersisting by plan would
+    also drop an equal-plan cache someone else holds."""
+    from pyspark import StorageLevel
+
     from database_join_spark.session import track_persist
 
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.expr(_quant(vec_col)).alias("qv"),
-    )
     rows = _driver_fit_rows(base, k, n_hint=n_hint, dim_hint=dim_hint)
     if rows is not None:
         if not rows:  # an empty input: no seed, nothing to fit
-            return base, [], []
-        cents, history = _kmeans_lloyd_np(rows, k, iterations, track_inertia)
-        return base, cents, history
-    base = track_persist(base)
+            return [], []
+        return _kmeans_lloyd_np(rows, k, iterations, track_inertia)
+    if base.storageLevel == StorageLevel.NONE:
+        track_persist(base)
     seed_rows = base.orderBy("id").limit(k).collect()
     cents = [list(r.qv) for r in sorted(seed_rows, key=lambda r: r.id)]
     if len(cents) < k:
@@ -837,7 +847,7 @@ def _fit_centroids(
         # the loop would only repeat it (and an empty input has
         # nothing to fit).
         inertia = [0] * iterations if track_inertia and cents else []
-        return base, cents, inertia
+        return cents, inertia
     history: list[int] = []
     for _ in range(iterations):
         assigned = kmeans_assign(base, cents)
@@ -872,7 +882,7 @@ def _fit_centroids(
             else cents[j]
             for j in range(k)
         ]
-    return base, cents, history
+    return cents, history
 
 
 def _snap_ratio(ratio: float) -> tuple[int, int]:
@@ -1207,9 +1217,9 @@ def semdedup_pairs(
     size and block against a degenerate centroid set — silently
     wrong pairs instead of an error — so it falls back to the
     full-corpus fit. Either way the fit is one :func:`_fit_centroids`
-    call per input, and its base is released as soon as the
-    centroids are out: only the centroids are needed here, since the
-    blocking assign runs on the full corpus.
+    call per input, and a base that call persisted is released as
+    soon as the centroids are out: only the centroids are needed
+    here, since the blocking assign runs on the full corpus.
 
     ``n_hint`` (round 13) is the caller's known corpus row count
     (e.g. the cached parquet-footer rowcount). When it proves the
@@ -1232,30 +1242,26 @@ def semdedup_pairs(
     collect) before the blocking assign. Absent hint: unchanged.
     """
     fit = functools.partial(
-        _fit_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        iterations=iterations,
-        dim_hint=dim_hint,
+        _fit_centroids, k=k, iterations=iterations, dim_hint=dim_hint
     )
+    base = _quant_base(emb, id_col, vec_col)
     if fit_sample_mod is not None and fit_sample_mod > 1:
         sample = emb.filter(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(fit_sample_mod))
             == 0
         )
-        fit_base, cents, _hist = fit(sample)
-        fit_base.unpersist()
+        fit_bases = [_quant_base(sample, id_col, vec_col)]
+        cents, _hist = fit(fit_bases[0])
         if len(cents) < k:  # the sample holds fewer than k rows
-            fit_base, cents, _hist = fit(emb, n_hint=n_hint)
-            fit_base.unpersist()
+            fit_bases.append(base)
+            cents, _hist = fit(base, n_hint=n_hint)
+        for fit_base in fit_bases:
+            if fit_base.is_cached:  # persisted by this fit
+                fit_base.unpersist()
     else:
-        # The fit base stays: a distributed fit's cached base is the
-        # same plan as ``base`` below, so the blocking assign reads it.
-        _base, cents, _hist = fit(emb, n_hint=n_hint)
-    base = emb.select(
-        F.col(id_col).alias("id"), F.expr(_quant(vec_col)).alias("qv")
-    )
+        # A distributed fit leaves ``base`` cached, and the blocking
+        # assign below reads that cache.
+        cents, _hist = fit(base, n_hint=n_hint)
     if n_hint is not None and n_hint <= SEMDEDUP_TARGET_CHUNK:
         # One chunk: no block can exceed TARGET_CHUNK rows when the
         # whole corpus has at most that many, so the census, the

@@ -142,6 +142,47 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def build_confs(
+    profile: str | None = None,
+    cpus: int | None = None,
+    shuffle_partitions: int | None = None,
+) -> dict[str, str]:
+    """The SparkConf :func:`get_spark` builds a session with: master,
+    heap, collector, Python worker daemon, :data:`RUNTIME_CONFS`, and
+    for ``profile="wide-exchange"`` :data:`WIDE_EXCHANGE_CONFS`.
+    ``profile="default"`` is an alias for ``None``; any other name
+    raises ``ValueError``."""
+    if profile == "default":
+        # plans/sizing.py emits "default" | "wide-exchange"; callers
+        # pass sizing.profile straight through.
+        profile = None
+    if profile not in (None, "wide-exchange"):
+        raise ValueError(f"unknown session profile: {profile!r}")
+    if cpus is None:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    if shuffle_partitions is None:
+        shuffle_partitions = cpus
+    wide = profile == "wide-exchange"
+    confs = {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", "48g" if wide else "8g"
+        ),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.python.daemon.module": "database_join_spark.pyworker",
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        **RUNTIME_CONFS,
+    }
+    if wide:
+        confs.update(WIDE_EXCHANGE_CONFS)
+    else:
+        confs["spark.driver.extraJavaOptions"] = "-XX:+UseParallelGC"
+    return confs
+
+
 def get_spark(
     app_name: str = "database-join-spark",
     cpus: int | None = None,
@@ -179,18 +220,37 @@ def get_spark(
     :func:`configure_session` cannot set them: a session the driver
     owns (``scripts/driver_sim.py``'s) keeps the stock daemon, which
     is correct, only slower per Python task.
-    """
-    if profile == "default":
-        # plans/sizing.py emits "default" | "wide-exchange"; callers
-        # pass sizing.profile straight through.
-        profile = None
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-    default_mem = "48g" if profile == "wide-exchange" else "8g"
 
-    if profile is None:
+    The default profile's driver JVM runs the Parallel collector
+    (``-XX:+UseParallelGC``), set next to its heap. The engine's
+    passes are compute-bound generated per-row loops, where JDK 17's
+    default G1 costs mutator work (write barriers, concurrent
+    refinement) rather than pause time: on 4 vCPUs the q4112 pass of
+    ``perfbench`` took a median 1.73 s under Parallel against 2.17 s
+    under G1 (10 alternated process pairs) and 5.1 s of JVM CPU
+    against 6.6 s, with GC time under 0.06 s per pass on both. The
+    wide-exchange profile keeps G1, under which its 48g measurements
+    (SPILL_PROBE.json) were taken.
+
+    PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off: with it
+    on, every Column and DataFrame call makes about six extra py4j
+    round trips (a traced q4112 pass built its plans in 0.34-0.39 s
+    with it, 0.17-0.21 s without). The price is the "== DataFrame ==" call-site
+    section of an ``AnalysisException``; the Python traceback is
+    unchanged.
+
+    The collector is a JVM launch option, and PySpark reads the
+    call-site conf once per process and caches it, so like the
+    daemon module both hold only for a session this function builds:
+    a live session returned by ``getOrCreate`` and a session the
+    driver owns keep their JVM's collector (G1) and their call-site
+    capture, and :func:`configure_session` cannot change either.
+    """
+    confs = build_confs(profile, cpus, shuffle_partitions)
+    wide = profile == "wide-exchange"
+
+    if not wide:
         # Mirror of the wide-exchange guard below (ADVICE r05): a
         # DEFAULT/untuned session requested while a tuned one is live
         # would silently hand back the zstd/1m-buffer session, and the
@@ -212,7 +272,7 @@ def get_spark(
                     "run the workload in a fresh process"
                 )
 
-    if profile == "wide-exchange":
+    if wide:
         live = SparkSession.getActiveSession()
         if live is not None:
             # getOrCreate would return this session unchanged; the
@@ -233,24 +293,7 @@ def get_spark(
                     "first or run the workload in a fresh process"
                 )
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.python.daemon.module", "database_join_spark.pyworker")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-    )
-    for key, value in RUNTIME_CONFS.items():
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in confs.items():
         builder = builder.config(key, value)
-    if profile == "wide-exchange":
-        for key, value in WIDE_EXCHANGE_CONFS.items():
-            builder = builder.config(key, value)
-    elif profile is not None:
-        raise ValueError(f"unknown session profile: {profile!r}")
     return configure_session(builder.getOrCreate())

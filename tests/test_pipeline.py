@@ -791,8 +791,9 @@ def test_driver_fit_probe_checks_dim_hint(spark, monkeypatch):
     assert S._driver_fit_rows(base, 2, dim_hint=64) is None
 
     def fit_and_pairs(dim_hint):
-        _, cents, _ = S._fit_centroids(
-            emb, k=10, iterations=2, dim_hint=dim_hint
+        cents, _ = S._fit_centroids(
+            S._quant_base(emb, "vec_id", "embedding"),
+            k=10, iterations=2, dim_hint=dim_hint,
         )
         pairs = sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
@@ -817,16 +818,12 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
     (two fit bases: sample, then corpus), a sample over the driver
     row cap (the distributed loop), and a probe skipped because k·dim
     alone is over the budget (the distributed loop's seed collect
-    finds the degenerate sample; then the corpus fit)."""
-    from pyspark import StorageLevel
-
+    finds the degenerate sample; then the corpus fit). A fit base
+    whose plan was cached before the fit began (an earlier test's
+    ``kmeans_fit`` base) keeps that cache."""
     from database_join_spark.catalog import table
     from database_join_spark.operators import similarity as S
-    from database_join_spark.session import configure_session
 
-    # release frames earlier tests cached: unpersisting a fit base
-    # also uncaches an equal plan someone else cached
-    configure_session(spark)
     emb = table(spark, SF_DIR, "embeddings")
 
     def pairs(**kw):
@@ -845,10 +842,9 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
     fit_bases = []
     stock_fit = S._fit_centroids
 
-    def spy_fit(*args, **kwargs):
-        out = stock_fit(*args, **kwargs)
-        fit_bases.append(out[0])
-        return out
+    def spy_fit(base, **kwargs):
+        fit_bases.append((base, base.storageLevel))
+        return stock_fit(base, **kwargs)
 
     monkeypatch.setattr(S, "_fit_centroids", spy_fit)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -861,10 +857,10 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
         got = pairs(**kw)
         assert persistent().size() == before, kw
         assert len(fit_bases) == n_bases, kw
-        for fb in fit_bases:
+        for fb, level_before in fit_bases:
             assert fb.columns == ["id", "qv"]
             assert not fb.is_cached
-            assert fb.storageLevel == StorageLevel.NONE
+            assert fb.storageLevel == level_before
         return got
 
     # a 1-in-1e9 sample holds fewer than k rows: the degenerate-sample
@@ -878,6 +874,40 @@ def test_semdedup_fallback_releases_fit_base(spark, monkeypatch):
     # the degenerate sample and the corpus fit run distributed
     monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 64 * 5)
     assert released_pairs(2, fit_sample_mod=10**9) == full
+
+
+def test_sampled_fit_keeps_equal_plan_caches(spark):
+    """Spark uncaches by plan, so a fit that releases a base it never
+    persisted drops an equal-plan cache someone else holds. Frames
+    equal to both fit bases of a degenerate-sample driver fit (the
+    sample's and the corpus's), cached through ``track_persist``,
+    must stay cached across the ``semdedup_pairs`` call."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from database_join_spark.catalog import table
+    from database_join_spark.operators import similarity as S
+    from database_join_spark.session import track_persist
+
+    emb = table(spark, SF_DIR, "embeddings")
+    mod = 10**9
+    sample = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0)
+    held = [
+        track_persist(S._quant_base(df, "vec_id", "embedding"))
+        for df in (sample, emb)
+    ]
+    for df in held:
+        df.count()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    got = S.semdedup_pairs(
+        emb, k=10, iterations=3, m=4, threshold=0.4, n_hint=500,
+        fit_sample_mod=mod,
+    ).collect()
+    assert got, "fixtures must plant semantic dups"
+    assert persistent().size() == before
+    for df in held:
+        assert df.storageLevel != StorageLevel.NONE
 
 
 def test_empty_embeddings_give_no_pairs_and_no_centroids(
