@@ -676,7 +676,7 @@ def main() -> None:
     scaling = Path(_REPO) / "THREAD_SCALING.json"
     if scaling.exists():
         full["thread_scaling"] = json.loads(scaling.read_text())
-        full["thread_scaling"]["source"] = "scripts/thread_scaling.py"
+        full["thread_scaling"]["source"] = "THREAD_SCALING.json"
     # BENCH_FULL_PATH override keeps toy/smoke runs (tests) from
     # clobbering the committed full-payload artifact of record; an
     # SF-only control run (empty reference_workload) must not either

@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 #: DECIMAL(28,6)+ internally, and aggregated outputs are re-pinned via
 #: :func:`dec` so Spark and DuckDB emit the same scale.
 DECIMAL_T = "decimal(18,6)"
-#: Wider type for sums that might exceed DECIMAL(18,6) at 100 TB scale.
-DECIMAL_WIDE_T = "decimal(38,6)"
 
 
 def dec(col: Column | str, t: str = DECIMAL_T) -> Column:

@@ -52,7 +52,7 @@ def bitmap_of(keys: DataFrame, key_col: str, bits: int = DEFAULT_BITS) -> DataFr
     LINEAR scan of the map — fine at decontam's 2^11 words, a
     2.6e13-comparison stall at a join-sized 2^18-word bitmap
     (measured: the one-row-map spelling hung the 1e8-row probe arm
-    that scripts/bloom_join_probe.py now times in seconds).
+    that BLOOM_JOIN_PROBE.json records in seconds).
     """
     return (
         keys.select(_pos(key_col, bits).alias("pos"))

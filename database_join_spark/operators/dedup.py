@@ -206,27 +206,6 @@ def shingle_hashes(shingle_col: str) -> Column:
     return F.expr(f"transform({shingle_col}, s -> xxhash64(s))")
 
 
-def minhash_signature(hash_col: str, num_hashes: int = 32) -> Column:
-    """MinHash signature over pre-hashed shingles (see
-    :func:`shingle_hashes`): per seed h, min over xxhash64(hash, h).
-    Pure JVM expressions; no Python, no shuffle.
-
-    This is the per-row spelling. Higher-order functions do not enter
-    whole-stage codegen (each lambda application is an interpreted
-    eval), so :func:`lsh_candidate_pairs` uses the codegen'd
-    explode + groupBy-min spelling instead — measured 1.8× faster net
-    of scan on the sf0.1 fixture. Keep this form for contexts where
-    an extra shuffle is worse than interpreted eval (e.g. computing
-    signatures inline on a frame that will not be re-keyed)."""
-    mins = [
-        F.array_min(
-            F.expr(f"transform({hash_col}, x -> xxhash64(x, {h}))")
-        )
-        for h in range(num_hashes)
-    ]
-    return F.array(*mins)
-
-
 def banded_buckets(
     df: DataFrame,
     id_col: str = "doc_id",

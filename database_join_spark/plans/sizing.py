@@ -186,7 +186,7 @@ def decide(
             # conf-only mitigation for the residual wide exchange.
             # Fast-map bit stays at the MEASURED hand-best for this
             # conf-only regime — the r04 matrix's g1e8 winner ran bit
-            # 16 (scripts/sizing_probe.py REGIMES g1e8); bit 20 here
+            # 16 (SIZING_PROBE.json regime g1e8); bit 20 here
             # was an unmeasured extrapolation (ADVICE r05). At ≥1e7
             # groups no fast map covers the key set either way; the
             # map only absorbs the hot key itself, which bit 16 does.

@@ -972,7 +972,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_frame(ev: DataFrame) -> DataFrame:
     """Core sessionization over a ``(user_id, event_id, e)`` frame
     (e = epoch-µs); shared by the fixture query and the clickstream
-    scale probe (scripts/clickstream_probe.py)."""
+    scale probe (CLICKSTREAM_PROBE.json)."""
     w = Window.partitionBy("user_id").orderBy("e", "event_id")
     flagged = ev.withColumn(
         "is_new",

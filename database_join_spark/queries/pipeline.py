@@ -1583,16 +1583,6 @@ def decontam_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 38b. decontam_bloom — bloom-prefiltered decontamination, exact result
 # --------------------------------------------------------------------------
-#: Bloom bitmap width fallback (2^17 bits — operators/bloom's
-#: default). Since round 8 the WIDTH AND THE APPLY DECISION are
-#: estimate-driven: _bloom_frames runs plans/sizing.plan_prefilter
-#: (HLL over both shingle streams → decide_prefilter's measured
-#: BLOOM_JOIN_PROBE envelope: ≥16 bits/key, apply below ~25%
-#: survivors) — the same decision layer join_bloom_prefilter uses,
-#: so both Bloom consumers share one sizing model (VERDICT r07 #7).
-_BLOOM_BITS = 1 << 17
-
-
 @query(
     "decontam_bloom",
     oracle=f"""
@@ -1761,8 +1751,8 @@ def decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def decontam_minhash_core(corpus: DataFrame, ev: DataFrame) -> DataFrame:
     """Core cross-split near-dup flag over pre-hashed ``(doc_id, hs)``
-    frames — factored out so the scale probe (scripts/decontam_probe.py)
-    drives the exact operator code on synthetic corpora."""
+    frames — factored out so the scale probe (DECONTAM_PROBE.json)
+    drove the exact operator code on synthetic corpora."""
     kw = dict(
         id_col="doc_id", shingle_col="hs",
         num_hashes=32, bands=16, prehashed=True,
@@ -3549,15 +3539,14 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id order).
 
     The 1M-doc volume evidence with planted masses is
-    PIPELINE_E2E_PROBE.json (scripts/pipeline_e2e_probe.py, both the
-    re-tokenize and the tokenize-once arms); THIS id is the
-    composition's hash-exact correctness gate — every stage
-    interaction (a doc dropped twice, an excised span escaping the
-    packed mass, decontam flagging a retired doc) shifts seq_tokens
-    or a sequence boundary and fails the driver compare. Flags are
-    computed on PRE-excision survivors (contamination is present
-    whether or not a duplicated span overlaps it); the oracle
-    mirrors the order exactly.
+    PIPELINE_E2E_PROBE.json (both the re-tokenize and the
+    tokenize-once arms); THIS id is the composition's hash-exact
+    correctness gate — every stage interaction (a doc dropped twice,
+    an excised span escaping the packed mass, decontam flagging a
+    retired doc) shifts seq_tokens or a sequence boundary and fails
+    the driver compare. Flags are computed on PRE-excision survivors
+    (contamination is present whether or not a duplicated span
+    overlaps it); the oracle mirrors the order exactly.
 
     Spelling is the round-11 tokenize-once discipline at the PLAN
     level: one projection derives (toks, n_tokens, fp) from text and

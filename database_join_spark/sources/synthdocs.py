@@ -47,7 +47,7 @@ def _word(base: int, i: int) -> str:
 
 def _doc_text(doc_id: int) -> str:
     # ids ≡ 1 (mod 50) near-duplicate their predecessor (planted dups,
-    # same convention as scripts/scale_probe.py)
+    # same convention as BASELINE.md's dedup scaling probe)
     base = doc_id - 1 if doc_id % 50 == 1 else doc_id
     words = [_word(base, i) for i in range(_WORDS)]
     words.append(f"t{doc_id % 997}")

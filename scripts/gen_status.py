@@ -81,8 +81,8 @@ TAIL = """
 | parameterized q4112 generator + numpy oracle | datagen.py | 8-point config sweep, both plan spellings (test_q4112_sweep) |
 | operator kernels on arbitrary inputs | operators/dedup.py | hypothesis properties (test_property) |
 | connected components (min-label propagation, leak-free checkpoints) | operators/dedup.py | chain/triangle fixpoint (test_pipeline) |
-| dedup scaling probe (100k→1M docs, ~linear, recall 1.00) | scripts/scale_probe.py | BASELINE.md §scaling |
-| decontam scaling probe (1M corpus vs 10k benchmark, recall/precision 1.00) | scripts/decontam_probe.py | BASELINE.md §decontam scaling |
+| dedup scaling probe (100k→1M docs, ~linear, recall 1.00) | operators/dedup.py | BASELINE.md §scaling |
+| decontam scaling probe (1M corpus vs 10k benchmark, recall/precision 1.00) | queries/pipeline.decontam_minhash_core | DECONTAM_PROBE.json + BASELINE.md §decontam scaling |
 | cardinality-driven execution profile (FM-sizing loop) | plans/sizing.py | threshold pins (test_sizing) + SIZING_PROBE.json parity |
 | avg_int Catalyst session extension (spark.sql.extensions, Java) | java_ext/ | resolved-plan + integer-division oracle (test_java_ext) |
 | out-of-order replay: stateful dedup + upsert sink late duplicates | streaming/ | cross-batch late-dup tests (test_streaming) |
@@ -92,15 +92,15 @@ TAIL = """
 | bench output-contract smoke (toy-scale subprocess) | bench.py | tests/test_bench_smoke.py |
 | streaming Python DataSource (offset-cursor admission control) | sources/synthdocs.py | multi-batch drain == batch row set (test_property) |
 | generic Bloom bitmap build/prefilter (word-table BHJ probe) | operators/bloom.py | prune/FP-envelope pins (test_extras) + BLOOM_JOIN_PROBE.json |
-| ExactSubstr scale probe (1M docs, recall ≥0.9995, round-trip 0 spans) | scripts/substr_probe.py | BASELINE.md §ExactSubstr scaling |
-| sessionizer state-scale probe (1e7 events, bounded state, parity 0-diff) | scripts/session_state_probe.py | BASELINE.md §state-scale + bounded-restarts test |
-| ANN scale probe (1M vectors, recall 1.00, 4.8–6× at 200 queries) | scripts/ann_probe.py | BASELINE.md §similarity scaling |
+| ExactSubstr scale probe (1M docs, recall ≥0.9995, round-trip 0 spans) | queries/pipeline.py | SUBSTR_PROBE.json + BASELINE.md §ExactSubstr scaling |
+| sessionizer state-scale probe (1e7 events, bounded state, parity 0-diff) | streaming/ | SESSION_STATE_PROBE.json + BASELINE.md §state-scale + bounded-restarts test |
+| ANN scale probe (1M vectors, recall 1.00, 4.8–6× at 200 queries) | operators/similarity.py | ANN_PROBE.json + BASELINE.md §similarity scaling |
 | runtime avg_int registration for harness-owned sessions | functions/ext.py | driver-gated agg_avg_int_ext oracle row |
 | streaming corpus-ingest composition (gate → fp dedup → decontam → sink) | streaming/ + scripts/stream_ingest_probe.py | 2M-doc planted masses exact, sink≡replay (STREAM_INGEST_PROBE.json) |
 | exactly-once kill-recovery (hard-kill mid-batch at 5e7) | scripts/stream_kill_recovery_probe.py | 0 missing / 0 extra / 0 orphans (STREAM_KILL_RECOVERY_PROBE.json) |
 | cross-batch MinHash near-dup retirement (bucket + sketch stores) | streaming/ingest_neardedup_batch | planted masses exact ×3 batches (test_streaming) + 2M probe w/ batch-replay parity (STREAM_INGEST_NEARDUP_PROBE.json) |
 | broadcast/GEMM k-means assign, bit-parity with literal plan | operators/similarity.py | literal≡np pins incl. ties/ratio/fit (test_pipeline) |
-| SemDeDup k-ladder frontier → k_for(n) planner rule | plans/sizing.py + scripts/semdedup_kladder_probe.py | recall 1.0 ladder, calibration pins (test_sizing) + SEMDEDUP_KLADDER_PROBE.json |
+| SemDeDup k-ladder frontier → k_for(n) planner rule | plans/sizing.py | recall 1.0 ladder, calibration pins (test_sizing) + SEMDEDUP_KLADDER_PROBE.json |
 | exchange sizing from catalog row counts (product callers) | plans/stats.sized_shuffle_for_table | conf/floor/cache pins (test_sizing) |
 """
 

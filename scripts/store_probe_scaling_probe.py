@@ -35,6 +35,63 @@ if _REPO not in sys.path:
 
 NUM_HASHES, BANDS, SHINGLE_N = 32, 16, 3
 
+# synth_corpus: WORDS-word docs over a VOCAB-word vocabulary, one
+# planted class per id residue mod 50.
+VOCAB = 50_000
+WORDS = 100
+SPAN_AT, SPAN_LEN = 40, 12
+LEAK_AT, LEAK_LEN = 20, 5
+
+
+def synth_corpus(spark, n: int):
+    """All planted classes in one deterministic generator (datagen's
+    no-RNG-state trick). ``base`` redirects classes 1/3 to their
+    source doc's word stream; per-position CASE plants the span, the
+    leak, and class 1's divergent tail."""
+    from pyspark.sql import functions as F
+
+    base = (
+        "CASE WHEN id % 50 = 1 THEN id - 1 "
+        "WHEN id % 50 = 3 THEN id - 3 ELSE id END"
+    )
+    word = (
+        f"CASE "
+        # near-dup: last word diverges (class 1 only)
+        f"WHEN id % 50 = 1 AND i = {WORDS - 1} "
+        f"  THEN concat('t', CAST(id AS STRING)) "
+        # ExactSubstr pair: verbatim run keyed by the pair base
+        f"WHEN id % 50 IN (10, 11) AND i BETWEEN {SPAN_AT} "
+        f"  AND {SPAN_AT + SPAN_LEN - 1} "
+        f"  THEN concat('p', CAST(id - id % 50 AS STRING), 'x', "
+        f"       CAST(i - {SPAN_AT} AS STRING)) "
+        # id-unique guards at the two positions adjacent to the span:
+        # every window straddling a span edge contains one of them,
+        # so no boundary window can duplicate across the pair. Without
+        # these, a window extending one token past the edge duplicates
+        # iff that single w-position collides mod VOCAB between the
+        # two docs — p ≈ 2·pairs/VOCAB ≈ 0.8 expected extensions at
+        # 1M docs (observed: exactly one, +2 tokens). The planted
+        # masses must be EXACT, not 1-in-50k-probabilistic.
+        f"WHEN id % 50 IN (10, 11) AND i IN ({SPAN_AT - 1}, "
+        f"  {SPAN_AT + SPAN_LEN}) "
+        f"  THEN concat('g', CAST(id AS STRING), 'x', "
+        f"       CAST(i AS STRING)) "
+        # benchmark leak: 5 tokens shared with benchmark doc id
+        f"WHEN id % 50 = 7 AND i BETWEEN {LEAK_AT} "
+        f"  AND {LEAK_AT + LEAK_LEN - 1} "
+        f"  THEN concat('b', CAST(id AS STRING), 'x', "
+        f"       CAST(i - {LEAK_AT} AS STRING)) "
+        f"ELSE concat('w', pmod(xxhash64({base}, i), {VOCAB})) END"
+    )
+    nw = f"IF(id % 50 = 2, 10, {WORDS})"
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.expr(
+            f"array_join(transform(sequence(0, {nw} - 1), "
+            f"i -> {word}), ' ')"
+        ).alias("text"),
+    )
+
 
 def child(store_dir: str, batch_dir: str, cpus: int, out_path: str):
     from database_join_spark.hostinfo import host_snapshot
@@ -113,7 +170,6 @@ def main() -> None:
     from database_join_spark.operators import dedup as D
     from database_join_spark.operators import text as T
     from database_join_spark.session import get_spark
-    from scripts.pipeline_e2e_probe import synth_corpus
 
     from pyspark.sql import functions as F
 

@@ -2,14 +2,17 @@
 a sibling script) must exist, and every keyword it passes to a package
 function must be a parameter of that function, so deleting or renaming
 a package name or parameter cannot leave a probe that fails at import
-or call time. Spark-free: the AST is read, and only package modules
-are imported."""
+or call time. Two more pins tie ``scripts/`` to its citations: every
+script is listed in the README's "Running" block, and every script
+path the docs, package, tests or bench.py cite exists. Spark-free: the
+AST is read, and only package modules are imported."""
 
 from __future__ import annotations
 
 import ast
 import importlib
 import inspect
+import re
 import types
 from pathlib import Path
 
@@ -163,3 +166,34 @@ def test_scripts_pass_only_package_parameters():
         if (kws := _unresolved_keywords(p))
     }
     assert not unresolved, unresolved
+
+
+_SCRIPT_PATH = re.compile(r"scripts/(\w+\.(?:py|sh))\b")
+
+
+def _readme_running_block() -> str:
+    """The fenced block under README.md's "## Running" heading."""
+    text = (REPO / "README.md").read_text()
+    section = text.split("\n## Running\n", 1)[1]
+    return section.split("```", 2)[1]
+
+
+def test_every_script_is_listed_in_readme_running():
+    listed = set(_SCRIPT_PATH.findall(_readme_running_block()))
+    on_disk = {p.name for p in SCRIPTS.iterdir() if p.is_file()}
+    assert on_disk <= listed, sorted(on_disk - listed)
+
+
+def test_every_cited_script_exists():
+    """A ``scripts/`` path cited by the README, STATUS.md, the package,
+    the tests or bench.py names a file that is still there."""
+    sources = [REPO / "README.md", REPO / "STATUS.md", REPO / "bench.py"]
+    sources += sorted((REPO / PACKAGE).rglob("*.py"))
+    sources += sorted((REPO / "tests").rglob("*.py"))
+    dangling = {
+        f"{src.relative_to(REPO)}: scripts/{name}"
+        for src in sources
+        for name in _SCRIPT_PATH.findall(src.read_text())
+        if not (SCRIPTS / name).exists()
+    }
+    assert not dangling, sorted(dangling)

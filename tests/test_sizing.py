@@ -137,7 +137,7 @@ def test_skew_guard_thresholds():
     assert s.partial_before_exchange is True
     assert s.profile == "wide-exchange"
     # ADVICE r05: the conf-only fallback runs the MEASURED hand-best
-    # config (sizing_probe g1e8 arm: bit 16), not an extrapolated 2^20
+    # config (SIZING_PROBE.json g1e8 arm: bit 16), not an extrapolated 2^20
     from database_join_spark.plans.sizing import FAST_MAP_MIN_BIT
 
     assert s.capacity_bit == FAST_MAP_MIN_BIT

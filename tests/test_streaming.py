@@ -858,7 +858,7 @@ def test_sessionize_ttl_state_bounded_across_restarts(spark, tmp_path):
     state store must hold only the ACTIVE cohorts (watermark evicts
     each cohort once the next-but-one hour's events pass it), so the
     final run's state rows stay well under the cumulative user count.
-    The probe twin (scripts/session_state_probe.py) runs the same
+    The probe twin (SESSION_STATE_PROBE.json) ran the same
     shape at 1e7 events; this pins the mechanism at test scale."""
     import json as _json
 
