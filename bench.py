@@ -330,7 +330,7 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
     # default, with no regression at groups=100 (1.63 vs 1.73 s) —
     # see BASELINE.md "Fast-map ablation". Since round 5 the knob is
     # CHOSEN, not pinned: plans/sizing.py estimates the cardinality
-    # with approx_count_distinct and picks the profile from the
+    # with approx_count_distinct and picks the sizing from the
     # measured regime table — the reference's own FM-sizing pattern
     # (q4112.c:336-377; auto-vs-hand parity in SIZING_PROBE.json).
     # Round 8 (VERDICT r07 #4): the estimate is read through the
@@ -353,7 +353,6 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
         "est_groups": sizing.est_groups,
         "capacity_bit": sizing.capacity_bit,
         "tasks_per_core": sizing.tasks_per_core,
-        "profile": sizing.profile,
         "estimate_sec": round(est_sec, 2),
         "estimate_cached": est_cached,
     }
@@ -376,8 +375,7 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
     print(
         f"# part2_groups1e6: {sec:.2f} s {runs} "
         f"(sizing: est={sizing.est_groups} bit={sizing.capacity_bit} "
-        f"tasks={sizing.tasks(cores)} profile={sizing.profile}, "
-        f"estimate {est_sec:.1f} s)",
+        f"tasks={sizing.tasks(cores)}, estimate {est_sec:.1f} s)",
         file=sys.stderr,
     )
 
@@ -413,15 +411,10 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
         "est_groups": nr_sizing.est_groups,
         "capacity_bit": nr_sizing.capacity_bit,
         "tasks_per_core": nr_sizing.tasks_per_core,
-        "profile": nr_sizing.profile,
         "repartition_first": not nr_sizing.partial_before_exchange,
         "layout_hint": nr_sizing.layout_hint,
         "estimate_sec": round(nr_est_sec, 2),
         "estimate_cached": nr_est_cached,
-        # the profile is build-time; this (shared) bench session is
-        # the default/untuned build, so a wide-exchange decision
-        # would run its conf-only parts (bit + tasks) only
-        "profile_applied": nr_sizing.profile == "default",
     }
 
     def _nr_query():
@@ -450,8 +443,8 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
         f"# part2_groups1e8: {sec:.2f} s {runs} "
         f"(sizing: est={nr_sizing.est_groups} "
         f"repartition_first={not nr_sizing.partial_before_exchange} "
-        f"bit={nr_sizing.capacity_bit} tasks={nr_parts} "
-        f"profile={nr_sizing.profile}, estimate {nr_est_sec:.1f} s)",
+        f"bit={nr_sizing.capacity_bit} tasks={nr_parts}, "
+        f"estimate {nr_est_sec:.1f} s)",
         file=sys.stderr,
     )
 

@@ -177,7 +177,7 @@ def part2_query_repartition_first(
     moves the same exchange mass but builds ONE small covering map
     per reducer (groups/partitions entries). Measured same-session
     at groups=1e8 uniform, 1e9 rows (REGROUP_PROBE.json): the
-    rewrite under the UNTUNED profile is the best arm (1.15× over
+    rewrite on the untuned session is the best arm (1.15× over
     the conf-tuned default plan; ~2.3× under heavy host pressure,
     BASELINE.md §repartition-first) and needs no tuned confs. In the REDUCING regimes (groups ≪ rows
     per task) the standard plan's partial agg is a massive win —

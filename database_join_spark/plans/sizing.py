@@ -1,51 +1,50 @@
-"""Cardinality-driven execution-profile selection.
+"""Cardinality-driven aggregate and join sizing.
 
 The reference does not run its aggregate blind: a Flajolet–Martin
 sketch over the build side pre-sizes the aggregation hash table
 before execution (``q4112.c:336-377``, the estimate feeding the
 table-capacity choice at ``q4112.c:434-435``). Rounds 3–4 built the
 Spark analogues of every knob that sizing should drive — the codegen
-fast-map capacity (BASELINE.md §Fast-map ablation), the map-task
-multiplier and the wide-exchange shuffle confs (§spill matrix,
-§task-count cross-check) — but left the CHOICE to per-config pins.
-This module closes the loop (VERDICT r04 Next #3): estimate the
-group cardinality with one column-pruned ``approx_count_distinct``
-pass (Spark's HLL++ — the modern FM), then pick the execution
-profile from the measured regime table.
+fast-map capacity (BASELINE.md §Fast-map ablation) and the map-task
+multiplier (§spill matrix, §task-count cross-check) — but left the
+CHOICE to per-config pins. This module closes the loop (VERDICT r04
+Next #3): estimate the group cardinality with one column-pruned
+``approx_count_distinct`` pass (Spark's HLL++ — the modern FM), then
+pick the decision from the measured regime table.
 
 Measured regime table (1e9 rows, local[32]; BASELINE.md):
 
 ================  ==========================  =========================
 est. groups       winning config              evidence
 ================  ==========================  =========================
-≤ 2^16 (default   default confs, default      groups=100 insensitive
-fast map covers)  fast map, 1 task/core       (1.63 vs 1.73 s)
+≤ 2^16 (default   default fast map,           groups=100 insensitive
+fast map covers)  1 task/core                 (1.63 vs 1.73 s)
 2^16 … ~1e7       fast map sized to cover     1e6: 2^20 8.55 s vs 2^16
                   ALL groups, 1 task/core     10.63 s; 4× tasks LOSES
                                               (8.39 → 10.63 s @128t)
 ≥ ~1e7            repartition-first rewrite   1e8: best arm same-session
-(no-reduction     (no pre-exchange partial    (REGROUP_PROBE.json); conf-
-exchange)         map), UNTUNED profile, 4×   only fallback: wide-
-                  partitions                  exchange + 4× tasks (35.2
-                                              vs 207.5 s defaults, r04)
+(no-reduction     (no pre-exchange partial    (REGROUP_PROBE.json); the
+exchange)         map), 4× partitions         r04 conf matrix's best
+                                              (zstd, 1m buffers, 48g
+                                              heap, 4× tasks) ran 35.2
+                                              vs 207.5 s defaults
 ================  ==========================  =========================
 
 The ~1e7 boundary is where partial aggregation stops reducing: at
 1e9 rows on 128 tasks each task sees ~8e6 rows, so once the group
 domain reaches that order every per-task partial output is
-~input-sized, the exchange carries ~all rows, and the shuffle-write
-path (zstd, 1 MB buffers, more-but-smaller spills, big heap) is what
-matters. Below it, exchange width is tasks × groups — fewer tasks
-and a covering fast map win instead.
+~input-sized and the exchange carries ~all rows. Below it, exchange
+width is tasks × groups — fewer tasks and a covering fast map win
+instead.
 
 Scale note: the estimate is a FULL single pass (column-pruned,
 partially aggregated — the exchange carries one HLL sketch per
 task), exactly the discipline of the reference's FM pass, which also
 scans every build tuple. Distinct counts do NOT extrapolate linearly
 from row samples, so no sampling shortcut is offered; at 100 TB the
-pass is one cheap scan-only job, and production would cache the
-estimate alongside the table statistics (ANALYZE TABLE) rather than
-re-run it per query.
+pass is one cheap scan-only job, and ``plans/stats.py`` caches the
+estimate per table version (ANALYZE TABLE) rather than re-running it
+per query.
 """
 
 from __future__ import annotations
@@ -63,9 +62,8 @@ FAST_MAP_MIN_BIT = 16
 #: no regression at groups=100 (BASELINE.md §Fast-map ablation).
 FAST_MAP_MAX_BIT = 20
 #: Groups at or above this enter the no-reduction-exchange regime:
-#: repartition-first rewrite (r05, BASELINE.md §repartition-first);
-#: conf-only fallback = wide-exchange + 4× tasks (§spill matrix).
-WIDE_EXCHANGE_GROUPS = 10_000_000
+#: repartition-first rewrite (r05, BASELINE.md §repartition-first).
+NO_REDUCTION_GROUPS = 10_000_000
 #: Headroom over the HLL estimate when sizing the fast map (covers
 #: the 5% default rsd plus hash-occupancy slack).
 _COVER_SLACK = 1.3
@@ -105,26 +103,20 @@ PREFILTER_MAX_BITS_LOG2 = 27
 
 @dataclass(frozen=True)
 class AggSizing:
-    """The execution profile chosen for one aggregation."""
+    """The sizing chosen for one aggregation."""
 
     est_groups: int
     #: value for spark.sql.codegen.aggregate.fastHashMap.capacityBit
     capacity_bit: int
     #: map-side task multiplier (tasks = multiplier × cores)
     tasks_per_core: int
-    #: "default" | "wide-exchange" — the get_spark build profile the
-    #: workload should run under (build-time confs; at runtime only
-    #: capacity_bit and task count can still be applied)
-    profile: str
     #: False in the no-reduction regime: the caller should spell the
     #: aggregate repartition-first (datagen.part2_query_repartition_
     #: first is the template) so no partial map is built before the
-    #: exchange. Callers that CANNOT rewrite the plan should fall
-    #: back to the conf-only mitigation (wide-exchange profile +
-    #: 4× tasks, SPILL_PROBE's winner) — the rewrite beat that tuned
-    #: default plan on every measured host state (1.15× same-session
-    #: artifact, ~2.3× under heavy host pressure; REGROUP_PROBE.json
-    #: + BASELINE.md §repartition-first).
+    #: exchange. The rewrite beat r04's conf-tuned default plan on
+    #: every measured host state (1.15× same-session artifact, ~2.3×
+    #: under heavy host pressure; REGROUP_PROBE.json + BASELINE.md
+    #: §repartition-first).
     partial_before_exchange: bool = True
     #: Write-once layout that removes this aggregate's exchange
     #: entirely, when one is proven for the regime (round 9):
@@ -149,6 +141,11 @@ class AggSizing:
     #: and the query floor is the hot bucket's single-task scan.
     layout_hint: str | None = None
 
+    @property
+    def confs(self) -> dict[str, str]:
+        """The runtime SQL confs :func:`applied` sets for the action."""
+        return {_CAP_BIT_CONF: str(self.capacity_bit)}
+
     def tasks(self, cores: int) -> int:
         return self.tasks_per_core * cores
 
@@ -158,34 +155,32 @@ def decide(
     top_share: float | None = None,
     partitions: int = DEFAULT_PARTITIONS,
 ) -> AggSizing:
-    """Pure decision step — the regime table above as code. Split
-    from :func:`plan_for` so the thresholds are pytest-pinnable
-    without a Spark pass (tests/test_sizing.py).
+    """Pure decision step — the regime table above as code, pinnable
+    without a Spark pass (tests/test_sizing.py);
+    :func:`plans.stats.plan_for_cached` feeds it the estimates.
 
     Round-5 revision for the ≥1e7 regime: the winning answer is a
     PLAN shape, not a conf set — repartition on the group key first
     and aggregate once post-exchange (the pre-exchange partial map
     reduces nothing at this cardinality and its build/spill was the
     heap pressure the r04 conf matrix mitigated). Same-session arms
-    at groups=1e8 (REGROUP_PROBE.json): rewrite+untuned is the best
-    arm (1.15× over the conf-tuned default plan; ~2.3× under heavy
-    host pressure in the exploratory pair, BASELINE.md), and the
-    wide-exchange confs do not help the raw-row exchange, so
-    the profile recommendation in this regime is now "default" with
-    the rewrite, 4× partitions (the 1×/8× arms lose), and a fast map
-    covering the ~groups/partitions keys each reducer owns."""
+    at groups=1e8 (REGROUP_PROBE.json): the rewrite on the untuned
+    session is the best arm (1.15× over the conf-tuned default plan;
+    ~2.3× under heavy host pressure in the exploratory pair,
+    BASELINE.md), so this regime gets the rewrite, 4× partitions
+    (the 1×/8× arms lose), and a fast map covering the
+    ~groups/partitions keys each reducer owns."""
     est = max(int(est_groups), 1)
-    if est >= WIDE_EXCHANGE_GROUPS:
+    if est >= NO_REDUCTION_GROUPS:
         if (
             top_share is not None
             and top_share * partitions > SKEW_TOP_SHARE_FACTOR
         ):
             # A hot key would overload one reducer under the rewrite
             # (hh1 arms, REGROUP_PROBE.json): keep the partial agg —
-            # it absorbs the hot key map-side — and fall back to the
-            # conf-only mitigation for the residual wide exchange.
-            # Fast-map bit stays at the MEASURED hand-best for this
-            # conf-only regime — the r04 matrix's g1e8 winner ran bit
+            # it absorbs the hot key map-side — with 4× map tasks for
+            # the residual wide exchange. Fast-map bit stays at the
+            # MEASURED hand-best — the r04 matrix's g1e8 winner ran bit
             # 16 (SIZING_PROBE.json regime g1e8); bit 20 here
             # was an unmeasured extrapolation (ADVICE r05). At ≥1e7
             # groups no fast map covers the key set either way; the
@@ -194,7 +189,6 @@ def decide(
                 est,
                 FAST_MAP_MIN_BIT,
                 4,
-                "wide-exchange",
                 partial_before_exchange=True,
                 # round 10: the layout endgame holds under skew too
                 # (BUCKETED_AGG_SKEW_PROBE: hh1 1.9×, hh100 ~3× over
@@ -208,13 +202,12 @@ def decide(
             est,
             FAST_MAP_MAX_BIT,
             4,
-            "default",
             partial_before_exchange=False,
             layout_hint="bucket_on_group_key",
         )
     cover_bit = math.ceil(math.log2(est * _COVER_SLACK))
     bit = min(FAST_MAP_MAX_BIT, max(FAST_MAP_MIN_BIT, cover_bit))
-    return AggSizing(est, bit, 1, "default")
+    return AggSizing(est, bit, 1)
 
 
 @dataclass(frozen=True)
@@ -248,7 +241,7 @@ def decide_prefilter(
     domain the model overstates the match share — conservative: it
     can only make the prune LESS likely to apply near the envelope.
     Both inputs are HLL estimates (one column-pruned scan each, the
-    same discipline as :func:`plan_for`); at 100 TB production
+    same discipline as :func:`estimate_groups`); at 100 TB production
     would read them from table statistics instead (plans/stats.py
     is that catalog).
     """
@@ -291,18 +284,20 @@ def plan_prefilter(
     )
 
 
+def _group_key(group_cols: list[str]):
+    """The grouping key as one column: a struct for composite keys."""
+    if len(group_cols) > 1:
+        return F.struct(*[F.col(c) for c in group_cols])
+    return F.col(group_cols[0])
+
+
 def estimate_groups(
     df: DataFrame, group_cols: list[str], rsd: float = 0.05
 ) -> int:
     """HLL++ cardinality of the grouping key: one column-pruned scan,
     partial-aggregated (the exchange carries one sketch per task)."""
-    key = (
-        F.struct(*[F.col(c) for c in group_cols])
-        if len(group_cols) > 1
-        else F.col(group_cols[0])
-    )
     row = df.select(
-        F.approx_count_distinct(key, rsd=rsd).alias("n")
+        F.approx_count_distinct(_group_key(group_cols), rsd=rsd).alias("n")
     ).first()
     return int(row["n"])
 
@@ -317,12 +312,7 @@ def estimate_top_share(
     hitter is, by definition, frequent — a small uniform ROW sample
     sees it (unlike distinct counts, frequency shares extrapolate
     from row samples). Returns None on an empty sample."""
-    key = (
-        F.struct(*[F.col(c) for c in group_cols])
-        if len(group_cols) > 1
-        else F.col(group_cols[0])
-    )
-    sampled = df.select(key.alias("k")).sample(
+    sampled = df.select(_group_key(group_cols).alias("k")).sample(
         fraction=fraction, seed=seed
     )
     row = (
@@ -346,9 +336,10 @@ class SkewJoinPlan:
       skew is irrelevant because no fact shuffle happens at all.
     - ``"plain"``     — no heavy hitter visible; stock SMJ/SHJ under
       default AQE gates is already right.
-    - ``"aqe_split"`` — heavy hitter + shuffle join: run under
-      :func:`operators.skew.skewjoin_detection_confs` (``confs``
-      carries them) — the measured best fix (SKEWJOIN_PROBE.json:
+    - ``"aqe_split"`` — heavy hitter + shuffle join: run the action
+      under :func:`applied`, which sets ``confs``
+      (:func:`operators.skew.skewjoin_detection_confs`) — the
+      measured best fix (SKEWJOIN_PROBE.json:
       20.2 s vs 33.0 salted / 45.7 no-fix / 59.0 blind-default at
       4e8 rows, hot key 25%).
     - ``"salted"``    — heavy hitter but the caller flagged that AQE
@@ -372,10 +363,10 @@ class SkewJoinPlan:
 #: (session.py sets 64 MB — generous local[32] headroom; at 1000
 #: executors a 64 MB relation is still a cheap torrent broadcast).
 #: This constant is the PURE-decision default only; the live path
-#: (:func:`plan_skewjoin`) reads the session's actual conf so the
-#: prediction can never diverge from what auto-broadcast does
-#: (ADVICE r10), and tests/test_sizing pins this default to
-#: session.py's configured value.
+#: (:func:`plans.stats.plan_skewjoin_cached`) reads the session's
+#: actual conf so the prediction can never diverge from what
+#: auto-broadcast does (ADVICE r10), and tests/test_sizing pins this
+#: default to session.py's configured value.
 BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
@@ -466,75 +457,20 @@ def decide_skewjoin(
     )
 
 
-def plan_skewjoin(
-    fact: DataFrame,
-    key: str,
-    dim: DataFrame,
-    partitions: int = DEFAULT_PARTITIONS,
-    can_set_confs: bool = True,
-) -> SkewJoinPlan:
-    """Estimate the two inputs :func:`decide_skewjoin` needs and
-    decide — the FM-sizing loop closed for the join operator. One
-    column-pruned count on the dim (dims are the small side by
-    contract) and one sampled row-frequency pass on the fact key
-    (:func:`estimate_top_share`; frequency shares extrapolate from
-    row samples, distinct counts don't).
-
-    The broadcast budget comes from the session's LIVE
-    ``autoBroadcastJoinThreshold`` (ADVICE r10): a caller relying on
-    auto-broadcast gets exactly what the decision predicted even if
-    the session conf differs from session.py's 64 MB default (a
-    disabled threshold, -1, maps to budget 0 — never predict a
-    broadcast the session would refuse)."""
-    conf_budget = _parse_spark_bytes(
-        fact.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", None
-        )
-    )
-    return decide_skewjoin(
-        estimate_top_share(fact, [key]),
-        dim.count(),
-        partitions=partitions,
-        can_set_confs=can_set_confs,
-        broadcast_max_bytes=(
-            conf_budget if conf_budget is not None else BROADCAST_MAX_BYTES
-        ),
-    )
-
-
-def plan_for(
-    df: DataFrame,
-    group_cols: list[str],
-    rsd: float = 0.05,
-    partitions: int = DEFAULT_PARTITIONS,
-) -> AggSizing:
-    """Estimate the group cardinality of ``df.groupBy(group_cols)``
-    and pick the execution profile from the measured regime table —
-    the reference's FM-sizing pattern as a plan-time step. In the
-    no-reduction regime a second, sampled pass estimates the top
-    key's share so the repartition-first rewrite is only chosen when
-    no single reducer would be overloaded (the hh1 hazard)."""
-    est = estimate_groups(df, group_cols, rsd=rsd)
-    top_share = None
-    if est >= WIDE_EXCHANGE_GROUPS:
-        top_share = estimate_top_share(df, group_cols)
-    return decide(est, top_share=top_share, partitions=partitions)
-
-
 @contextmanager
-def applied_skewjoin(spark: SparkSession, plan: SkewJoinPlan):
-    """Apply a :class:`SkewJoinPlan`'s per-query confs for the
-    duration of a block, restoring previous values after — the
-    action-side companion to :func:`decide_skewjoin` (a registry
-    query returns a lazy DataFrame and must not mutate its session;
-    a caller that owns the ACTION wraps it here instead, the same
-    contract as :func:`applied`). No-op for strategies that carry
-    no confs (broadcast / plain / salted — those change the PLAN,
-    not the session)::
+def applied(spark: SparkSession, plan: AggSizing | SkewJoinPlan):
+    """Set ``plan.confs`` for the duration of a block — the
+    action-side half of a decision (a registry query returns a lazy
+    DataFrame and must not mutate its session; the caller that owns
+    the ACTION wraps it here). On exit each conf gets back the value
+    it had, and a conf that was unset before is unset again. A join
+    plan whose strategy changes the PLAN rather than the session
+    (broadcast / plain / salted) carries no confs, so this is a
+    no-op for it::
 
-        plan = plan_skewjoin(fact, "k", dim)
-        with applied_skewjoin(spark, plan):
-            run(plan)  # build the join per plan.strategy + collect
+        sizing, _ = plan_for_cached(df, ["g"], table_key=...)
+        with applied(spark, sizing):
+            run(sizing)  # build per sizing.tasks(cores) + collect
     """
     prev = {k: spark.conf.get(k, None) for k in plan.confs}
     for k, v in plan.confs.items():
@@ -547,22 +483,6 @@ def applied_skewjoin(spark: SparkSession, plan: SkewJoinPlan):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
-
-
-@contextmanager
-def applied(spark: SparkSession, sizing: AggSizing):
-    """Apply the RUNTIME-settable part of a sizing decision (the fast
-    map capacity) for the duration of a block, restoring the previous
-    value after. The build-time part (``sizing.profile``) cannot be
-    applied to a live session — callers in the wide-exchange regime
-    must build via ``get_spark(profile=sizing.profile)`` in a fresh
-    process (enforced there) and size tasks via ``sizing.tasks()``."""
-    old = spark.conf.get(_CAP_BIT_CONF, str(FAST_MAP_MIN_BIT))
-    spark.conf.set(_CAP_BIT_CONF, str(sizing.capacity_bit))
-    try:
-        yield sizing
-    finally:
-        spark.conf.set(_CAP_BIT_CONF, old)
 
 
 #: Healthy per-task row bound for a shuffled aggregation/window pass,
@@ -607,8 +527,6 @@ def shuffle_partitions_for(
     the FM-presized aggregate table (q4112.c:336-377) — here the
     estimate sizes the exchange instead of the hash table.
     """
-    import math
-
     if cores < 1:
         raise ValueError(f"cores must be >= 1, got {cores}")
     need = max(cores, math.ceil(input_rows / max(1, rows_per_task)))
@@ -680,8 +598,6 @@ def k_for(
     fit fell 153 → 11.3 s with downstream pairs identical and the
     deviation story pinned by the parity parts).
     """
-    import math
-
     return max(10, math.ceil(expansion * n_vectors / target_block_rows))
 
 
@@ -769,39 +685,3 @@ def coarse_k_for(k: int) -> int:
     :func:`~database_join_spark.operators.similarity.kmeans_assign`
     against the kc coarse centers."""
     return max(1, math.ceil(math.sqrt(k)))
-
-
-#: Measured amortization inputs for the groups=1e8 bucketed layout
-#: (BENCH_r12.json, 1e9-row fact, 128 buckets on the group key):
-#: one-time build 114.57 s; per-query saving = inline repartition-
-#: first floor 36.41 s − bucketed warm 6.43 s ≈ 30 s. The same pair
-#: for the large_inner probe-side layout: build 23.23 s, saving
-#: 5.26 − 0.78 ≈ 4.5 s.
-BUCKETED_G1E8_BUILD_SEC = 110.21
-BUCKETED_G1E8_SAVING_SEC = 25.05 - 4.97
-
-
-def layout_breakeven(
-    build_sec: float = BUCKETED_G1E8_BUILD_SEC,
-    per_query_saving_sec: float = BUCKETED_G1E8_SAVING_SEC,
-) -> int:
-    """Number of queries after which a write-once bucketed layout
-    PAYS: the smallest n with n·saving ≥ build (round 13, VERDICT
-    r12 #8 — the estimate-before-execute discipline applied to the
-    last hand decision). Constants track the CURRENT artifact of
-    record (`BENCH_FULL.json`, the round-13 quiet capture: build
-    110.21 s, inline floor 25.05 s, bucketed warm 4.97 s ⇒ pays at
-    the 6th group-key query; the r12 capture's 114.57/36.41/6.43
-    gave 4 — the breakeven moves with the same host epoch the
-    floors do, which is exactly why it is derived, not frozen). A
-    fact queried fewer times than the breakeven should stay inline
-    (the floor is cheaper than a build it would never amortize);
-    past it the layout wins and every further query banks the
-    saving. Advisory — the engine cannot know future query counts —
-    but it turns "bucket it?" from taste into arithmetic a catalog
-    (or a human) can apply; infinity (a layout that never pays)
-    comes back as a large sentinel when the saving is
-    non-positive."""
-    if per_query_saving_sec <= 0:
-        return 1 << 31
-    return max(1, math.ceil(build_sec / per_query_saving_sec))

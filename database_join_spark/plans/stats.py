@@ -2,7 +2,7 @@
 
 ``plans/sizing.py`` closes the reference's FM-sizing loop
 (``q4112.c:336-377``) by estimating group cardinality with one
-HLL++ pass before picking the execution profile. That pass is a
+HLL++ pass before picking the aggregate's sizing. That pass is a
 full column-pruned scan, and the sizing module's own scale note
 says what a production engine does instead: compute statistics
 ONCE per table version (``ANALYZE TABLE … COMPUTE STATISTICS FOR
@@ -38,10 +38,12 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from .sizing import (
+    BROADCAST_MAX_BYTES,
     DEFAULT_PARTITIONS,
-    WIDE_EXCHANGE_GROUPS,
+    NO_REDUCTION_GROUPS,
     AggSizing,
     SkewJoinPlan,
+    _parse_spark_bytes,
     decide,
     decide_skewjoin,
     estimate_groups,
@@ -146,10 +148,17 @@ def plan_for_cached(
     partitions: int = DEFAULT_PARTITIONS,
     path: Path | str | None = None,
 ) -> tuple[AggSizing, bool]:
-    """:func:`plans.sizing.plan_for` with the scan-time statistics
-    read through the catalog. First call per table version pays the
-    HLL pass (and, in the no-reduction regime, the sampled top-share
-    pass); every later call is a file read. The DECISION is always
+    """Estimate the group cardinality of ``df.groupBy(group_cols)``
+    and size the aggregate with :func:`plans.sizing.decide` — the
+    reference's FM-sizing pattern as a plan-time step — with the
+    scan-time statistics read through the catalog. In the
+    no-reduction regime a second, sampled pass estimates the top
+    key's share so the repartition-first rewrite is only chosen when
+    no single reducer would be overloaded (the hh1 hazard).
+
+    First call per table version pays the HLL pass (and, in the
+    no-reduction regime, the sampled top-share pass); every later
+    call is a file read. The DECISION is always
     re-derived from the statistics — only measurement is cached, so
     regime-table changes take effect without invalidation.
 
@@ -163,7 +172,7 @@ def plan_for_cached(
     est = int(est)
     top_share = None
     share_hit = True
-    if est >= WIDE_EXCHANGE_GROUPS:
+    if est >= NO_REDUCTION_GROUPS:
         top_share, share_hit = cached_statistic(
             table_key,
             _stat_name("top_share", group_cols, rsd),
@@ -184,8 +193,9 @@ def plan_skewjoin_cached(
     can_set_confs: bool = True,
     path: Path | str | None = None,
 ) -> tuple[SkewJoinPlan, bool]:
-    """:func:`plans.sizing.plan_skewjoin` with its two estimate
-    inputs — the fact key's sampled top share and the dim row count
+    """Decide a fact⋈dim join with :func:`plans.sizing.decide_skewjoin`
+    from its two estimate inputs — the fact key's sampled top share
+    (:func:`plans.sizing.estimate_top_share`) and the dim row count
     — read through the statistics catalog (VERDICT r10 #4): the
     probe measured the eager per-call estimate at 1.0–4.7 s at 4e8
     rows; with a warm catalog the decision is two file reads. This
@@ -198,11 +208,13 @@ def plan_skewjoin_cached(
     ``fact_table_key`` must encode identity+version of the fact AND
     any key derivation applied before the join (a derived key's
     distribution is not the base column's); same for
-    ``dim_table_key``. The broadcast budget reads the session's live
-    ``autoBroadcastJoinThreshold`` exactly like the uncached path.
-    Returns ``(plan, fully_cached)``."""
-    from .sizing import BROADCAST_MAX_BYTES, _parse_spark_bytes
-
+    ``dim_table_key``. The broadcast budget comes from the session's
+    LIVE ``autoBroadcastJoinThreshold`` (ADVICE r10): a caller relying
+    on auto-broadcast gets exactly what the decision predicted even
+    if the session conf differs from session.py's 64 MB default (a
+    disabled threshold, -1, maps to budget 0 — never predict a
+    broadcast the session would refuse). Returns
+    ``(plan, fully_cached)``."""
     top_share, ts_hit = cached_statistic(
         fact_table_key,
         f"top_share|cols={key}",

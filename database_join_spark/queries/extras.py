@@ -441,7 +441,7 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_skew_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skewed fact⋈dim join whose strategy is CHOSEN by the planner
-    (plans/sizing.plan_skewjoin, VERDICT r09 #1) — the join-side twin
+    (plans/sizing.decide_skewjoin, VERDICT r09 #1) — the join-side twin
     of the FM-sizing loop the reference runs for its aggregate
     (``q4112.c:336-377`` feeding the join of ``q4112_hj.c:95-133``).
 

@@ -136,7 +136,6 @@ def test_bench_emits_one_valid_slim_json_line(tmp_path):
         "est_groups",
         "capacity_bit",
         "tasks_per_core",
-        "profile",
     }
     # round-6 row: the no-reduction regime records the decision the
     # sizing loop actually made (at toy scale the estimate is small,
@@ -146,7 +145,5 @@ def test_bench_emits_one_valid_slim_json_line(tmp_path):
     assert set(nr) >= {
         "est_groups",
         "repartition_first",
-        "profile",
-        "profile_applied",
     }
     assert isinstance(nr["repartition_first"], bool)

@@ -67,76 +67,3 @@ def test_events_stream_repairs_or_rejects_non_utc_session(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_wide_exchange_profile_contract():
-    """The wide-exchange profile is a named opt-in: unknown names
-    fail loudly (a typo must not silently run untuned), and the conf
-    set carries exactly the SPILL_PROBE-winning build-time keys."""
-    import pytest
-
-    from database_join_spark.session import WIDE_EXCHANGE_CONFS, get_spark
-
-    with pytest.raises(ValueError, match="unknown session profile"):
-        get_spark(profile="wide_exchange")  # underscore typo
-    assert set(WIDE_EXCHANGE_CONFS) == {
-        "spark.io.compression.codec",
-        "spark.shuffle.file.buffer",
-        "spark.shuffle.spill.diskWriteBufferSize",
-        "spark.shuffle.unsafe.file.output.buffer",
-    }
-    # Build-time-only keys: none of these are SQL runtime confs, so
-    # applying them via spark.conf.set would silently no-op — the
-    # profile must stay on the BUILDER path (get_spark), which is
-    # what this pin documents.
-    assert all(not k.startswith("spark.sql.") for k in WIDE_EXCHANGE_CONFS)
-
-
-def test_wide_exchange_profile_refuses_live_untuned_session(spark):
-    """ADVICE r04: requesting the wide-exchange profile while an
-    untuned session is live must raise, not silently return the live
-    session with none of the profile confs applied (callers would
-    then label measurements as tuned when they are not)."""
-    import pytest
-
-    from database_join_spark.session import get_spark
-
-    assert spark.conf.get("spark.io.compression.codec", None) != "zstd"
-    with pytest.raises(RuntimeError, match="already active without"):
-        get_spark(profile="wide-exchange")
-
-
-def test_default_profile_refuses_live_tuned_session(monkeypatch):
-    """ADVICE r05 — the mirror direction: requesting the DEFAULT
-    profile while a wide-exchange session is live must raise, not
-    silently hand back the tuned session (a probe's 'untuned' arm
-    would then run with zstd/1m buffers). A tuned live session can't
-    be built inside the shared test JVM, so the guard is exercised
-    against a stub session that reports the profile confs."""
-    from pyspark.sql import SparkSession
-
-    from database_join_spark.session import WIDE_EXCHANGE_CONFS, get_spark
-
-    class _Conf:
-        def get(self, key, default=None):
-            return WIDE_EXCHANGE_CONFS.get(key, default)
-
-    class _TunedSession:
-        conf = _Conf()
-
-    monkeypatch.setattr(
-        SparkSession, "getActiveSession", staticmethod(lambda: _TunedSession())
-    )
-    with pytest.raises(RuntimeError, match="mislabeled as untuned"):
-        get_spark()
-    with pytest.raises(RuntimeError, match="mislabeled as untuned"):
-        get_spark(profile="default")  # sizing.profile spelling
-
-
-def test_default_profile_alias(spark):
-    """get_spark(profile='default') is the documented sizing.profile
-    contract (plans/sizing.py) — it must behave exactly like
-    profile=None, returning the live untuned session."""
-    from database_join_spark.session import get_spark
-
-    assert get_spark(profile="default") is spark

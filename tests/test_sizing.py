@@ -11,11 +11,14 @@ from pyspark.sql import functions as F
 from database_join_spark.plans.sizing import (
     FAST_MAP_MAX_BIT,
     FAST_MAP_MIN_BIT,
-    WIDE_EXCHANGE_GROUPS,
+    NO_REDUCTION_GROUPS,
     applied,
     decide,
     estimate_groups,
-    plan_for,
+)
+from database_join_spark.plans.stats import (
+    plan_for_cached,
+    plan_skewjoin_cached,
 )
 
 
@@ -26,34 +29,21 @@ def test_decide_thresholds_match_measured_regimes():
     re-open the 2^16-default 10.63 s and 207.5 s regressions."""
     # groups=100: default fast map (insensitive regime), 1 task/core
     s = decide(100)
-    assert (s.capacity_bit, s.tasks_per_core, s.profile) == (
-        FAST_MAP_MIN_BIT,
-        1,
-        "default",
-    )
+    assert (s.capacity_bit, s.tasks_per_core) == (FAST_MAP_MIN_BIT, 1)
     # groups=1e6: covering fast map (2^20 measured 8.55 s vs 10.63 s
     # at 2^16), still 1 task/core (4x tasks measured to LOSE here:
     # 8.39 -> 10.63 s across 32->128 tasks)
     s = decide(1_000_000)
-    assert (s.capacity_bit, s.tasks_per_core, s.profile) == (
-        FAST_MAP_MAX_BIT,
-        1,
-        "default",
-    )
+    assert (s.capacity_bit, s.tasks_per_core) == (FAST_MAP_MAX_BIT, 1)
     # groups=1e8: no-reduction exchange. Round-5 revision: the
     # winning answer is the repartition-first PLAN rewrite (no
-    # pre-exchange partial map) under the UNTUNED profile - the best
+    # pre-exchange partial map) on the untuned session - the best
     # arm same-session (1.15x over the conf-tuned default plan;
-    # ~2.3x under heavy host pressure) and the wide-exchange confs
-    # do not help the raw-row exchange (REGROUP_PROBE.json).
+    # ~2.3x under heavy host pressure; REGROUP_PROBE.json).
     # 4x partitions (1x/8x arms lose), fast map covering the
     # ~groups/partitions keys per reducer.
     s = decide(100_000_000)
-    assert (s.capacity_bit, s.tasks_per_core, s.profile) == (
-        FAST_MAP_MAX_BIT,
-        4,
-        "default",
-    )
+    assert (s.capacity_bit, s.tasks_per_core) == (FAST_MAP_MAX_BIT, 4)
     assert s.partial_before_exchange is False
     assert s.tasks(32) == 128
     # round 9: the regime's measured ENDGAME is named as a layout
@@ -76,11 +66,11 @@ def test_decide_thresholds_match_measured_regimes():
 
 
 def test_decide_boundaries():
-    """Exact boundary behavior: the wide-exchange cliff sits at
-    WIDE_EXCHANGE_GROUPS, and the fast-map bit interpolates (with
+    """Exact boundary behavior: the no-reduction cliff sits at
+    NO_REDUCTION_GROUPS, and the fast-map bit interpolates (with
     coverage slack) between the min and max bits."""
-    assert decide(WIDE_EXCHANGE_GROUPS).partial_before_exchange is False
-    assert decide(WIDE_EXCHANGE_GROUPS - 1).partial_before_exchange is True
+    assert decide(NO_REDUCTION_GROUPS).partial_before_exchange is False
+    assert decide(NO_REDUCTION_GROUPS - 1).partial_before_exchange is True
     # slack pushes just-past-2^16 cardinalities to a 17-bit map
     assert decide(65_536).capacity_bit == 17
     assert decide(40_000).capacity_bit == FAST_MAP_MIN_BIT
@@ -110,14 +100,17 @@ def test_estimate_groups_multi_column(spark):
     assert abs(est - 70) / 70 <= 0.15
 
 
-def test_plan_for_end_to_end_and_applied(spark):
-    """plan_for on a small frame lands in the default regime, and
+def test_plan_for_end_to_end_and_applied(spark, tmp_path):
+    """plan_for_cached on a small frame lands in the low regime, and
     applied() sets the runtime-settable knob for the block only."""
     conf = "spark.sql.codegen.aggregate.fastHashMap.capacityBit"
     df = spark.range(0, 1000).select((F.col("id") % 50).alias("g"))
-    sizing = plan_for(df, ["g"])
-    assert sizing.profile == "default"
+    sizing, cached = plan_for_cached(
+        df, ["g"], table_key="range1000", path=tmp_path / "stats.json"
+    )
+    assert not cached
     assert sizing.capacity_bit == FAST_MAP_MIN_BIT
+    assert sizing.tasks_per_core == 1
     before = spark.conf.get(conf, "16")
     with applied(spark, decide(1_000_000)) as s:
         assert spark.conf.get(conf) == str(s.capacity_bit) == "20"
@@ -132,10 +125,10 @@ def test_skew_guard_thresholds():
     from database_join_spark.plans.sizing import SKEW_TOP_SHARE_FACTOR
 
     # hh1 measured hazard: one key owns 50% of rows -> one reducer
-    # would serialize 5e8 rows; keep partial agg, wide-exchange confs
+    # would serialize 5e8 rows; keep partial agg, 4x map tasks
     s = decide(100_000_000, top_share=0.5, partitions=128)
     assert s.partial_before_exchange is True
-    assert s.profile == "wide-exchange"
+    assert s.tasks_per_core == 4
     # ADVICE r05: the conf-only fallback runs the MEASURED hand-best
     # config (SIZING_PROBE.json g1e8 arm: bit 16), not an extrapolated 2^20
     from database_join_spark.plans.sizing import FAST_MAP_MIN_BIT
@@ -145,7 +138,6 @@ def test_skew_guard_thresholds():
     # reducers; rewrite stays
     s = decide(100_000_000, top_share=0.005, partitions=128)
     assert s.partial_before_exchange is False
-    assert s.profile == "default"
     # exact boundary: share * partitions == factor is NOT overload
     boundary = SKEW_TOP_SHARE_FACTOR / 128
     assert decide(100_000_000, boundary, 128).partial_before_exchange is False
@@ -156,7 +148,6 @@ def test_skew_guard_thresholds():
     assert decide(100_000_000).partial_before_exchange is False
     # guard is irrelevant below the regime threshold
     assert decide(1_000_000, top_share=0.9).partial_before_exchange is True
-    assert decide(1_000_000, top_share=0.9).profile == "default"
 
 
 def test_estimate_top_share_detects_planted_hot_key(spark):
@@ -226,12 +217,10 @@ def test_decide_skewjoin_ladder():
     assert s.strategy == "salted" and s.salts == SALTED_JOIN_SALTS
 
 
-def test_plan_skewjoin_end_to_end(spark):
-    """plan_skewjoin's estimates drive the decision on live frames:
-    a planted 50%-share fact key over a too-big-to-broadcast dim
-    picks the split; the same fact over a small dim broadcasts."""
-    from database_join_spark.plans.sizing import plan_skewjoin
-
+def test_plan_skewjoin_end_to_end(spark, tmp_path):
+    """plan_skewjoin_cached's estimates drive the decision on live
+    frames: a planted 50%-share fact key over a too-big-to-broadcast
+    dim picks the split; the same fact over a small dim broadcasts."""
     fact = spark.range(0, 200_000).select(
         F.when(F.col("id") % 2 == 0, F.lit(7))
         .otherwise(F.col("id"))
@@ -246,24 +235,57 @@ def test_plan_skewjoin_end_to_end(spark):
     assert share is not None and share > 0.4
     plan = SZ.decide_skewjoin(share, big_dim.count(), partitions=128)
     assert plan.strategy == "aqe_split"
-    assert plan_skewjoin(fact, "k", small_dim).strategy == "broadcast"
-
-
-def test_applied_skewjoin_sets_and_restores(spark):
-    """The action-side applier: aqe_split's confs hold inside the
-    block and restore after; conf-free strategies are a no-op."""
-    from database_join_spark.plans.sizing import (
-        applied_skewjoin,
-        decide_skewjoin,
+    small, cached = plan_skewjoin_cached(
+        fact,
+        "k",
+        small_dim,
+        fact_table_key="planted_hot_k",
+        dim_table_key="range1000",
+        path=tmp_path / "stats.json",
     )
+    assert not cached
+    assert small.strategy == "broadcast"
 
+
+def test_applied_restores_exactly_what_it_found(spark):
+    """applied() sets a plan's confs for the block and leaves each
+    conf as it found it: a value set before is restored, a conf unset
+    before is unset after (not written back as its default), for both
+    an aggregate sizing and an aqe_split join plan. A join plan that
+    carries no confs (broadcast) is a no-op."""
+    from database_join_spark.plans.sizing import decide_skewjoin
+
+    agg = decide(1_000_000)
+    join = decide_skewjoin(0.25, 10_000_000, partitions=128)
+    assert join.strategy == "aqe_split" and join.confs
+    for plan in (agg, join):
+        saved = {k: spark.conf.get(k, None) for k in plan.confs}
+        try:
+            for k in plan.confs:
+                spark.conf.unset(k)
+            with applied(spark, plan) as p:
+                assert p is plan
+                for k, v in plan.confs.items():
+                    assert spark.conf.get(k) == v
+            for k in plan.confs:
+                assert spark.conf.get(k, None) is None, k
+            # set explicitly (to the defaults): restored as set
+            defaults = {k: spark.conf.get(k) for k in plan.confs}
+            for k, v in defaults.items():
+                spark.conf.set(k, v)
+            with applied(spark, plan):
+                pass
+            for k, v in defaults.items():
+                assert spark.conf.get(k, None) == v, k
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
     factor = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
     before = spark.conf.get(factor)
-    plan = decide_skewjoin(0.25, 10_000_000, partitions=128)
-    with applied_skewjoin(spark, plan):
-        assert spark.conf.get(factor) == "2.0"
-    assert spark.conf.get(factor) == before
-    with applied_skewjoin(spark, decide_skewjoin(0.9, 1_000)):
+    with applied(spark, decide_skewjoin(0.9, 1_000)):
         assert spark.conf.get(factor) == before  # broadcast: no confs
 
 
@@ -341,17 +363,17 @@ def test_join_bloom_prefilter_plan_follows_estimate(spark):
     assert "xxhash64" in plan and "bit_or" in plan
 
 
-def test_broadcast_budget_pinned_to_session_and_live_conf(spark):
+def test_broadcast_budget_pinned_to_session_and_live_conf(spark, tmp_path):
     """ADVICE r10: BROADCAST_MAX_BYTES is a hand copy of session.py's
     autoBroadcastJoinThreshold — pin the two together so the pure
     decision default can never silently diverge from what a caller
-    relying on auto-broadcast gets, and verify plan_skewjoin reads
-    the LIVE conf (a lowered threshold flips the same dim from
-    broadcast to plain within one session)."""
+    relying on auto-broadcast gets, and verify plan_skewjoin_cached
+    reads the LIVE conf (a lowered threshold flips the same dim from
+    broadcast to plain within one session, with the statistics
+    served from the catalog)."""
     from database_join_spark.plans.sizing import (
         BROADCAST_MAX_BYTES,
         _parse_spark_bytes,
-        plan_skewjoin,
     )
 
     assert (
@@ -374,12 +396,24 @@ def test_broadcast_budget_pinned_to_session_and_live_conf(spark):
     dim = spark.range(0, 1_000).select(F.col("id").alias("k"))
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
+
+    def strategy():
+        plan, _ = plan_skewjoin_cached(
+            fact,
+            "k",
+            dim,
+            fact_table_key="range50000",
+            dim_table_key="range1000",
+            path=tmp_path / "stats.json",
+        )
+        return plan.strategy
+
     try:
-        assert plan_skewjoin(fact, "k", dim).strategy == "broadcast"
+        assert strategy() == "broadcast"
         spark.conf.set(key, "-1")  # auto-broadcast disabled
         # (tiny-sample top-share noise may pick plain OR aqe_split;
         # the contract under test is only that broadcast is refused)
-        assert plan_skewjoin(fact, "k", dim).strategy != "broadcast"
+        assert strategy() != "broadcast"
     finally:
         spark.conf.set(key, old)
 
@@ -643,24 +677,6 @@ def test_exchange_multiplier_measured_not_calibrated(spark, tmp_path):
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def test_layout_breakeven_rule():
-    """VERDICT r12 #8: the bucketed-layout amortization point is a
-    planner rule, not taste. Defaults track the current artifact of
-    record (BENCH_FULL round-13 quiet capture: build 110.21 s,
-    inline floor 25.05 s − bucketed warm 4.97 s ⇒ pays at the 6th
-    group-key query; the r12 epoch's 114.57/~30 gave 4 — the
-    breakeven moves with the host epoch the floors do, so it is
-    derived, not frozen); a non-positive saving never pays."""
-    from database_join_spark.plans.sizing import layout_breakeven
-
-    assert layout_breakeven() == 6
-    assert layout_breakeven(114.57, 36.41 - 6.43) == 4  # r12 epoch
-    assert layout_breakeven(23.23, 5.26 - 0.78) == 6  # large_inner
-    assert layout_breakeven(100.0, 0.0) == 1 << 31
-    assert layout_breakeven(100.0, -5.0) == 1 << 31
-    assert layout_breakeven(1.0, 100.0) == 1
 
 
 def test_token_stat_sample_spreads_across_files(spark, tmp_path):
