@@ -22,6 +22,7 @@ import os
 import statistics
 import sys
 import time
+from dataclasses import replace
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent)
@@ -497,23 +498,13 @@ def _throughput(spark, headline_only: bool = False) -> dict[str, float]:
                 F.count("g").alias("n_groups"),
             )
 
-        old_bit = spark.conf.get(
-            "spark.sql.codegen.aggregate.fastHashMap.capacityBit", "16"
-        )
-        spark.conf.set(
-            "spark.sql.codegen.aggregate.fastHashMap.capacityBit", "20"
-        )
-        try:
+        # per-bucket state fits a 2^20 fast map (see above)
+        with applied(spark, replace(nr_sizing, capacity_bit=20)):
             baruns = []
             for _ in range(4):  # run 0 = cold scan (reported)
                 t0 = time.perf_counter()
                 _bucketed_part2().collect()
                 baruns.append(time.perf_counter() - t0)
-        finally:
-            spark.conf.set(
-                "spark.sql.codegen.aggregate.fastHashMap.capacityBit",
-                old_bit,
-            )
     finally:
         spark.sql("DROP TABLE IF EXISTS bench_p2_fact")
     ba_sec = min(baruns[1:])

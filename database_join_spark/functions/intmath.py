@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 #: :func:`dec` so Spark and DuckDB emit the same scale.
 DECIMAL_T = "decimal(18,6)"
 
+#: Decimal-stable sum of a DOUBLE measure, emitted as DOUBLE — the one
+#: SQL spelling every batch and streaming query uses; format ``{c}``
+#: with the column or expression to sum.
+DSUM = "CAST(SUM(CAST({c} AS DECIMAL(18,6))) AS DOUBLE)"
+
 
 def dec(col: Column | str, t: str = DECIMAL_T) -> Column:
     """Pin a column to an exact decimal type (pre- or post-aggregate)."""

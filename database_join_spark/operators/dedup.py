@@ -383,8 +383,8 @@ class _CheckpointHandle:
     flagged for ``persist``. Dropping the blocks truncates the frame's
     only data source, so release must wait until the caller has
     collected: registering this handle in the session persist pool
-    defers it to the next query's ``configure_session``, the same
-    contract as ``track_persist``.
+    defers it to the next query's entry, the same contract as
+    ``track_persist``.
     """
 
     def __init__(self, sc, ids: set[int]):

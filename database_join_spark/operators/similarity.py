@@ -777,7 +777,7 @@ def kmeans_fit(
     head() job (see :func:`_driver_fit_rows`).
 
     The quantized input is persisted (through ``track_persist``, so
-    the next gated query's configure_session drains it): the fit
+    the next query's entry drains it): the fit
     reads it, and the returned assignment reads it again.
     """
     from database_join_spark.session import track_persist
@@ -1274,11 +1274,11 @@ def semdedup_pairs(
     # the ENTIRE assign — k·dim distance work per vector — runs
     # twice. Negligible at fixture k, but at k_for(n) scale the
     # assign is a real phase (round-12 ladder) and paying it once is
-    # the point. Routed through track_persist so the next gated
-    # query's configure_session drains it — a raw .persist here leaked
-    # one cached frame per call for the life of a shared session
-    # (ADVICE r12); track_persist's default level already degrades to
-    # disk spill, not recompute.
+    # the point. Routed through track_persist so the next query's
+    # entry drains it — a raw .persist here leaked one cached frame
+    # per call for the life of a shared session (ADVICE r12);
+    # track_persist's default level already degrades to disk spill,
+    # not recompute.
     from database_join_spark.session import track_persist
 
     assign_frame = kmeans_assign_topm(base, cents, m=m, ratio=ratio)

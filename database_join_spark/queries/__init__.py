@@ -10,10 +10,13 @@ ML ops) get rows-only checks from the driver plus property tests here.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from database_join_spark.session import configure_session
 
 
 @dataclass(frozen=True)
@@ -141,22 +144,35 @@ def query(
 ):
     """Register a query implementation under a SURVEY §2 query id.
 
+    The decorator registers and returns a wrapper that keeps the
+    query-entry contract, so bodies never configure the session
+    themselves: :func:`session.configure_session` runs first, pinning
+    ``RUNTIME_CONFS`` and releasing the frames earlier queries
+    ``track_persist``-ed. Every caller of the function gets it; the
+    body stays reachable as ``__wrapped__``.
+
     Gate membership is NOT declared here — see :data:`DRIVER_GATE`.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query id {name!r}")
+
+        @functools.wraps(fn)
+        def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+            configure_session(spark)
+            return fn(spark, sf_dir)
+
         REGISTRY[name] = QuerySpec(
             name=name,
-            fn=fn,
+            fn=entry,
             oracle=oracle,
             doc=(fn.__doc__ or "").strip(),
             bench=bench,
             tags=tags,
             gated=name in DRIVER_GATE,
         )
-        return fn
+        return entry
 
     return deco
 

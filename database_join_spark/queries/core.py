@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from database_join_spark.catalog import table
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
 
 # Integer role columns (identical SQL text works in Spark and DuckDB).
 PRICE = "CAST(FLOOR(p_retailprice) AS BIGINT)"
@@ -42,7 +41,6 @@ def _li_pt(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     explicit ``select`` guarantees the parquet ReadSchema stays narrow
     even if a caller composes further.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity"
     )
@@ -71,7 +69,6 @@ def scan_columnar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters / ReadSchema in ``.explain``), so at 100 TB the
     scan reads only the row groups and columns that can match.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -208,7 +205,6 @@ def agg_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical dataflow, and the integer DIV keeps the reference's
     integer-precision contract.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_extendedprice")
     return li.agg(
         F.expr(
@@ -276,7 +272,6 @@ def agg_partial_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises the cache-miss-heavy path the reference benchmarks at
     groups=1e6..1e8 (``q4112.csv:51-100``).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     return li.groupBy("l_orderkey").agg(
         F.expr(f"sum({QTY}) DIV count(*)").alias("avg_qty"),
@@ -340,7 +335,6 @@ def approx_distinct_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
     with rsd=0.01 here). No DuckDB oracle — estimator families differ;
     the pytest suite instead asserts |approx − exact| ≤ 5·rsd·exact.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
     return li.agg(
         F.approx_count_distinct("l_suppkey", rsd=0.01).alias("approx_suppliers"),
@@ -370,7 +364,6 @@ def filter_semijoin_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a LEFT SEMI broadcast join — the build side carries only keys,
     no payload columns survive, and the fact table never shuffles.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
     pt = (
         table(spark, sf_dir, "part")
@@ -406,7 +399,6 @@ def project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives inside WholeStageCodegen fused with the scan — no
     intermediate columnar buffer, same as the reference's fused loop.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     price = F.floor("l_extendedprice").cast("long")
     disc = F.floor(F.col("l_discount") * 100).cast("long")
@@ -471,7 +463,6 @@ def datagen_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generator-computes-the-oracle contract of ``q4112.h:13``.
     At scale ``spark.range`` is embarrassingly parallel (no input).
     """
-    configure_session(spark)
     g = _GEN
     items = spark.range(1, g["n_inner"] + 1).select(
         F.col("id"),

@@ -12,9 +12,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_join_spark.catalog import table
+from database_join_spark.functions import DSUM
 from database_join_spark.operators.text import TOKENS_DUCK
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
 
 #: events.event_type domain (fixtures; FIXTURES.md §B) — pivot needs
 #: the column set pinned up front to keep the schema deterministic
@@ -84,7 +84,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators.asof import asof_join_windowed
 
-    configure_session(spark)
     ev, orders = _asof_inputs(spark, sf_dir)
     return asof_join_windowed(ev, orders, **_ASOF_ARGS).select(
         "event_id", "user_id", "o_orderkey", "o_totalprice"
@@ -108,7 +107,6 @@ def join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators.asof import asof_join_bucketed
 
-    configure_session(spark)
     ev, orders = _asof_inputs(spark, sf_dir)
     return asof_join_bucketed(
         ev, orders, bucket_seconds=30 * 24 * 3600, **_ASOF_ARGS
@@ -144,7 +142,6 @@ def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. Under the hood this is exactly one hash aggregation with
     conditional sums, which is what the oracle spells out.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events")
     counts = (
         ev.groupBy("user_id")
@@ -161,9 +158,7 @@ def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
-            ).alias("purchase_value")
+            F.expr(DSUM.format(c="value")).alias("purchase_value")
         )
     )
     return counts.join(pv, "user_id", "left").withColumn(
@@ -195,7 +190,6 @@ def agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators.skew import salted_groupby_sum
 
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.floor("l_quantity").cast("long").alias("q")
     )
@@ -230,7 +224,6 @@ def agg_repartition_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     single hot key must keep the partial-agg plan). Fixture scale is
     correctness-only; the regime evidence lives in the probe.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", F.floor("value").cast("long").alias("v")
     )
@@ -308,7 +301,6 @@ def agg_bucketed_exchange_free(
     )
     from database_join_spark.plans.stats import parquet_table_key
 
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.floor("l_quantity").cast("long").alias("q"),
@@ -397,7 +389,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators.skew import salted_join
 
-    configure_session(spark)
     fact = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_returnflag",
@@ -474,7 +465,6 @@ def join_skew_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan_skewjoin_cached,
     )
 
-    configure_session(spark)
     fact = table(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_orderkey") % 2 == 0, F.lit(1))
         .otherwise(F.col("l_partkey"))
@@ -568,7 +558,6 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_join_spark.operators import bloom as B
     from database_join_spark.plans import sizing as Z
 
-    configure_session(spark)
     dim = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_size") <= 5)
@@ -635,7 +624,6 @@ def agg_avg_int_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.functions.ext import install_avg_int
 
-    configure_session(spark)
     install_avg_int(spark)
     table(spark, sf_dir, "lineitem").select(
         F.floor("l_extendedprice").cast("long").alias("p")
@@ -672,7 +660,6 @@ def source_synthdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.sources.synthdocs import register
 
-    configure_session(spark)
     register(spark)
     docs = (
         spark.read.format("synthdocs")
@@ -707,7 +694,6 @@ def agg_quantile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact quantiles need the full sorted group; the 100 TB path is
     the approx variant below.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, 0.25)").alias("q25"),
@@ -737,7 +723,6 @@ def agg_quantile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer sorts result columns with pandas, which cannot hash
     an ``array<double>`` cell (CORRECTNESS_r01's only hard failure).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr(
@@ -794,7 +779,6 @@ def higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators.text import tokens as _tokens
 
-    configure_session(spark)
     docs = table(spark, sf_dir, "documents").select(
         "lang", _tokens("text").alias("toks")
     )
@@ -844,7 +828,6 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     as cosine). The frame is totally ordered via the s_suppkey
     tiebreak so every position, and hence every value, is unique.
     """
-    configure_session(spark)
     sup = table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(
         F.col("s_acctbal").desc(), F.col("s_suppkey")
@@ -888,8 +871,6 @@ def udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, same scale posture as mapInPandas.
     """
     from pyspark.sql.functions import lit, udtf
-
-    configure_session(spark)
 
     @udtf(returnType="doc_id bigint, token string, n bigint")
     class FrequentTokens:
@@ -962,7 +943,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     pathological user is bounded by the skew playbook documented in
     pack_sequences/operators/skew.py.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("e")
     )
@@ -1044,7 +1024,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id + a single-row final aggregate; funnel depth adds
     projections, never passes over the data.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("e")
     )
@@ -1118,7 +1097,6 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets) — partial aggregation collapses each task to its local
     matrix before the exchange.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", F.expr("unix_micros(ts) DIV 86400000000").alias("day")
     ).dropDuplicates(["user_id", "day"])
@@ -1189,7 +1167,6 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     few-partition windows; at fixture scale the window spelling is
     one scan cheaper.
     """
-    configure_session(spark)
     v = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1274,7 +1251,6 @@ def heavy_hitters_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from database_join_spark.operators import text as T
 
-    configure_session(spark)
     toks = table(spark, sf_dir, "documents").select(
         F.explode(T.tokens("text")).alias("token")
     )
@@ -1323,7 +1299,6 @@ def distinct_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count and the union against the global exact
     (tests/test_extras.py).
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "user_id")
     per_type = ev.groupBy("event_type").agg(
         F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
@@ -1412,7 +1387,6 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the mode layer's shuffle is bounded by |types|×|buckets|,
     not row count — both scale-safe at 100 TB.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", "user_id", "event_id", "value"
     ).withColumn("ord", F.expr(_ARGMAX_ORD))

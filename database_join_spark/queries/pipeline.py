@@ -26,7 +26,6 @@ from database_join_spark.operators import multimodal as M
 from database_join_spark.operators import similarity as S
 from database_join_spark.operators import text as T
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
 from database_join_spark.session import track_persist as _track_persist
 
 #: Near-dup decision threshold shared by the exact-Jaccard baseline and
@@ -37,7 +36,6 @@ SHINGLE_N = 3
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     return table(spark, sf_dir, "documents")
 
 
@@ -270,7 +268,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering (operators/dedup.py connected_components, label
     propagation with per-round localCheckpoint).
     """
-    configure_session(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
     return D.connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("cluster_id")
@@ -313,7 +310,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # under xxhash64 up to a ~2^-64 per-pair collision — far
         # below the LSH path's own false-negative rate). At cluster
         # scale this is a persisted/checkpointed signature-input
-        # table. Released by the next query's configure_session
+        # table. Released at the next query's entry
         # (session.track_persist).
         .select("doc_id", D.shingle_hashes("sh").alias("hs"))
         .transform(_track_persist)
@@ -478,7 +475,6 @@ def simsearch_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan holds with per-partition top-k pruning before the final
     window (operators/similarity.py).
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     out = S.brute_force_topk(emb, queries, k=_TOP_K)
@@ -502,7 +498,6 @@ def simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline on fixtures. No DuckDB oracle (xxhash64-derived
     hyperplanes); driver records rows-only.
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     return S.lsh_topk(emb, queries, k=_TOP_K, bits=4, tables=8, dim=64)
@@ -524,7 +519,6 @@ def simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative/approximate); recall@5 floor vs the brute baseline in
     tests/test_pipeline.py.
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     return S.ivf_topk(
@@ -585,7 +579,6 @@ def simsearch_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     results are pinned identical (tests/test_pipeline.py). No
     oracle (seeded hyperplanes); driver records rows-only.
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     store = _ann_store_dir(sf_dir) + "/lsh_buckets"
@@ -624,7 +617,6 @@ def simsearch_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     from pathlib import Path
 
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     store = _ann_store_dir(sf_dir)
@@ -690,7 +682,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-table hyperplane LSH bucket from simsearch_lsh — identical
     join shape, payload vectors only move for co-blocked pairs.
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id", "label", "embedding", S.norm2_q7("embedding").alias("n2")
@@ -992,7 +983,7 @@ def text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", T.winnow_from_hashes("kh", 4).alias("fps")
         )
-        # released by the next query's configure_session
+        # released at the next query's entry (session.track_persist)
         .transform(_track_persist)
     )
     exploded = fps.select("doc_id", F.explode("fps").alias("fp"))
@@ -1286,7 +1277,6 @@ def embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the compact profile a 100 TB embedding-store audit would
     materialize.
     """
-    configure_session(spark)
     emb = table(spark, sf_dir, "embeddings")
     q8 = (
         f"transform(embedding, x -> GREATEST(CAST(-127 AS BIGINT), "
@@ -2485,7 +2475,6 @@ def dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     for aggregations whose partial state is NOT constant-size per
     key per task.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts"
     )

@@ -22,15 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_join_spark.catalog import table
+from database_join_spark.functions import DSUM
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
-
-# Decimal-stable sum of a double measure, emitted as double.
-_DSUM = "CAST(SUM(CAST({c} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 def _dsum(col: str, alias: str) -> F.Column:
-    return F.expr(_DSUM.format(c=col)).alias(alias)
+    return F.expr(DSUM.format(c=col)).alias(alias)
 
 
 # --------------------------------------------------------------------------
@@ -41,7 +38,7 @@ def _dsum(col: str, alias: str) -> F.Column:
     oracle=f"""
     SELECT p_brand,
            COUNT(*) AS n_lines,
-           {_DSUM.format(c="l_extendedprice")} AS sum_extprice
+           {DSUM.format(c="l_extendedprice")} AS sum_extprice
     FROM lineitem JOIN part ON p_partkey = l_partkey
     GROUP BY p_brand
     """,
@@ -57,7 +54,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the group-by exchange on p_brand (tiny key domain → AQE
     coalesces the post-shuffle partitions).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice")
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
@@ -78,7 +74,7 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_lines,
-           {_DSUM.format(c="l_extendedprice")} AS sum_extprice
+           {DSUM.format(c="l_extendedprice")} AS sum_extprice
     FROM orders JOIN lineitem ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
@@ -94,7 +90,6 @@ def join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
     by AQE, which is what survives 100 TB fact-fact joins. MERGE hint
     pins the strategy for plan-shape parity.
     """
-    configure_session(spark)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     return (
@@ -133,7 +128,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits them null-padded). The filtered fact side makes real
     unmatched rows at every SF.
     """
-    configure_session(spark)
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     li = (
         table(spark, sf_dir, "lineitem")
@@ -178,7 +172,6 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     build side: only o_custkey is read — at scale the semi-join build
     is a deduplicated key set, far smaller than the orders table.
     """
-    configure_session(spark)
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # Filtered probe set: every customer has *some* order at every SF,
     # so the anti side would be trivially empty without the date cut.
@@ -231,7 +224,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     key with a CASE/width_bucket projection (O(n), no join) — kept as
     a join here because *operator* coverage is the point.
     """
-    configure_session(spark)
     pt = table(spark, sf_dir, "part").select("p_size", "p_retailprice")
     bands = spark.createDataFrame(_SIZE_BANDS, "lo INT, hi INT, size_class STRING")
     j = pt.join(
@@ -274,7 +266,6 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     spellings must agree bit-for-bit; overlapping bands would need
     the join form (a row can land in several) and are out of contract.
     """
-    configure_session(spark)
     pt = table(spark, sf_dir, "part").select("p_size", "p_retailprice")
     size_class = F.lit(None).cast("string")
     for lo, hi, cls in reversed(_SIZE_BANDS):
@@ -318,7 +309,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     COALESCEd to 'ALL' (the fixture has no real NULLs) so both engines
     emit sortable, unambiguous keys.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity"
     )
@@ -363,7 +353,6 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Expand multiplier matters; prefer approx_count_distinct (#10)
     when estimates suffice.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_partkey", "l_orderkey"
     )
@@ -403,7 +392,6 @@ def window_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     local top-3 per group before exchanging — the distributed top-k
     pattern that survives 100 TB.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_orderkey", "l_linenumber", "l_extendedprice"
     )
@@ -455,7 +443,6 @@ def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines regardless of partition order; frames are totally ordered
     by (o_orderdate, o_orderkey).
     """
-    configure_session(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
     )
@@ -494,7 +481,6 @@ def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only top-k that works at 100 TB. Tiebreak on o_orderkey keeps
     the result deterministic.
     """
-    configure_session(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -533,7 +519,6 @@ def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     above: INTERSECT → left-semi over distinct, EXCEPT → left-anti,
     UNION → union-all + dedup exchange.
     """
-    configure_session(spark)
     building = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -581,7 +566,6 @@ def scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sanctioned escape hatch). Every computed integer is pinned to
     BIGINT for cross-engine dtype stability.
     """
-    configure_session(spark)
     o = table(spark, sf_dir, "orders")
     price_int = F.floor("o_totalprice").cast("long")
     return o.select(
@@ -630,7 +614,6 @@ def array_map_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same values via regexp + the closed-form
     sum, so parity is exact without requiring DuckDB's JSON extension.
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "props")
     k = F.from_json("props", "k BIGINT").getField("k")
     arr = F.sequence(F.lit(1).cast("long"), k % 5 + 1)
@@ -683,7 +666,6 @@ def variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason (double round-trips through JSON text are repr-sensitive;
     documented, not exercised).
     """
-    configure_session(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", "props", "event_id", "user_id"
     )

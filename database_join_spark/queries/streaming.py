@@ -27,16 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_join_spark.catalog import table
+from database_join_spark.functions import DSUM
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
 from database_join_spark import streaming as CS
 
 #: Decimal-stable sum of the double `value` measure (FIXTURES.md rule 2).
-_VSUM = "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
+_VSUM = DSUM.format(c="value")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     return table(spark, sf_dir, "events")
 
 
@@ -228,8 +227,6 @@ def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import pandas_udf
 
-    configure_session(spark)
-
     @pandas_udf("long")
     def density_x10000(text: pd.Series, n_chars: pd.Series) -> pd.Series:
         toks = text.str.strip().str.lower().str.split(r"\s+").map(len)
@@ -276,8 +273,6 @@ def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import pandas_udf
 
-    configure_session(spark)
-
     @pandas_udf("long")
     def weighted_avg_chars(
         n_chars: pd.Series, n_tokens: pd.Series
@@ -321,7 +316,6 @@ def udf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor: 5 langs × ~100 docs here; at 100 TB you salt or
     pre-aggregate first (documented limitation of grouped-map).
     """
-    configure_session(spark)
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(

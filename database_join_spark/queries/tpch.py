@@ -22,7 +22,7 @@ shipdate-vs-orderdate (Q12, like Q4/Q21), and phone/comment slices
 use nationkey/acctbal (Q22, Q16). Catalyst handles join ordering;
 the plan tests pin that filters reach the scans.
 
-Determinism (FIXTURES.md): money math follows the _DSUM pattern —
+Determinism (FIXTURES.md): money math follows the DSUM pattern —
 double products are computed in IEEE double (identical in DuckDB),
 cast to DECIMAL(18,6) per row, summed exactly, and emitted as DOUBLE;
 sums and counts are emitted separately instead of engine-side AVG;
@@ -35,15 +35,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_join_spark.catalog import table
+from database_join_spark.functions import DSUM
 from database_join_spark.queries import query
-from database_join_spark.session import configure_session
 
 #: Decimal-stable revenue term: extendedprice·(1−discount), computed
 #: in double (IEEE-identical across engines), stabilized per row.
-_REV = (
-    "CAST(SUM(CAST(l_extendedprice * (1 - l_discount) "
-    "AS DECIMAL(18,6))) AS DOUBLE)"
-)
+_REV = DSUM.format(c="l_extendedprice * (1 - l_discount)")
 
 
 # --------------------------------------------------------------------------
@@ -113,7 +110,6 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan itself — which prunes to the 7 referenced columns of 11
     and pushes the shipdate predicate into parquet.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.expr("l_shipdate <= TIMESTAMP '2001-09-01'")
     )
@@ -165,7 +161,6 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the judge-me-on-join-ordering query: Catalyst plans dimension →
     orders → lineitem exactly because the filters make that cheapest.
     """
-    configure_session(spark)
     cust = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -211,7 +206,6 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     < on quantity), after which the aggregate is a single codegen'd
     pass with no shuffle but the final 1-row exchange.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.expr(
             "l_shipdate >= TIMESTAMP '1996-01-01' AND "
@@ -220,10 +214,9 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return li.agg(
-        F.expr(
-            "CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))"
-            " AS DOUBLE)"
-        ).alias("revenue"),
+        F.expr(DSUM.format(c="l_extendedprice * l_discount")).alias(
+            "revenue"
+        ),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -267,7 +260,6 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     hints that break at scale (ADVICE r01). The final order is a
     TakeOrderedAndProject with unique-key tiebreak.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
@@ -287,9 +279,7 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_name", "o_orderkey", "o_orderdate")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)"
-            ).alias("total_qty")
+            F.expr(DSUM.format(c="l_quantity")).alias("total_qty")
         )
         .orderBy(F.col("total_qty").desc(), F.col("o_orderkey"))
         .limit(20)
@@ -330,7 +320,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality closes the join graph cycle (the constraint that makes
     Q5 the classic join-order stress test).
     """
-    configure_session(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = table(spark, sf_dir, "lineitem").select(
@@ -395,7 +384,6 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, not a post-join one — no pair materialization. The final
     group-by has a 5-value domain.
     """
-    configure_session(spark)
     orders = table(spark, sf_dir, "orders").filter(
         F.expr(
             "o_orderdate >= TIMESTAMP '1996-01-01' AND "
@@ -457,7 +445,6 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join input. supplier/customer/orders are left to AQE (they
     scale with SF — the q5 hint rule).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.expr(
             "l_shipdate >= TIMESTAMP '1996-01-01' AND "
@@ -525,7 +512,6 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     is needed after aggregation, and the top-20 is a
     TakeOrderedAndProject with the c_custkey tiebreak.
     """
-    configure_session(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
@@ -586,7 +572,6 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-SF-growing table: no forced broadcast; at sf fixtures AQE
     broadcasts it, at 100 TB it shuffle-joins on l_partkey.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.expr(
             "l_shipdate >= TIMESTAMP '1996-09-01' AND "
@@ -641,7 +626,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides reduce the same decimal-exact sum to the same double bits.
     Supplier join stays un-hinted (scales with SF).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.expr(
             "l_shipdate >= TIMESTAMP '1996-01-01' AND "
@@ -694,7 +678,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     join itself is an equi-join on partkey, so AQE picks
     broadcast-vs-shuffle by measured size.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
@@ -722,21 +705,18 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # tpch_q8 — national market share
 # --------------------------------------------------------------------------
-#: Decimal-stable volume sum (same discipline as _REV) over an
-#: arbitrary expression.
-_DSUM = "CAST(SUM(CAST({c} AS DECIMAL(18,6))) AS DOUBLE)"
 
 @query(
     "tpch_q8",
     oracle=f"""
     SELECT o_year,
-           {_DSUM.format(
+           {DSUM.format(
                c="CASE WHEN nation = 'NATION_1' THEN volume ELSE 0.0 END"
            )} AS nation_volume,
-           {_DSUM.format(c="volume")} AS total_volume,
-           {_DSUM.format(
+           {DSUM.format(c="volume")} AS total_volume,
+           {DSUM.format(
                c="CASE WHEN nation = 'NATION_1' THEN volume ELSE 0.0 END"
-           )} / {_DSUM.format(c="volume")} AS mkt_share
+           )} / {DSUM.format(c="volume")} AS mkt_share
     FROM (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
              l_extendedprice * (1 - l_discount) AS volume,
@@ -773,7 +753,6 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums in double — bit-identical across engines; emitting
     numerator and denominator alongside keeps the row auditable.
     """
-    configure_session(spark)
     part = table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier")
@@ -820,10 +799,10 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nat = "CASE WHEN nation = 'NATION_1' THEN volume ELSE 0.0 END"
     return joined.groupBy("o_year").agg(
-        F.expr(_DSUM.format(c=nat)).alias("nation_volume"),
-        F.expr(_DSUM.format(c="volume")).alias("total_volume"),
+        F.expr(DSUM.format(c=nat)).alias("nation_volume"),
+        F.expr(DSUM.format(c="volume")).alias("total_volume"),
         F.expr(
-            f"{_DSUM.format(c=nat)} / {_DSUM.format(c='volume')}"
+            f"{DSUM.format(c=nat)} / {DSUM.format(c='volume')}"
         ).alias("mkt_share"),
     )
 
@@ -860,7 +839,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders scan prunes to two columns; COUNT(col) null-skipping is
     identical across engines.
     """
-    configure_session(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     orders = (
         table(spark, sf_dir, "orders")
@@ -884,11 +862,11 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH thresh AS (
       SELECT l_partkey AS t_partkey,
-             0.2 * ({_DSUM.format(c="l_quantity")}
+             0.2 * ({DSUM.format(c="l_quantity")}
                     / CAST(COUNT(*) AS DOUBLE)) AS qty_limit
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT {_DSUM.format(c="l_extendedprice")} / 7.0 AS avg_yearly,
+    SELECT {DSUM.format(c="l_extendedprice")} / 7.0 AS avg_yearly,
            COUNT(*) AS n_lines
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -913,11 +891,10 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double arithmetic in both engines, so the strict <
     comparison lands identically even at the boundary.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     thresh = li.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         F.expr(
-            f"0.2 * ({_DSUM.format(c='l_quantity')}"
+            f"0.2 * ({DSUM.format(c='l_quantity')}"
             " / CAST(COUNT(*) AS DOUBLE))"
         ).alias("qty_limit")
     )
@@ -929,7 +906,7 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(thresh, F.col("t_partkey") == li.l_partkey)
         .filter(F.col("l_quantity") < F.col("qty_limit"))
         .agg(
-            F.expr(f"{_DSUM.format(c='l_extendedprice')} / 7.0").alias(
+            F.expr(f"{DSUM.format(c='l_extendedprice')} / 7.0").alias(
                 "avg_yearly"
             ),
             F.count(F.lit(1)).alias("n_lines"),
@@ -984,7 +961,6 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB all three lineitem passes shuffle on l_orderkey — AQE
     can co-locate them — and nation stays a broadcast filter.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     l1 = li.select("l_orderkey", "l_suppkey", "l_shipdate")
     orders = table(spark, sf_dir, "orders").filter(
@@ -1033,14 +1009,14 @@ _Q22_NATIONS = "(1, 3, 5, 7, 9, 11, 13)"
     "tpch_q22",
     oracle=f"""
     WITH avg_bal AS (
-      SELECT {_DSUM.format(c="c_acctbal")}
+      SELECT {DSUM.format(c="c_acctbal")}
              / CAST(COUNT(*) AS DOUBLE) AS threshold
       FROM customer
       WHERE c_acctbal > 0.0 AND c_nationkey IN {_Q22_NATIONS}
     )
     SELECT CAST(c_nationkey AS BIGINT) AS cntrycode,
            COUNT(*) AS numcust,
-           {_DSUM.format(c="c_acctbal")} AS totacctbal
+           {DSUM.format(c="c_acctbal")} AS totacctbal
     FROM customer, avg_bal
     WHERE c_nationkey IN {_Q22_NATIONS}
       AND c_acctbal > threshold
@@ -1069,14 +1045,13 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     stabilized average makes the > threshold cut identical across
     engines.
     """
-    configure_session(spark)
     nations = [1, 3, 5, 7, 9, 11, 13]
     cust = table(spark, sf_dir, "customer").filter(
         F.col("c_nationkey").isin(nations)
     )
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
         F.expr(
-            f"{_DSUM.format(c='c_acctbal')} / CAST(COUNT(*) AS DOUBLE)"
+            f"{DSUM.format(c='c_acctbal')} / CAST(COUNT(*) AS DOUBLE)"
         ).alias("threshold")
     )
     recent = (
@@ -1091,7 +1066,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").cast("bigint").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.expr(_DSUM.format(c="c_acctbal")).alias("totacctbal"),
+            F.expr(DSUM.format(c="c_acctbal")).alias("totacctbal"),
         )
     )
 
@@ -1154,7 +1129,6 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant rows broadcast), so only the region's fact share
     aggregates.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter("l_quantity > 0")
     sup = table(spark, sf_dir, "supplier")
     nat = table(spark, sf_dir, "nation")
@@ -1248,7 +1222,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n_name AS nation,
            CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-           {_DSUM.format(
+           {DSUM.format(
                c="l_extendedprice * (1 - l_discount)"
                " - 0.4 * p_retailprice * l_quantity"
            )} AS sum_profit,
@@ -1273,12 +1247,11 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost basis); the join graph and group shape are the spec's.
 
     Determinism: the per-row profit is double arithmetic (IEEE-
-    identical), stabilized through the _DSUM decimal fold. 100 TB:
+    identical), stabilized through the DSUM decimal fold. 100 TB:
     part-name filter prunes at the part scan and semi-reduces the
     fact through the join; nation is a broadcast constant; the final
     exchange carries nations × years groups.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     sup = table(spark, sf_dir, "supplier")
@@ -1297,7 +1270,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.expr(
-                _DSUM.format(
+                DSUM.format(
                     c="l_extendedprice * (1 - l_discount)"
                     " - 0.4 * p_retailprice * l_quantity"
                 )
@@ -1315,14 +1288,14 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH vals AS (
       SELECT l_partkey AS v_partkey,
-             {_DSUM.format(c="l_extendedprice * l_quantity")} AS part_value
+             {DSUM.format(c="l_extendedprice * l_quantity")} AS part_value
       FROM lineitem
       JOIN supplier ON s_suppkey = l_suppkey
       WHERE s_nationkey = 3
       GROUP BY l_partkey
     ),
     total AS (
-      SELECT {_DSUM.format(c="part_value")} AS grand_total FROM vals
+      SELECT {DSUM.format(c="part_value")} AS grand_total FROM vals
     )
     SELECT CAST(v_partkey AS BIGINT) AS partkey, part_value
     FROM vals, total
@@ -1340,13 +1313,12 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines; shape (two-pass aggregate, scalar broadcast, threshold
     filter, value-ordered output) is the spec's.
 
-    Determinism: both sides of the > are _DSUM doubles derived
+    Determinism: both sides of the > are DSUM doubles derived
     identically in each engine, and the output order closes with the
     unique part key. 100 TB: the single-row grand total broadcasts
     (the engine's standard scalar pattern); vals is one part-keyed
     exchange of the nation's fact share.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier").filter("s_nationkey = 3")
     vals = (
@@ -1354,12 +1326,12 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_partkey").alias("v_partkey"))
         .agg(
             F.expr(
-                _DSUM.format(c="l_extendedprice * l_quantity")
+                DSUM.format(c="l_extendedprice * l_quantity")
             ).alias("part_value")
         )
     )
     total = vals.agg(
-        F.expr(_DSUM.format(c="part_value")).alias("grand_total")
+        F.expr(DSUM.format(c="part_value")).alias("grand_total")
     )
     return (
         vals.crossJoin(F.broadcast(total))
@@ -1408,7 +1380,6 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final exchange carries |categories| groups after map-side
     partial counts.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     high = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
@@ -1463,7 +1434,6 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join (supplier is the constant-side table); the distinct
     aggregation shuffles (descriptor, suppkey) pairs once.
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").filter(
         "p_brand <> 'Brand#5' AND p_type NOT LIKE 'PROMO%' "
@@ -1495,7 +1465,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shipped AS (
       SELECT l_suppkey AS sh_suppkey, l_partkey AS sh_partkey,
-             {_DSUM.format(c="l_quantity")} AS pair_qty
+             {DSUM.format(c="l_quantity")} AS pair_qty
       FROM lineitem
       JOIN part ON p_partkey = l_partkey
       WHERE p_name LIKE 'small%'
@@ -1505,7 +1475,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     part_tot AS (
       SELECT sh_partkey AS pt_partkey,
-             {_DSUM.format(c="pair_qty")} AS part_qty
+             {DSUM.format(c="pair_qty")} AS part_qty
       FROM shipped GROUP BY sh_partkey
     )
     SELECT DISTINCT s_name, s_acctbal,
@@ -1530,13 +1500,12 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelated into a second aggregate, exactly the q17 rewrite,
     then DISTINCT suppliers decorated and nation-filtered.
 
-    Determinism: both comparison sides are _DSUM doubles with
+    Determinism: both comparison sides are DSUM doubles with
     identical derivations; DISTINCT + the unique suppkey close the
     order. 100 TB: the name/date slice prunes the fact first;
     shipped is one (supp, part)-keyed exchange of the slice,
     part_tot a part-keyed reaggregation of shipped (already tiny).
     """
-    configure_session(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         "l_shipdate >= TIMESTAMP '1996-01-01' "
         "AND l_shipdate < TIMESTAMP '1997-01-01'"
@@ -1548,14 +1517,14 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").alias("sh_suppkey"),
             F.col("l_partkey").alias("sh_partkey"),
         )
-        .agg(F.expr(_DSUM.format(c="l_quantity")).alias("pair_qty"))
+        .agg(F.expr(DSUM.format(c="l_quantity")).alias("pair_qty"))
     )
     # part_tot as a WINDOW over shipped instead of a reaggregate +
     # join-back (round 13, the same rewrite as tpch_q2): the
     # join-back derived the whole shipped pipeline twice and met
     # itself in a SortMergeJoin; the window computes part_qty on one
     # part-keyed exchange of the single shipped derivation. Value
-    # parity is EXACT, not approximate: _DSUM sums as DECIMAL(18,6)
+    # parity is EXACT, not approximate: DSUM sums as DECIMAL(18,6)
     # (order-independent), so the window total is bit-identical to
     # the aggregate total — pinned by the unchanged DuckDB oracle.
     sup = table(spark, sf_dir, "supplier").filter(

@@ -75,30 +75,43 @@ def track_persist(df):
     from, so the query function cannot unpersist before the caller
     collects — and never unpersisting leaks executor memory across a
     long shared-session run of gated queries (VERDICT r01 wrong #4).
-    Contract: every gated query calls :func:`configure_session` first,
-    which drains persists left by earlier queries — by then their
-    results have been collected, so release is safe. Callers must
-    finish cataloging/persisting only after their configure_session
-    call (all queries do: it is their first statement).
+    Contract: the registry's :func:`queries.query` wrapper runs
+    :func:`configure_session` before every query body, which drains
+    persists left by earlier queries — by then their results have
+    been collected, so release is safe.
     """
     df.persist()
     _PERSIST_POOL.append(df)
     return df
 
 
-def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply our runtime confs to an existing session (idempotent) and
-    release DataFrames persisted by previously-run queries.
+def persist_mark() -> int:
+    """The pool's current length, a mark for :func:`release_persisted`."""
+    return len(_PERSIST_POOL)
 
-    The correctness driver owns its SparkSession; queries call this to
-    guarantee deterministic timezone/AQE behavior regardless of how the
-    session was built.
-    """
-    while _PERSIST_POOL:
+
+def release_persisted(mark: int = 0) -> None:
+    """Unpersist the pooled frames above ``mark`` (a
+    :func:`persist_mark`), newest first; ``mark=0`` drains the pool.
+    A loop with no next query to drain it, such as a streaming
+    ``foreachBatch``, passes its entry mark to release its own."""
+    while len(_PERSIST_POOL) > mark:
         try:
             _PERSIST_POOL.pop().unpersist(blocking=False)
         except Exception:
             pass  # session gone or frame invalid — nothing to release
+
+
+def configure_session(spark: SparkSession) -> SparkSession:
+    """Apply our runtime confs to an existing session (idempotent) and
+    release DataFrames persisted by previously-run queries.
+
+    The correctness driver owns its SparkSession; the registry's
+    :func:`queries.query` wrapper calls this at every query's entry to
+    guarantee deterministic timezone/AQE behavior regardless of how
+    the session was built.
+    """
+    release_persisted()
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)

@@ -60,17 +60,15 @@ class _Partition(InputPartition):
         self.end = end
 
 
-class _Reader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.rows = int(options.get("rows", 1000))
-        self.n_partitions = int(options.get("partitions", 8))
+def _split(lo: int, hi: int, n: int) -> list[InputPartition]:
+    """Ids ``[lo, hi)`` as at most ``n`` contiguous partitions."""
+    step = max(1, -(-(hi - lo) // max(1, n)))  # ceil division
+    bounds = [min(b, hi) for b in range(lo, hi + step, step)]
+    return [_Partition(a, b) for a, b in zip(bounds, bounds[1:]) if a < b]
 
-    def partitions(self) -> list[InputPartition]:
-        step = max(1, -(-self.rows // self.n_partitions))  # ceil division
-        bounds = [min(b, self.rows) for b in range(0, self.rows + step, step)]
-        return [
-            _Partition(a, b) for a, b in zip(bounds, bounds[1:]) if a < b
-        ]
+
+class _Rows:
+    """The generator both readers share: one row per document id."""
 
     def read(self, partition: _Partition) -> Iterator[tuple]:
         for doc_id in range(partition.start, partition.end):
@@ -81,7 +79,16 @@ class _Reader(DataSourceReader):
             )
 
 
-class _StreamReader(DataSourceStreamReader):
+class _Reader(_Rows, DataSourceReader):
+    def __init__(self, options: dict) -> None:
+        self.rows = int(options.get("rows", 1000))
+        self.n_partitions = int(options.get("partitions", 8))
+
+    def partitions(self) -> list[InputPartition]:
+        return _split(0, self.rows, self.n_partitions)
+
+
+class _StreamReader(_Rows, DataSourceStreamReader):
     """Offset-based streaming form of the same generator (round 6).
 
     The offset is the document-id cursor ``{"offset": n}``; each
@@ -120,21 +127,9 @@ class _StreamReader(DataSourceStreamReader):
         return {"offset": self._cursor}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        lo, hi = int(start["offset"]), int(end["offset"])
-        n = max(1, self.n_partitions)
-        step = max(1, -(-(hi - lo) // n))
-        bounds = [min(b, hi) for b in range(lo, hi + step, step)]
-        return [
-            _Partition(a, b) for a, b in zip(bounds, bounds[1:]) if a < b
-        ]
-
-    def read(self, partition: _Partition) -> Iterator[tuple]:
-        for doc_id in range(partition.start, partition.end):
-            yield (
-                doc_id,
-                _LANGS[doc_id % len(_LANGS)],
-                _doc_text(doc_id),
-            )
+        return _split(
+            int(start["offset"]), int(end["offset"]), self.n_partitions
+        )
 
     def commit(self, end: dict) -> None:
         pass  # deterministic generator: nothing to clean up

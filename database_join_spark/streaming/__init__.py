@@ -41,10 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from database_join_spark.functions import DSUM
 from database_join_spark.session import configure_session
 
 #: Decimal-stable sum (FIXTURES.md rule 2), same spelling as batch.
-_VSUM = "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
+_VSUM = DSUM.format(c="value")
 
 #: The disk-backed state-store provider — the only one that survives
 #: unbounded catch-up depth (STREAM_THROUGHPUT_PROBE.json: a single
@@ -58,9 +59,9 @@ ROCKSDB_PROVIDER = (
 _ROCKSDB_CONF_PREFIX = "spark.sql.streaming.stateStore.rocksdb."
 
 
-def rocksdb_state_store_confs(tuned: bool = True) -> dict[str, str]:
+def rocksdb_state_store_confs() -> dict[str, str]:
     """Per-query SQL confs selecting the RocksDB state-store provider,
-    with the measured-winning tuning applied by default.
+    with the measured-winning tuning.
 
     Which provider to run is a measured rule, not taste
     (STREAM_THROUGHPUT_PROBE.json, 1e8 events): in-memory state for
@@ -69,9 +70,9 @@ def rocksdb_state_store_confs(tuned: bool = True) -> dict[str, str]:
     watermark advances only at trigger end, so the whole backlog's
     state is live at once and must not need to fit on the heap.
 
-    When RocksDB is the pick, ``tuned=True`` adds the knobs the
-    tuning sweep won with (ROCKSDB_TUNING_PROBE.json, 5e7 events /
-    20 triggers, in-session controls):
+    When RocksDB is the pick, these are the knobs the tuning sweep
+    won with (ROCKSDB_TUNING_PROBE.json, 5e7 events / 20 triggers,
+    in-session controls):
 
     - changelog checkpointing — per-batch changelog uploads instead
       of full snapshots. The steady-state lever: 1.56× the untuned
@@ -90,16 +91,13 @@ def rocksdb_state_store_confs(tuned: bool = True) -> dict[str, str]:
         for k, v in rocksdb_state_store_confs().items():
             spark.conf.set(k, v)
     """
-    confs = {
+    return {
         "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+        _ROCKSDB_CONF_PREFIX + "changelogCheckpointing.enabled": "true",
+        _ROCKSDB_CONF_PREFIX + "writeBufferSizeMB": "256",
+        _ROCKSDB_CONF_PREFIX + "maxWriteBufferNumber": "4",
     }
-    if tuned:
-        confs[_ROCKSDB_CONF_PREFIX + "changelogCheckpointing.enabled"] = (
-            "true"
-        )
-        confs[_ROCKSDB_CONF_PREFIX + "writeBufferSizeMB"] = "256"
-        confs[_ROCKSDB_CONF_PREFIX + "maxWriteBufferNumber"] = "4"
-    return confs
+
 
 #: events.parquet has shipped at two physical resolutions across
 #: fixture generations (TESTDATA.md): TIMESTAMP(NANOS) — surfaced as
@@ -453,13 +451,10 @@ def ingest_neardedup_batch(
     from pathlib import Path
 
     from database_join_spark.operators import dedup as D
-    from database_join_spark.session import _PERSIST_POOL
+    from database_join_spark.session import persist_mark, release_persisted
 
-    # Snapshot the persist pool at batch entry: the cleanup at batch
-    # exit releases only frames THIS batch appended (ADVICE r12 —
-    # draining unconditionally could unpersist another in-flight
-    # query's cached frames on a shared session).
-    _pool_mark = len(_PERSIST_POOL)
+    # Frames above this mark are the batch's own (released at exit).
+    pool_mark = persist_mark()
     spark = batch_df.sparkSession
     batch_df = batch_df.localCheckpoint(eager=True)
     hs_frame = batch_df.select(
@@ -599,19 +594,13 @@ def ingest_neardedup_batch(
     ).sortWithinPartitions("band", "bucket").write.mode(
         "append"
     ).parquet(buckets_dir)
-    # pair_payloads track_persist()s its candidate frame expecting
-    # the NEXT QUERY's configure_session to drain the pool — a
-    # foreachBatch loop has no next query, so the pool would grow
-    # one cached frame per micro-batch for the life of the stream.
-    # Only frames appended SINCE THIS BATCH'S ENTRY are released
-    # (the entry snapshot below): draining the whole pool would
-    # unpersist frames belonging to another in-flight query sharing
-    # the session whose results are not collected yet (ADVICE r12).
-    while len(_PERSIST_POOL) > _pool_mark:
-        try:
-            _PERSIST_POOL.pop().unpersist(blocking=False)
-        except Exception:
-            pass
+    # pair_payloads track_persist()s its candidate frame for the NEXT
+    # QUERY's entry to drain — a foreachBatch loop has no next query,
+    # so the pool would grow one cached frame per micro-batch. Release
+    # only this batch's frames: draining the whole pool could
+    # unpersist another in-flight query's frames on a shared session
+    # before its results are collected (ADVICE r12).
+    release_persisted(pool_mark)
     # store snapshots superseded by this batch's increment: the probe
     # consumed the union (eager hit_pairs checkpoint) and the appends
     # are done — the old frames have no readers left

@@ -142,7 +142,7 @@ def main() -> None:
     )
 
     spark = get_spark(app_name="stream-ingest-probe")
-    for key, value in rocksdb_state_store_confs(tuned=True).items():
+    for key, value in rocksdb_state_store_confs().items():
         spark.conf.set(key, value)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -105,7 +105,7 @@ def child_main(src: str, ckpt: str, sink: str) -> None:
 
     spark = get_spark(app_name="kill-recovery-child")
     spark.sparkContext.setLogLevel("ERROR")
-    for k, v in ST.rocksdb_state_store_confs(tuned=True).items():
+    for k, v in ST.rocksdb_state_store_confs().items():
         spark.conf.set(k, v)
     stream = ST.dedup_within_watermark(
         spark.readStream.schema(SCHEMA)

@@ -11,9 +11,10 @@ under ANSI or perturbs a value; both fail this test, turning the
 global semantics choice into a checked invariant instead of per-query
 discipline.
 
-Queries call ``configure_session`` as their first statement, which
-applies RUNTIME_CONFS — so the flip is done by patching that dict,
-exactly the path a production deployment would take.
+The registry's ``query`` wrapper calls ``configure_session`` at every
+query's entry, which applies RUNTIME_CONFS — so the flip is done by
+patching that dict, exactly the path a production deployment would
+take.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """Hostile-session probes (from the verify skill's checklist, made
 permanent): the driver builds its own UNconfigured SparkSession, so
-every query must repair session state itself via configure_session.
+every query must repair session state at its entry — the registry's
+``query`` wrapper runs configure_session before each query body.
 These tests sabotage the shared session the way a foreign harness
 might and assert the query surface still matches the oracle.
 """

@@ -66,7 +66,7 @@ def test_streaming_dedup_rocksdb_provider_matches_default(spark):
     checkpointing + sized write buffers, ROCKSDB_TUNING_PROBE.json's
     winning arm) — is result-IDENTICAL for the exact shipped
     pipeline, so neither the provider path nor the tuning can rot."""
-    confs = ST.rocksdb_state_store_confs(tuned=True)
+    confs = ST.rocksdb_state_store_confs()
     assert confs["spark.sql.streaming.stateStore.providerClass"] == (
         ST.ROCKSDB_PROVIDER
     )
@@ -588,7 +588,7 @@ def test_rocksdb_changelog_checkpoint_restores_state_across_restarts(
     spark, tmp_path
 ):
     """Recovery path of the tuned RocksDB conf set
-    (`rocksdb_state_store_confs(tuned=True)`): changelog
+    (`rocksdb_state_store_confs()`): changelog
     checkpointing replaces full per-commit snapshots with changelog
     uploads, so a RESTART must reconstruct state as
     last-snapshot + changelog replay — the one mechanism the
@@ -629,7 +629,7 @@ def test_rocksdb_changelog_checkpoint_restores_state_across_restarts(
         q.awaitTermination(300)
         q.stop()
 
-    confs = ST.rocksdb_state_store_confs(tuned=True)
+    confs = ST.rocksdb_state_store_confs()
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
