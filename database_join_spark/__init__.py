@@ -12,8 +12,9 @@ Design rules (enforced across the package):
 - **DataFrame-first.** Every operator is a Catalyst-visible logical
   plan; no RDDs, no driver-side loops over ``collect()`` results.
 - **Built-ins before UDFs.** Python UDFs only as Arrow-batched
-  ``pandas_udf`` / ``applyInPandas`` / ``mapInPandas`` and only where
-  built-in expressions genuinely cannot express the semantics.
+  ``pandas_udf``, ``mapInPandas``/``applyInPandas`` or their
+  ``mapInArrow``/``applyInArrow`` forms, and only where built-in
+  expressions genuinely cannot express the semantics.
 - **Deterministic, oracle-stable arithmetic.** Integer averages use
   floor division (Spark ``DIV`` ≡ DuckDB ``//``); DOUBLE measures are
   cast to DECIMAL before any aggregation so parallel summation order

@@ -17,13 +17,15 @@ Two paths:
   At 100 TB: signatures are one linear scan; the bucket join shuffles
   (bucket, id, vec) only for same-bucket pairs.
 
-JVM expressions (zip_with/aggregate) everywhere EXCEPT the SemDeDup
-within-block scorer, which is an Arrow-batched tiled numpy GEMM
-(``_block_scorer`` — the one place the matrix-product shape beats
-any per-row SQL spelling by orders of magnitude; exactness argument
-in its docstring), and the k-means assign kernel (``_assign_rows``,
-behind one Arrow assign and the one-task assign + score of a corpus
-that fits one scorer chunk).
+JVM expressions (zip_with/aggregate) everywhere EXCEPT the exact
+k-means and SemDeDup numpy kernels: the assign kernel
+(``_assign_rows``), the Lloyd step (``_lloyd_step``) and the
+within-block scorer, a tiled numpy GEMM (``_pair_scorer`` — the one
+place the matrix-product shape beats any per-row SQL spelling by
+orders of magnitude; exactness argument in ``_block_scorer``).
+Every vector crossing into them is Arrow: ``mapInArrow``,
+``applyInArrow`` or ``toArrow()``, with ``list<int64>`` vectors read
+by ``_decode_qv`` straight into an int64 matrix.
 """
 
 from __future__ import annotations
@@ -90,6 +92,42 @@ def cosine(dot_col: Column, n2a: Column, n2b: Column) -> Column:
     )
 
 
+def _topk_side(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, p: str
+) -> DataFrame:
+    """One side of a cosine top-k: ``(id_as, {p}_vec, {p}_n2)`` —
+    the id, the vector and its exact quantized squared norm."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).alias(f"{p}_vec"),
+        norm2_q7(vec_col).alias(f"{p}_n2"),
+    )
+
+
+def _topk_tail(pairs: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per query over (query, corpus) candidate
+    rows of two :func:`_topk_side` frames: the exact fixed-point
+    :func:`cosine`, ranked by (cos_sim desc, neighbor_id) —
+    ``(query_id, rnk, neighbor_id, cos_sim)``."""
+    from pyspark.sql import Window
+
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine(
+            dot_q7("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
+        ).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -104,37 +142,12 @@ def brute_force_topk(
     replicated — per-partition top-k via WindowGroupLimit keeps the
     shuffle to k rows per query per partition.
     """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_q7(vec_col).alias("q_n2"),
+    q = _topk_side(queries, id_col, vec_col, "query_id", "q")
+    c = _topk_side(vectors, id_col, vec_col, "neighbor_id", "c")
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm2_q7(vec_col).alias("c_n2"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(
-                dot_q7("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
-    )
+    return _topk_tail(pairs, k)
 
 
 def hyperplane_signature(
@@ -353,11 +366,7 @@ def ivf_topk(
     cent_df = queries.sparkSession.createDataFrame(
         centroids, "cell INT, centroid ARRAY<DOUBLE>"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_q7(vec_col).alias("q_n2"),
-    )
+    q = _topk_side(queries, id_col, vec_col, "query_id", "q")
     d2 = F.expr(
         "aggregate(zip_with(q_vec, centroid, "
         "(x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), "
@@ -371,25 +380,10 @@ def ivf_topk(
         .filter(F.col("cr") <= n_probe)
         .select("query_id", "q_vec", "q_n2", "cell")
     )
-    scored = (
-        corpus.join(F.broadcast(probed), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(
-                dot_q7("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
-            ).alias("cos_sim"),
-        )
+    pairs = corpus.join(F.broadcast(probed), "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
-    )
+    return _topk_tail(pairs, k)
 
 
 def lsh_corpus_buckets(
@@ -466,8 +460,6 @@ def lsh_topk(
     schema metadata and are VALIDATED here — a mismatched table
     raises instead of silently missing every candidate.
     """
-    from pyspark.sql import Window
-
     if corpus_buckets is None:
         corpus_buckets = lsh_corpus_buckets(
             vectors, bits, tables, dim, id_col, vec_col
@@ -492,35 +484,10 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_q7(vec_col).alias("q_n2"),
-    )
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm2_q7(vec_col).alias("c_n2"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(
-                dot_q7("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
-    )
+    q = _topk_side(queries, id_col, vec_col, "query_id", "q")
+    c = _topk_side(vectors, id_col, vec_col, "neighbor_id", "c")
+    pairs = cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
+    return _topk_tail(pairs, k)
 
 
 # --------------------------------------------------------------------------
@@ -618,60 +585,82 @@ def _assign_frame(
 
 
 #: Cell budget (rows × dim) under which the Lloyd loop runs on the
-#: DRIVER over one bounded collect instead of as iterations×2 Spark
-#: jobs. Rationale: the fit input is bounded BY DESIGN — callers fit
-#: on ``fit_sample_mod_for``'s ~100-rows-per-centroid hash sample —
-#: and the round-13 sf0.1 wall probe (SEMDEDUP_SF01_WALL_PROBE.json)
+#: DRIVER over one bounded collect instead of as one Spark query per
+#: iteration. Rationale: the fit input is bounded BY DESIGN — callers
+#: fit on ``fit_sample_mod_for``'s ~100-rows-per-centroid hash sample
+#: — and the round-13 sf0.1 wall probe (SEMDEDUP_SF01_WALL_PROBE.json)
 #: measured the distributed loop at 3.7 s of the dedup_semantic
-#: bench row's 4.44 s: per-iteration plan analysis + codegen of the
-#: then literal-SQL k·dim centroid tree plus two tiny jobs, pure
-#: fixed overhead at sample scale. 2²² int64 cells = 32 MiB collected —
-#: e.g. 65k rows at dim 64 (k ≈ 650 under the 100-rows/centroid
-#: rule) — far inside driver memory and maxResultSize. An input over
-#: the budget (or a k·dim centroid matrix over it) runs the
-#: distributed loop; nothing else selects between the two. The numpy
-#: loop is BIT-IDENTICAL (pinned, tests/test_pipeline.py): same
-#: k-lowest-id seed, the same assign kernel (:func:`_assign_rows` at
-#: m=1), and the same floor-div centroid update the distributed path
-#: computes.
+#: bench row's 4.44 s: per-iteration plan analysis + codegen plus
+#: tiny jobs, pure fixed overhead at sample scale. 2²² int64 cells =
+#: 32 MiB collected — e.g. 65k rows at dim 64 (k ≈ 650 under the
+#: 100-rows/centroid rule) — far inside driver memory and
+#: maxResultSize. An input over the budget (or a k·dim centroid
+#: matrix over it) runs the distributed loop; nothing else selects
+#: between the two. Both loops run the same :func:`_lloyd_step` and
+#: :func:`_lloyd` loop from the same k-lowest-id seeds, so they
+#: land on bit-identical centroids (pinned, tests/test_pipeline.py).
 DRIVER_FIT_MAX_CELLS = 1 << 22
 
+#: The distributed loop's per-cluster Lloyd rows: 1-based cluster,
+#: member count, coordinate sums, and the high and low 32-bit halves
+#: of a Σd² part.
+_LLOYD_COLS = ("cluster", "n", "s", "hi", "lo")
+_LLOYD_SCHEMA = "cluster long, n long, s array<long>, hi long, lo long"
 
-def _kmeans_lloyd_np(
-    rows: list,
-    k: int,
-    iterations: int,
-    track_inertia: bool,
-) -> tuple[list[list[int]], list[int]]:
-    """Driver-side exact-int64 Lloyd loop over collected (id, qv)
-    rows — the bit-identical small-sample spelling of the
-    distributed loop in :func:`_fit_centroids` (see
-    :data:`DRIVER_FIT_MAX_CELLS`). Returns (centroids, history)."""
+
+def _lloyd_step(q, index):
+    """One Lloyd step over the non-empty rows ``q`` (int64, rows ×
+    dim) against :func:`_assign_index`'s ``index``: every row goes to
+    its nearest centroid (:func:`_assign_rows` at m=1, ties to the
+    lowest index). Returns ``(sums, counts, sqdist)``: the k×dim int64
+    coordinate sums and the k member counts per centroid, and Σd² as
+    an exact Python int. Each is a sum over rows, so the steps of a
+    split input add up to the step of the whole. Σd² adds the high
+    and low 32-bit halves of the d² apart, each exact in int64, so it
+    stays exact past 2^63."""
     import numpy as np
 
-    ordered = sorted(rows, key=lambda r: r.id)
-    q = np.array([list(r.qv) for r in ordered], dtype=np.int64)
-    k = min(k, q.shape[0])
-    cents = q[:k].copy()  # k lowest-id seeds, id order
-    history: list[int] = []
+    k = len(index[2])  # the fine centroid matrix
+    row, block, d2 = _assign_rows(q, index, 1, None)
+    counts = np.bincount(block - 1, minlength=k)
+    live = np.flatnonzero(counts)
+    starts = (np.cumsum(counts) - counts)[live]
+    sums = np.zeros((k, q.shape[1]), np.int64)
+    by_block = row[np.argsort(block, kind="stable")]
+    sums[live] = np.add.reduceat(q[by_block], starts)
+    sqdist = (int((d2 >> 32).sum()) << 32) + int((d2 & 0xFFFFFFFF).sum())
+    return sums, counts, sqdist
+
+
+def _lloyd(cents, iterations, step):
+    """The Lloyd loop of both fits, from the int64 seed matrix
+    ``cents``: per iteration, ``step(index)`` gives
+    :func:`_lloyd_step`'s ``(sums, counts, sqdist)`` of the whole fit
+    input against :func:`_assign_index` of the current centroids,
+    then the exact update — a centroid with members moves to their
+    floor mean ``Σq // n``, an emptied one keeps its coordinates.
+    Returns (centroids, Σd² history)."""
+    history = []
     for _ in range(iterations):
-        # m=1 keeps exactly one (row, block) per row, in row order
-        _row, block, d2min = _assign_rows(q, _assign_index(cents), 1, None)
-        assign = block - 1
-        if track_inertia:
-            history.append(sum(int(v) for v in d2min))
-        new = cents.copy()
-        for j in range(k):
-            members = q[assign == j]
-            if len(members):
-                # Python-int floor div == the distributed path's
-                # ``s // n`` update (sums bounded: |q| ≤ ~1e7 × the
-                # ≤ DRIVER_FIT_MAX_CELLS rows collected « 2^63)
-                new[j] = members.sum(axis=0, dtype=np.int64) // len(
-                    members
-                )
-        cents = new
-    return [[int(c) for c in row] for row in cents], history
+        sums, counts, sqdist = step(_assign_index(cents))
+        history.append(sqdist)
+        live = counts > 0
+        cents = cents.copy()
+        cents[live] = sums[live] // counts[live, None]
+    return cents.tolist(), history
+
+
+def _kmeans_lloyd_np(ids, q, k, iterations):
+    """The driver fit over a collected input: ``ids`` and their int64
+    rows ``q``, in any order, seeded with the k lowest-id rows in id
+    order (see :data:`DRIVER_FIT_MAX_CELLS`). Returns (centroids, Σd²
+    history); an empty input has neither."""
+    import numpy as np
+
+    if not len(q):
+        return [], []
+    seeds = q[np.argsort(ids, kind="stable")[:k]]
+    return _lloyd(seeds, iterations, functools.partial(_lloyd_step, q))
 
 
 def _driver_fit_rows(
@@ -679,19 +668,17 @@ def _driver_fit_rows(
     k: int,
     n_hint: int | None = None,
     dim_hint: int | None = None,
-) -> list | None:
+):
     """Bounded driver-fit probe (see :data:`DRIVER_FIT_MAX_CELLS`):
     collect the fit input iff it provably fits the driver cell
     budget. One ``head()`` job for the dimension plus at most one
-    ≤32 MiB collect — the row cap is ``DRIVER_FIT_MAX_CELLS // dim``
-    with NO ``max(k, …)`` escape hatch (ADVICE r13: the old cap let
-    a k=110k/dim=768 fit collect ~0.7 GB to the driver only to fall
-    back anyway); when ``k·dim`` alone exceeds the budget the driver
-    loop could not hold the centroid matrix either, so the probe
-    skips without collecting. ``n_hint`` (ADVICE r13) is the
-    caller's known row count for ``base``: when it proves the input
-    over the cap the collect is skipped outright — large fits pay
-    zero probe jobs beyond the head.
+    ≤32 MiB Arrow collect — the row cap is ``DRIVER_FIT_MAX_CELLS //
+    dim`` whatever k; when ``k·dim`` alone exceeds the budget the
+    driver loop could not hold the centroid matrix either, so the
+    probe skips without collecting. ``n_hint`` is the caller's known
+    row count for ``base``: when it proves the input over the cap the
+    collect is skipped outright — large fits pay zero probe jobs
+    beyond the head.
 
     ``dim_hint`` (round 14) is the caller's known vector
     dimensionality — the engine's embedding tables are fixed-dim by
@@ -700,31 +687,37 @@ def _driver_fit_rows(
     dim-discovery job is skipped: the row cap is computed from the
     hint and emptiness falls out of the collect itself. Unlike
     n_hint it is checked: the collected rows' real dim re-derives
-    the cap, and rows over it are not collected for the driver.
+    the cap, and rows over it are not handed to the driver.
 
-    Returns the collected rows (possibly empty), or None when the
-    input was not collected (over the cap, or never attempted).
+    Returns ``(ids, q)`` — the collected ids and their int64 vectors
+    (rows × dim), in collect order and possibly empty — or None when
+    the input was not collected (over the cap, or never attempted).
     Called only by :func:`_fit_centroids`, which runs the
     distributed loop on None.
     """
+    import numpy as np
+
     if dim_hint is not None:
         dim = max(1, dim_hint)
     else:
         head = base.select("qv").head(1)
         if not head:
-            return []
+            return np.empty(0, np.int64), np.empty((0, 0), np.int64)
         dim = max(1, len(head[0].qv))
     max_rows = DRIVER_FIT_MAX_CELLS // dim
     if k * dim > DRIVER_FIT_MAX_CELLS or (
         n_hint is not None and n_hint > max_rows
     ):
         return None
-    rows = base.limit(max_rows + 1).collect()
+    tbl = base.limit(max_rows + 1).toArrow()
+    if not tbl.num_rows:
+        return np.empty(0, np.int64), np.empty((0, dim), np.int64)
+    q = _decode_qv(tbl.column("qv").combine_chunks())
     # Also the cap of the rows' real dim, so a too-small dim_hint
     # cannot hand the driver fit more cells than the budget.
-    if rows and len(rows) > DRIVER_FIT_MAX_CELLS // max(dim, len(rows[0].qv)):
+    if len(q) > DRIVER_FIT_MAX_CELLS // max(dim, q.shape[1]):
         return None
-    return rows
+    return tbl.column("id").to_numpy(), q
 
 
 def kmeans_fit(
@@ -733,7 +726,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 10,
     iterations: int = 5,
-    track_inertia: bool = False,
     n_hint: int | None = None,
     dim_hint: int | None = None,
 ) -> tuple[DataFrame, list[list[int]], list[int]]:
@@ -744,29 +736,29 @@ def kmeans_fit(
     is not: parallel double sums drift with partition order, and a
     point near a Voronoi boundary can flip clusters run-to-run).
 
-    Per iteration: one map-stage assignment (:func:`kmeans_assign`,
-    no shuffle; from ``TWOLEVEL_ASSIGN_MIN_K`` on its kernel routes
-    through the n_s·√k two-level index, which under k_for's k ∝ n is
-    what keeps the fit's per-iteration work sub-n·k), then one
-    vocabulary-bounded aggregation — posexplode to (cluster, pos,
-    val) and sum/count — whose exchange carries at most k·dim
-    groups after map-side partial aggregation. The driver holds
-    ONLY the k·dim centroid matrix (the same scalar-bounded loop
-    contract as connected_components): rows never collect. New
-    centroid coordinate = floor mean ``Σq DIV n`` (exact int64 to
-    ~10¹¹ members per cluster at q7 scale); a cluster that loses
-    all members keeps its previous centroid. Init = the k
-    lowest-id vectors (deterministic, no RNG). An input that fits
-    :data:`DRIVER_FIT_MAX_CELLS` runs the same loop on the driver
-    with the same assign kernel, so both land on the same centroids
-    at every k. An input of fewer than k rows is its own fit: every
-    row is a centroid (Lloyd's fixed point, inertia 0).
+    Each iteration is one :func:`_lloyd_step` — the assign kernel
+    (:func:`_assign_rows` at m=1; from ``TWOLEVEL_ASSIGN_MIN_K`` on it
+    routes through the n_s·√k two-level index, which under k_for's
+    k ∝ n is what keeps the fit's per-iteration work sub-n·k) plus
+    per-centroid coordinate sums, member counts and Σd² — then
+    :func:`_lloyd`'s update: new centroid coordinate = floor mean
+    ``Σq // n`` (exact int64 to ~10¹¹ members per cluster at q7
+    scale); a cluster that loses all members keeps its previous
+    centroid. Init = the k lowest-id vectors (deterministic, no
+    RNG). An input that fits :data:`DRIVER_FIT_MAX_CELLS` runs the
+    loop on the driver over one Arrow collect; a larger one runs the
+    step per partition in a ``mapInArrow`` and adds the partials per
+    cluster Spark-side, so the driver receives at most k rows of sums
+    per iteration and holds ONLY the k·dim centroid matrix (the same
+    scalar-bounded loop contract as connected_components). Both
+    loops land on the same centroids at every k. An input of fewer
+    than k rows is its own fit: every row is a centroid (Lloyd's
+    fixed point, inertia 0).
 
     Returns (final assignment DataFrame, final centroids, inertia
-    history — empty unless ``track_inertia``, which adds one extra
-    job per iteration and exists for the monotone-objective
-    property test; the production path leaves it off). An empty
-    input returns an empty assignment and no centroids.
+    history): each iteration's exact Σd² against the centroids it
+    started from, which the step yields at no extra job. An empty
+    input returns an empty assignment, no centroids and no history.
 
     ``n_hint`` (round 14, ADVICE r13): the caller's known row count
     for ``df`` — when it proves the input over the driver-fit row
@@ -787,7 +779,6 @@ def kmeans_fit(
         base,
         k=k,
         iterations=iterations,
-        track_inertia=track_inertia,
         n_hint=n_hint,
         dim_hint=dim_hint,
     )
@@ -807,82 +798,121 @@ def _fit_centroids(
     base: DataFrame,
     k: int = 10,
     iterations: int = 5,
-    track_inertia: bool = False,
     n_hint: int | None = None,
     dim_hint: int | None = None,
 ) -> tuple[list[list[int]], list[int]]:
     """The fit of :func:`kmeans_fit` over a quantized ``(id, qv)``
     frame (:func:`_quant_base`), for callers that need only the
     centroids (``semdedup_pairs`` blocks on its own full-corpus
-    frame). Returns (centroids, inertia history); fewer than k
+    frame). Returns (centroids, Σd² history); fewer than k
     centroids means the input holds fewer than k rows.
 
     The fit runs on the driver when :func:`_driver_fit_rows` collects
     the input, else as the distributed loop. The driver fit reads
-    ``base`` once, through the probe's collect. The distributed loop
-    reads it iterations + 1 times (the seed collect, then one assign
-    + one stats aggregation per iteration), and each read otherwise
+    ``base`` once, through the probe's Arrow collect. The distributed
+    loop reads it iterations + 1 times — the seed collect, then per
+    iteration the ``mapInArrow`` of :func:`_lloyd_partials`, merged
+    per cluster by :func:`_lloyd_merge` — and each read otherwise
     re-runs the scan + sample filter + quantization, so it persists
     ``base`` (through ``track_persist``) unless an equal plan is
-    cached already. ``base.is_cached`` then tells the caller whether
-    this fit persisted it: a caller that keeps only the centroids
-    releases exactly that persist, since unpersisting by plan would
-    also drop an equal-plan cache someone else holds."""
+    cached already.
+    ``base.is_cached`` then tells the caller whether this fit
+    persisted it: a caller that keeps only the centroids releases
+    exactly that persist, since unpersisting by plan would also drop
+    an equal-plan cache someone else holds."""
+    import numpy as np
     from pyspark import StorageLevel
 
     from database_join_spark.session import track_persist
 
-    rows = _driver_fit_rows(base, k, n_hint=n_hint, dim_hint=dim_hint)
-    if rows is not None:
-        if not rows:  # an empty input: no seed, nothing to fit
-            return [], []
-        return _kmeans_lloyd_np(rows, k, iterations, track_inertia)
+    fit = _driver_fit_rows(base, k, n_hint=n_hint, dim_hint=dim_hint)
+    if fit is not None:
+        return _kmeans_lloyd_np(*fit, k, iterations)
     if base.storageLevel == StorageLevel.NONE:
         track_persist(base)
-    seed_rows = base.orderBy("id").limit(k).collect()
-    cents = [list(r.qv) for r in sorted(seed_rows, key=lambda r: r.id)]
+    seeds = base.orderBy("id").limit(k).toArrow()
+    if not seeds.num_rows:  # an empty input: no seed, nothing to fit
+        return [], []
+    by_id = np.argsort(seeds.column("id").to_numpy(), kind="stable")
+    cents = _decode_qv(seeds.column("qv").combine_chunks())[by_id]
     if len(cents) < k:
         # Fewer rows than k: every row is its own seed and its own
         # nearest centroid at distance 0 — Lloyd's fixed point, so
-        # the loop would only repeat it (and an empty input has
-        # nothing to fit).
-        inertia = [0] * iterations if track_inertia and cents else []
-        return cents, inertia
-    history: list[int] = []
-    for _ in range(iterations):
-        assigned = kmeans_assign(base, cents)
-        if track_inertia:
-            history.append(
-                int(
-                    assigned.agg(
-                        F.sum(F.col("sqdist").cast("decimal(38,0)"))
-                    ).collect()[0][0]
-                )
+        # the loop would only repeat it.
+        return cents.tolist(), [0] * iterations
+    sc = base.sparkSession.sparkContext
+
+    def step(index):
+        tbl = (
+            base.select("qv")
+            .mapInArrow(
+                _lloyd_partials(sc.broadcast(index)), schema=_LLOYD_SCHEMA
             )
-        stats = (
-            assigned.select(
-                "cluster", F.posexplode("qv").alias("pos", "val")
-            )
-            .groupBy("cluster", "pos")
-            .agg(
-                F.sum("val").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
+            .groupBy("cluster")
+            .applyInArrow(_lloyd_merge, schema=_LLOYD_SCHEMA)
+            .toArrow()
         )
-        by_cluster: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            by_cluster.setdefault(r.cluster, {})[r.pos] = (r.s, r.n)
-        cents = [
-            [
-                coords[p][0] // coords[p][1]
-                for p in sorted(coords)
-            ]
-            if (coords := by_cluster.get(j + 1))
-            else cents[j]
-            for j in range(k)
-        ]
-    return cents, history
+        sums, counts = np.zeros_like(cents), np.zeros(k, np.int64)
+        j = tbl.column("cluster").to_numpy() - 1
+        sums[j] = _decode_qv(tbl.column("s").combine_chunks())
+        counts[j] = tbl.column("n").to_numpy()
+        hi, lo = (sum(tbl.column(c).to_pylist()) for c in ("hi", "lo"))
+        return sums, counts, (hi << 32) + lo
+
+    return _lloyd(cents, iterations, step)
+
+
+def _lloyd_partials(bc):
+    """The distributed loop's ``mapInArrow`` function: the
+    :func:`_lloyd_step` of each partition's ``qv`` batches against the
+    broadcast index ``bc``, added up and emitted as one row per
+    centroid with members. The partition's Σd² rides on its first
+    row, as 32-bit halves that int64 sums keep exact."""
+
+    def run(batches):
+        import numpy as np
+
+        acc = None
+        for batch in batches:
+            if batch.num_rows:
+                part = _lloyd_step(_decode_qv(batch.column("qv")), bc.value)
+                if acc is not None:
+                    part = [x + y for x, y in zip(acc, part)]
+                acc = part
+        if acc is not None:
+            sums, counts, sqdist = acc
+            live = np.flatnonzero(counts)
+            hi, lo = np.zeros((2, len(live)), np.int64)
+            hi[0], lo[0] = divmod(sqdist, 1 << 32)
+            yield _lloyd_batch(live + 1, counts[live], sums[live], hi, lo)
+
+    return run
+
+
+def _lloyd_merge(table):
+    """``applyInArrow`` merge of one cluster's :func:`_lloyd_partials`
+    rows into one row: their column sums."""
+    import pyarrow as pa
+
+    cluster, n, hi, lo = (
+        table.column(c).to_numpy() for c in ("cluster", "n", "hi", "lo")
+    )
+    s = _decode_qv(table.column("s").combine_chunks())
+    one = [x.sum(axis=0, keepdims=True) for x in (n, s, hi, lo)]
+    return pa.Table.from_batches([_lloyd_batch(cluster[:1], *one)])
+
+
+def _lloyd_batch(cluster, n, sums, hi, lo):
+    """An Arrow batch of :data:`_LLOYD_COLS` rows (int64 arrays); the
+    ``s`` lists view ``sums`` through offsets, without a copy."""
+    import numpy as np
+    import pyarrow as pa
+
+    rows, dim = sums.shape
+    offsets = np.arange(0, (rows + 1) * dim, dim, dtype=np.int32)
+    s = pa.ListArray.from_arrays(offsets, sums.ravel())
+    cols = [pa.array(cluster), pa.array(n), s, pa.array(hi), pa.array(lo)]
+    return pa.RecordBatch.from_arrays(cols, names=list(_LLOYD_COLS))
 
 
 def _snap_ratio(ratio: float) -> tuple[int, int]:
@@ -1337,7 +1367,7 @@ def semdedup_pairs(
             F.greatest("ch", "other").alias("cb"),
         )
     )
-    scored = chunked.groupBy("block", "ca", "cb").applyInPandas(
+    scored = chunked.groupBy("block", "ca", "cb").applyInArrow(
         _block_scorer(threshold), schema=_PAIR_SCHEMA
     )
     return _pairs_above(scored, threshold)
@@ -1371,8 +1401,8 @@ def _semdedup_one_task(
     as one ``mapInArrow`` task over ``base.coalesce(1)``: the top-m
     assign kernel (:func:`_assign_rows`, the same blocks as
     :func:`kmeans_assign_topm`), then every block's upper triangle
-    through the :func:`_block_scorer` core. The centroid index rides
-    in the closure. Emits the scorer's (id_a, id_b, dot, n2_a, n2_b)
+    through :func:`_pair_scorer`, the census scorer's core. The
+    centroid index rides in the closure. Emits :func:`_pair_batch`
     rows; the coalesced single partition also satisfies the
     ``distinct`` that follows, so the whole action is one job of one
     task."""
@@ -1399,9 +1429,7 @@ def _semdedup_one_task(
             qm = q[members]
             cols = pairs(ids[members], qm, ids[members], qm, True)
             if cols is not None:
-                yield pa.RecordBatch.from_arrays(
-                    cols, names=list(_PAIR_COLS)
-                )
+                yield _pair_batch(cols)
 
     return base.coalesce(1).mapInArrow(run, schema=_PAIR_SCHEMA)
 
@@ -1437,13 +1465,28 @@ _PAIR_COLS = ("id_a", "id_b", "dot", "n2_a", "n2_b")
 _PAIR_SCHEMA = ", ".join(f"{c} long" for c in _PAIR_COLS)
 
 
+def _pair_batch(cols):
+    """The Arrow batch of :data:`_PAIR_COLS` scorer rows for
+    :func:`_pair_scorer`'s columns (None: no rows)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if cols is None:
+        cols = [np.empty(0, np.int64)] * len(_PAIR_COLS)
+    return pa.RecordBatch.from_arrays(cols, names=list(_PAIR_COLS))
+
+
 def _block_scorer(threshold: float):
     """Per-chunk-pair pairwise scorer for :func:`semdedup_pairs` — a
     tiled numpy GEMM over quantized vectors, run behind
-    ``applyInPandas`` (Arrow-batched; one task per (block, ca, cb)
-    chunk pair — ca == cb scores the within-chunk upper triangle,
-    ca < cb the full cross rectangle, so every block pair is emitted
-    exactly once before the cross-probe distinct()).
+    ``groupBy("block", "ca", "cb").applyInArrow``: it takes the
+    group key and its ``(id, qv, ch)`` Arrow table, decodes ``qv``
+    with :func:`_decode_qv` (the one decode of every SemDeDup
+    crossing), and returns the scorer rows as an Arrow table. One
+    task per (block, ca, cb) chunk pair — ca == cb scores the
+    within-chunk upper triangle, ca < cb the full cross rectangle, so
+    every block pair is emitted exactly once before the cross-probe
+    distinct().
 
     Why Python here when the engine's rule is JVM-first: SemDeDup's
     within-block scoring IS a dense matrix product (the paper's own
@@ -1470,35 +1513,18 @@ def _block_scorer(threshold: float):
     threshold decision still happens Spark-side — so the
     rounding/tiebreak contract pinned by tests is unchanged.
     """
-    import numpy as np
-
     pairs = _pair_scorer(threshold)
 
-    def _prep(pdf, mask):
-        ids = pdf["id"].to_numpy()[mask]
-        q = (
-            np.stack(pdf["qv"].to_numpy()[mask])
-            .astype(np.int64, copy=False)
-            if mask.any()
-            else np.empty((0, 1), np.int64)
-        )
-        order = np.argsort(ids, kind="stable")
-        return ids[order], q[order]
+    def score(key, table):
+        import pyarrow as pa
 
-    def score(key, pdf):
-        import pandas as pd
-
-        ca, cb = int(key[1]), int(key[2])
-        ch = pdf["ch"].to_numpy()
-        ids_a, qa = _prep(pdf, ch == ca)
-        if ca == cb:
-            cols = pairs(ids_a, qa, ids_a, qa, True)
-        else:
-            ids_b, qb = _prep(pdf, ch == cb)
-            cols = pairs(ids_a, qa, ids_b, qb, False)
-        if cols is None:
-            cols = [np.empty(0, np.int64)] * len(_PAIR_COLS)
-        return pd.DataFrame(dict(zip(_PAIR_COLS, cols)))
+        ca, cb = key[1].as_py(), key[2].as_py()
+        ch = table.column("ch").to_numpy()
+        ids = table.column("id").to_numpy()
+        q = _decode_qv(table.column("qv").combine_chunks())
+        a, b = ch == ca, ch == cb
+        cols = pairs(ids[a], q[a], ids[b], q[b], ca == cb)
+        return pa.Table.from_batches([_pair_batch(cols)])
 
     return score
 
@@ -1553,8 +1579,7 @@ def _pair_scorer(threshold: float):
             dots = np.einsum("ij,ij->i", qa[ii], qb[jj])
             a_id, b_id = ids_a[ii], ids_b[jj]
             a_n2, b_n2 = n2a[ii], n2b[jj]
-            # normalize so id_a < id_b (cross-chunk pairs arrive in
-            # arbitrary id order; triangle pairs are ordered already)
+            # normalize so id_a < id_b (rows arrive in any id order)
             swap = a_id > b_id
             out.append(
                 (

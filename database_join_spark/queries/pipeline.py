@@ -42,7 +42,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _size_exchanges(
     spark: SparkSession,
     sf_dir: str,
-    rows_per_doc: float | None = None,
     rows_per_task: int | None = None,
     path=None,
 ) -> None:
@@ -72,12 +71,9 @@ def _size_exchanges(
     )
 
     table_dir = f"{sf_dir.rstrip('/')}/documents.parquet"
-    if rows_per_doc is None:
-        if not Path(table_dir).exists():
-            return
-        rows_per_doc, _ = mean_tokens_per_doc_cached(
-            spark, table_dir, path=path
-        )
+    if not Path(table_dir).exists():
+        return
+    rows_per_doc, _ = mean_tokens_per_doc_cached(spark, table_dir, path=path)
     sized_shuffle_for_table(
         spark,
         table_dir,
@@ -2616,68 +2612,6 @@ def dedup_substring_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_spans_frame(_docs(spark, sf_dir), hash_keys=True)
 
 
-def substring_window_keys(
-    toks_df: DataFrame, hash_keys: bool = False
-) -> DataFrame:
-    """Per-document window-key ARRAY ``(doc_id, wkeys)`` where
-    ``wkeys[i]`` is the k-token window key starting at token ``i`` —
-    the materialization point of the ExactSubstr span pass (round
-    11). The span plan consumes the window stream TWICE (duplicate
-    groupBy + hit probe; the probe side is a broadcast semi-join, so
-    no exchange reuse saves it), and key production — k ``element_at``
-    lookups plus a hash or concat per position — dominates the stage.
-    A caller that persists THIS frame pays production once and
-    re-explodes a compact array (8-byte hashes under ``hash_keys``:
-    ~⅛ the cache mass of the token strings) on each pass; see
-    SUBSTR_WINCACHE_PROBE.json for the measured arms."""
-    key = (
-        D.ngram_hashes_from_tokens("toks", _SUBSTR_K)
-        if hash_keys
-        else D.ngrams_from_tokens("toks", _SUBSTR_K)
-    )
-    return toks_df.select("doc_id", key.alias("wkeys"))
-
-
-def substring_spans_from_window_keys(keys_df: DataFrame) -> DataFrame:
-    """Merged duplicate spans over a ``(doc_id, wkeys)`` frame from
-    :func:`substring_window_keys`. Same plan as
-    :func:`substring_spans_from_tokens` from the window explode on;
-    splitting here lets a composed pipeline persist the key arrays
-    and pay window-key production once across the two consumers.
-
-    ``keys_df`` MUST be persisted (and materialized) by the caller:
-    over a lazy projection this select-then-explode spelling is
-    exactly the two-step shape the round-10 inlining trap punishes
-    (``InferFiltersFromGenerate`` would inline the key-production
-    expression into an inferred ``size(wkeys) > 0`` filter — see
-    :func:`operators.dedup.shingles_from_tokens`); the cache
-    boundary is what blocks that inference. The lazy path stays
-    :func:`substring_spans_from_tokens`, which explodes the key
-    expression in one step and infers no filter."""
-    # The persisted-caller contract above is the function's whole
-    # reason to exist; a lazy frame keeps results correct but
-    # silently re-derives keys per consumer (ADVICE r11) — make
-    # misuse visible instead of slow.
-    lvl = keys_df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        import warnings
-
-        warnings.warn(
-            "substring_spans_from_window_keys: keys_df is not "
-            "persisted — window-key production will re-run per "
-            "consumer (the round-10 inlining trap this split "
-            "exists to block). persist() and materialize it, or "
-            "use substring_spans_from_tokens.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    wins = keys_df.select(
-        "doc_id",
-        F.posexplode("wkeys").alias("pos", "win"),
-    )
-    return _spans_from_windows(wins)
-
-
 def substring_spans_from_tokens(
     toks_df: DataFrame, hash_keys: bool = False
 ) -> DataFrame:
@@ -2692,9 +2626,9 @@ def substring_spans_from_tokens(
 
     Window-key production runs twice here (both span-plan consumers
     re-derive it from ``toks``; the explode is spelled ONE-step so no
-    filter is inferred — the round-10 trap); to pay production once,
-    persist :func:`substring_window_keys` and call
-    :func:`substring_spans_from_window_keys`."""
+    filter is inferred — the round-10 trap). Persisting the key
+    arrays to pay it once was measured in SUBSTR_WINCACHE_PROBE.json
+    and is not shipped."""
     key = (
         D.ngram_hashes_from_tokens("toks", _SUBSTR_K)
         if hash_keys
@@ -2704,13 +2638,6 @@ def substring_spans_from_tokens(
         "doc_id",
         F.posexplode(key).alias("pos", "win"),
     )
-    return _spans_from_windows(wins)
-
-
-def _spans_from_windows(wins: DataFrame) -> DataFrame:
-    """Gaps-and-islands span merge over an exploded
-    ``(doc_id, pos, win)`` window stream — shared core of the
-    from-tokens and from-window-keys entry points."""
     dup = (
         wins.groupBy("win")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
@@ -2860,15 +2787,11 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_excise_frame(docs)
 
 
-def substring_excise_frame(
-    docs: DataFrame, hash_keys: bool = False
-) -> DataFrame:
+def substring_excise_frame(docs: DataFrame) -> DataFrame:
     """Core excision over a ``(doc_id, text)`` frame (shared with the
-    planted-fixture round-trip test). ``hash_keys`` passes through
-    to :func:`substring_spans_frame` (the at-scale window-key
-    spelling; string keys remain the default)."""
+    planted-fixture round-trip test)."""
     toks = docs.select("doc_id", T.tokens("text").alias("toks"))
-    return substring_excise_from_tokens(toks, hash_keys=hash_keys).select(
+    return substring_excise_from_tokens(toks).select(
         "doc_id",
         "n_tokens",
         "n_tokens_removed",
@@ -2876,11 +2799,7 @@ def substring_excise_frame(
     )
 
 
-def substring_excise_from_tokens(
-    toks_df: DataFrame,
-    hash_keys: bool = False,
-    keys_df: DataFrame | None = None,
-) -> DataFrame:
+def substring_excise_from_tokens(toks_df: DataFrame) -> DataFrame:
     """Excision over a pre-tokenized ``(doc_id, toks)`` frame — the
     tokenize-once spelling (round 11, VERDICT r10 #1). Returns
     ``(doc_id, n_tokens, n_tokens_removed, toks_clean)`` with the
@@ -2888,18 +2807,9 @@ def substring_excise_from_tokens(
     re-tokenize downstream: excision touches only the docs with
     spans (the left join's null branch passes ``toks`` through
     untouched), and every later stage consumes ``toks_clean``
-    directly.
-
-    ``keys_df`` (a persisted :func:`substring_window_keys` frame over
-    the same docs) makes the span pass pay window-key production once
-    instead of twice; ``hash_keys`` is ignored when it is given."""
-    spans_src = (
-        substring_spans_from_window_keys(keys_df)
-        if keys_df is not None
-        else substring_spans_from_tokens(toks_df, hash_keys=hash_keys)
-    )
+    directly."""
     spans = (
-        spans_src
+        substring_spans_from_tokens(toks_df)
         .groupBy("doc_id")
         .agg(
             F.collect_list(F.struct("span_start", "span_end")).alias("spans")
@@ -3360,13 +3270,14 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle (the iterative fit is not SQL-expressible),
     driver records rows-only.
 
-    Scale posture: one k-means fit (per-iteration map stage +
-    k·dim-bounded update), one assign map stage (the exact kernel
+    Scale posture: one k-means fit (per iteration one Arrow map
+    stage of the shared Lloyd step + a per-cluster merge of at most
+    k rows), one assign map stage (the exact kernel
     operators/similarity._assign_rows: all k centroids in one cell
     at fixture k, the √k router index from TWOLEVEL_ASSIGN_MIN_K
     centroids on), one shuffle of (block, id, qv) to
     co-locate block members — m× the single-probe volume — then
-    within-block scoring as a tiled numpy GEMM behind applyInPandas
+    within-block scoring as a tiled numpy GEMM behind applyInArrow
     (operators/similarity._block_scorer; round 8 — the join +
     higher-order-fold spelling measured 1.4M candidate pairs/s vs
     the GEMM's 33–60M/s at the same exact-int64 semantics, see

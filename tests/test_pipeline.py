@@ -423,22 +423,12 @@ def test_substring_excision_round_trip(spark):
         assert tok not in rows[1].clean_text.split()
         assert tok not in rows[2].clean_text.split()
     # round 10: the hashed window-key spelling (at-scale shuffle
-    # saver, SUBSTR_HASHKEY_PROBE) must find the identical spans and
-    # excise identically on the same corpus
+    # saver, SUBSTR_HASHKEY_PROBE) must find the identical spans on
+    # the same corpus
     spans_h = substring_spans_frame(docs, hash_keys=True).collect()
     assert {
         (r.doc_id, r.span_start, r.span_end) for r in spans_h
     } == {(r.doc_id, r.span_start, r.span_end) for r in spans}
-    rows_h = {
-        r.doc_id: r
-        for r in substring_excise_frame(docs, hash_keys=True).collect()
-    }
-    assert {
-        (d, r.n_tokens_removed, r.clean_text)
-        for d, r in rows_h.items()
-    } == {
-        (d, r.n_tokens_removed, r.clean_text) for d, r in rows.items()
-    }
     assert rows[1].clean_text.startswith("alpha beta")
     assert rows[1].clean_text.endswith("gamma delta epsilon zeta")
     # round 11: the tokenize-once spelling (pre-tokenized input,
@@ -461,37 +451,6 @@ def test_substring_excision_round_trip(spark):
     } == {
         (d, r.n_tokens_removed, r.clean_text) for d, r in rows.items()
     }
-    # round 11: the persisted-window-keys spelling (pays key
-    # production once across the span plan's two consumers,
-    # SUBSTR_WINCACHE_PROBE) must find the identical spans and
-    # excise identically
-    from database_join_spark.queries.pipeline import (
-        substring_spans_from_window_keys,
-        substring_window_keys,
-    )
-
-    toks = docs.select("doc_id", T.tokens("text").alias("toks"))
-    wkeys = substring_window_keys(toks, hash_keys=True).persist()
-    try:
-        wkeys.count()
-        spans_k = substring_spans_from_window_keys(wkeys).collect()
-        assert {
-            (r.doc_id, r.span_start, r.span_end) for r in spans_k
-        } == {(r.doc_id, r.span_start, r.span_end) for r in spans}
-        rows_k = {
-            r.doc_id: r
-            for r in substring_excise_from_tokens(
-                toks, keys_df=wkeys
-            ).collect()
-        }
-        assert {
-            (d, r.n_tokens_removed, " ".join(r.toks_clean))
-            for d, r in rows_k.items()
-        } == {
-            (d, r.n_tokens_removed, r.clean_text) for d, r in rows.items()
-        }
-    finally:
-        wkeys.unpersist()
     re_docs = cleaned.select("doc_id", F.col("clean_text").alias("text"))
     assert substring_spans_frame(re_docs).count() == 0
 
@@ -575,7 +534,6 @@ def test_topic_kmeans_objective_is_monotone_nonincreasing(spark):
         table(spark, SF_DIR, "embeddings"),
         k=4,
         iterations=4,
-        track_inertia=True,
     )
     assert len(hist) == 4
     # Lloyd's with exact arithmetic can never increase the objective
@@ -660,9 +618,7 @@ def test_kmeans_fit_clamps_k_to_row_count(spark, monkeypatch):
     from tests.test_catalog import jobs_started
 
     emb = table(spark, SF_DIR, "embeddings").filter("vec_id < 3")
-    assigned, cents, hist = S.kmeans_fit(
-        emb, k=10, iterations=2, track_inertia=True
-    )
+    assigned, cents, hist = S.kmeans_fit(emb, k=10, iterations=2)
     assert len(cents) == 3
     assert hist == [0, 0]
     rows = assigned.collect()
@@ -673,7 +629,7 @@ def test_kmeans_fit_clamps_k_to_row_count(spark, monkeypatch):
     jobs = jobs_started(
         spark,
         lambda: out.append(
-            S.kmeans_fit(emb, k=10, iterations=2, track_inertia=True)
+            S.kmeans_fit(emb, k=10, iterations=2)
         ),
     )
     assert jobs == 2
@@ -695,13 +651,129 @@ def test_kmeans_fit_driver_bit_parity_with_distributed(spark, monkeypatch):
 
     def fits():  # (centroids, inertia history) per (k, iterations)
         return [
-            S.kmeans_fit(emb, k=k, iterations=it, track_inertia=True)[1:]
+            S.kmeans_fit(emb, k=k, iterations=it)[1:]
             for k, it in [(10, 3), (24, 2)]
         ]
 
     driver = fits()
     monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 0)  # distributed loop
     assert fits() == driver
+
+
+def test_distributed_fit_jobs_and_history(spark, monkeypatch):
+    """The distributed loop costs the probe's dim ``head``, the seed
+    collect and one query per iteration — the ``mapInArrow`` Lloyd
+    step with its per-cluster ``applyInArrow`` merge, which adaptive
+    execution runs as a shuffle-map job plus a result job — and
+    returns the Σd² history without asking and without another job:
+    the driver loop's history, non-increasing."""
+    from database_join_spark.catalog import table
+    from database_join_spark.operators import similarity as S
+    from tests.test_catalog import jobs_started
+
+    emb = table(spark, SF_DIR, "embeddings")
+    driver = S.kmeans_fit(emb, k=10, iterations=2)[1:]
+    monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", 0)  # distributed loop
+    out = []
+    jobs = jobs_started(
+        spark, lambda: out.append(S.kmeans_fit(emb, k=10, iterations=2))
+    )
+    assert jobs == 2 + 2 * 2
+    cents, hist = out[0][1:]
+    assert len(hist) == 2 and hist[0] >= hist[1] > 0
+    assert (cents, hist) == driver
+
+
+def test_lloyd_step_against_brute_force_numpy():
+    """Spark-free pin of the one Lloyd step both k-means loops run,
+    against brute-force numpy: nearest centroid by first minimum
+    (a row equidistant from two centroids goes to the lower index),
+    exact per-centroid sums and counts, the floor-mean update (a
+    negative, non-divisible sum floors), an emptied centroid keeping
+    its coordinates, and Σd² exact past 2^63 — on the driver step
+    and through the distributed loop's per-partition rows and
+    per-cluster merge. The driver loop seeds with the k lowest ids
+    whatever the row order."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pyarrow as pa
+
+    from database_join_spark.operators import similarity as S
+
+    rng = np.random.default_rng(5)
+    cents = np.array([[0, 0], [10, 0], [-7, 3], [10**6, 10**6]], np.int64)
+    q = np.vstack([[[5, 0]], rng.integers(-20, 21, (60, 2))]).astype(np.int64)
+
+    def brute(q, cents):
+        d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+        a = d.argmin(axis=1)  # first minimum: the lowest index
+        sums = np.array([q[a == j].sum(axis=0) for j in range(len(cents))])
+        counts = np.bincount(a, minlength=len(cents))
+        return a, sums, counts, sum(int(x) for x in d[np.arange(len(q)), a])
+
+    def distributed(parts, cents):
+        """_lloyd_partials per partition, then _lloyd_merge per cluster."""
+        run = S._lloyd_partials(SimpleNamespace(value=S._assign_index(cents)))
+        qvs = (pa.array(x.tolist(), pa.list_(pa.int64())) for x in parts)
+        rows = pa.Table.from_batches(
+            [b for x in qvs for b in run([pa.record_batch([x], ["qv"])])]
+        )
+        cl = rows.column("cluster").to_numpy()
+        merged = pa.concat_tables(
+            S._lloyd_merge(rows.filter(pa.array(cl == c)))
+            for c in np.unique(cl)
+        )
+        sums = np.zeros_like(cents)
+        counts = np.zeros(len(cents), np.int64)
+        j = merged.column("cluster").to_numpy() - 1
+        sums[j] = S._decode_qv(merged.column("s").combine_chunks())
+        counts[j] = merged.column("n").to_numpy()
+        sq = (sum(merged.column("hi").to_pylist()) << 32) + sum(
+            merged.column("lo").to_pylist()
+        )
+        return sums, counts, sq
+
+    a, sums, counts, sq = brute(q, cents)
+    assert a[0] == 0  # (5, 0) ties centroids 0 and 1
+    assert counts[3] == 0  # the far centroid is emptied
+    step = S._lloyd_step(q, S._assign_index(cents))
+    assert (step[0] == sums).all() and (step[1] == counts).all()
+    assert step[2] == sq
+    split = distributed([q[:17], q[17:40], q[40:]], cents)
+    assert (split[0] == sums).all() and (split[1] == counts).all()
+    assert split[2] == sq
+    new = np.array(S._lloyd(cents, 1, lambda index: step)[0])
+    floored = False
+    for j in range(len(cents)):
+        if counts[j]:
+            for x in range(2):
+                s, n = int(sums[j, x]), int(counts[j])
+                assert new[j, x] == s // n  # Python floor division
+                floored |= s < 0 and s % n != 0
+        else:
+            assert (new[j] == cents[j]).all()
+    assert floored  # the fixture exercises a negative floor
+
+    # Σd² past 2^63: four d² of 2^62 against one centroid at 0
+    big = np.array([[0], [1 << 31], [-(1 << 31)], [1 << 31], [1 << 31]])
+    one = np.zeros((1, 1), np.int64)
+    assert S._lloyd_step(big, S._assign_index(one))[2] == 1 << 64
+    assert distributed([big[:2], big[2:]], one)[2] == 1 << 64
+
+    # the driver loop: k lowest-id seeds, then step + update
+    ids = rng.permutation(len(q)) * 3 + 100
+    got, hist = S._kmeans_lloyd_np(ids, q, 4, 3)
+    c = q[np.argsort(ids)[:4]]
+    want = []
+    for _ in range(3):
+        _, sums, counts, sq = brute(q, c)
+        want.append(sq)
+        live = counts > 0
+        c = c.copy()
+        c[live] = sums[live] // counts[live, None]
+    assert (got, hist) == (c.tolist(), want)
+    assert S._kmeans_lloyd_np(ids[:0], q[:0], 4, 3) == ([], [])
 
 
 def test_driver_fit_probe_contract(spark):
@@ -712,8 +784,9 @@ def test_driver_fit_probe_contract(spark):
       ~0.7 GB at k=110k/dim=768 — only to fall back anyway);
     - an ``n_hint`` proving the input over the row cap skips the
       collect outright (large fits pay one head() job);
-    - a small input collects, an over-cap input is not collected
-      (None), an empty input gives an empty list;
+    - a small input collects as ``(ids, q)`` arrays, an over-cap
+      input is not collected (None), an empty input gives empty
+      arrays;
     - an honest n_hint leaves kmeans_fit's centroids bit-identical.
     """
     from pyspark.sql import functions as F
@@ -735,11 +808,15 @@ def test_driver_fit_probe_contract(spark):
         is None
     )
     # small input: collected (the fixture is 500 rows at dim 64)
-    rows = S._driver_fit_rows(base, 10)
-    assert isinstance(rows, list) and len(rows) == 500
+    ids, q = S._driver_fit_rows(base, 10)
+    assert ids.shape == (500,) and q.shape == (500, 64)
+    by_id = {
+        r["id"]: list(r["qv"]) for r in base.collect()
+    }
+    assert {int(i): list(v) for i, v in zip(ids, q.tolist())} == by_id
     # honest hint == no hint
-    rows_h = S._driver_fit_rows(base, 10, n_hint=500)
-    assert isinstance(rows_h, list) and len(rows_h) == 500
+    ids_h, q_h = S._driver_fit_rows(base, 10, n_hint=500)
+    assert (ids_h == ids).all() and (q_h == q).all()
     # over-cap input: not collected (shrink the budget so the
     # fixture itself overflows the row cap)
     import database_join_spark.operators.similarity as sim
@@ -750,14 +827,15 @@ def test_driver_fit_probe_contract(spark):
         assert S._driver_fit_rows(base, 2) is None
     finally:
         sim.DRIVER_FIT_MAX_CELLS = old
-    # empty input: empty list from the probe
+    # empty input: empty arrays from the probe, with or without the
+    # dim head
     empty = base.filter("id < 0")
-    assert S._driver_fit_rows(empty, 10) == []
+    for dim_hint in (None, 64):
+        ids_e, q_e = S._driver_fit_rows(empty, 10, dim_hint=dim_hint)
+        assert len(ids_e) == 0 and len(q_e) == 0
     # n_hint plumbing through kmeans_fit: same centroids either way
-    _, c0, h0 = S.kmeans_fit(emb, k=10, iterations=2, track_inertia=True)
-    _, c1, h1 = S.kmeans_fit(
-        emb, k=10, iterations=2, track_inertia=True, n_hint=500
-    )
+    _, c0, h0 = S.kmeans_fit(emb, k=10, iterations=2)
+    _, c1, h1 = S.kmeans_fit(emb, k=10, iterations=2, n_hint=500)
     assert c0 == c1 and h0 == h1
     # dim_hint (round 14): skips the head(1) job, same rows/centroids;
     # the cached catalog statistic must agree with the data
@@ -765,11 +843,10 @@ def test_driver_fit_probe_contract(spark):
 
     dim = parquet_list_dim(f"{SF_DIR}/embeddings.parquet", "embedding")
     assert dim == 64
-    rows_d = S._driver_fit_rows(base, 10, dim_hint=dim)
-    assert isinstance(rows_d, list) and len(rows_d) == 500
+    ids_d, q_d = S._driver_fit_rows(base, 10, dim_hint=dim)
+    assert (ids_d == ids).all() and (q_d == q).all()
     _, c2, h2 = S.kmeans_fit(
-        emb, k=10, iterations=2, track_inertia=True,
-        n_hint=500, dim_hint=dim,
+        emb, k=10, iterations=2, n_hint=500, dim_hint=dim,
     )
     assert c0 == c2 and h0 == h2
     # k·dim_hint over budget: skipped with zero jobs
@@ -933,8 +1010,7 @@ def test_empty_embeddings_give_no_pairs_and_no_centroids(
         monkeypatch.setattr(S, "DRIVER_FIT_MAX_CELLS", budget)
         for dim_hint in (None, 64):
             assigned, cents, hist = S.kmeans_fit(
-                emb, k=4, iterations=2, track_inertia=True,
-                dim_hint=dim_hint,
+                emb, k=4, iterations=2, dim_hint=dim_hint,
             )
             assert cents == [] and hist == [], (budget, dim_hint)
             assert assigned.collect() == []
@@ -1056,7 +1132,9 @@ def test_semdedup_persist_skip_equals_persisted(spark, monkeypatch):
 
 def test_block_scorer_exact_against_int64_all_pairs():
     """Spark-free pin of the block scorer against brute-force int64
-    all-pairs: on triangle keys (ca == cb) and cross keys (ca < cb),
+    all-pairs, called as ``applyInArrow`` calls it (a key of Arrow
+    scalars and a ``pyarrow.Table``): on triangle keys (ca == cb) and
+    cross keys (ca < cb),
     with pairs planted within 1e-10 of the threshold, a zero vector,
     a one-row chunk and coordinates past float64's exact integer range
     (dim·max|q|² ≥ 2^53), every emitted pair is a pair of the key,
@@ -1066,7 +1144,7 @@ def test_block_scorer_exact_against_int64_all_pairs():
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from database_join_spark.operators.similarity import _block_scorer
 
@@ -1104,7 +1182,15 @@ def test_block_scorer_exact_against_int64_all_pairs():
     # chunk 2 holds exactly one row; the rest split over chunks 0 and 1
     ch = rng.integers(0, 2, n).astype(np.int32)
     ch[rng.integers(0, n)] = 2
-    pdf = pd.DataFrame({"id": ids, "qv": list(q), "ch": ch})
+    # rows in no particular id order, as the chunk-pair exchange
+    # delivers them
+    tbl = pa.table(
+        {
+            "id": ids,
+            "qv": pa.array(q.tolist(), pa.list_(pa.int64())),
+            "ch": ch,
+        }
+    )
 
     dots = q @ q.T  # brute force, exact: |dot| ≤ dim·scale² < 2^63
     n2 = np.diag(dots)
@@ -1137,24 +1223,27 @@ def test_block_scorer_exact_against_int64_all_pairs():
             for j in b
             if i != j and keep[i, j]
         }
-        out = score((7, ca, cb), pdf)
-        assert list(out.columns) == [
-            "id_a", "id_b", "dot", "n2_a", "n2_b"
-        ]
-        got = list(zip(out["id_a"], out["id_b"]))
+        key = tuple(
+            pa.scalar(v, t)
+            for v, t in ((7, pa.int32()), (ca, pa.int32()), (cb, pa.int32()))
+        )
+        out = score(key, tbl)
+        assert out.column_names == ["id_a", "id_b", "dot", "n2_a", "n2_b"]
+        assert all(t == pa.int64() for t in out.schema.types)
+        rows = out.to_pylist()
+        got = [(r["id_a"], r["id_b"]) for r in rows]
         assert len(got) == len(set(got)), (ca, cb)
         assert set(got) <= key_pairs, (ca, cb)
         assert truth <= set(got), (ca, cb)
-        assert zero_id not in out["id_a"].values
-        assert zero_id not in out["id_b"].values
-        for r in out.itertuples():
-            i, j = pos[r.id_a], pos[r.id_b]
-            assert r.id_a < r.id_b
-            assert (r.dot, r.n2_a, r.n2_b) == (
+        assert zero_id not in {i for pair in got for i in pair}
+        for r in rows:
+            i, j = pos[r["id_a"]], pos[r["id_b"]]
+            assert r["id_a"] < r["id_b"]
+            assert (r["dot"], r["n2_a"], r["n2_b"]) == (
                 dots[i, j], n2[i], n2[j]
             )
         if (ca, cb) == (2, 2):
-            assert out.empty
+            assert out.num_rows == 0
 
 
 def test_no_inferred_expensive_filters(spark):
